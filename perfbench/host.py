@@ -107,6 +107,14 @@ class Jvm:
                     return int(line.split()[1]) / 1024.0
         return 0.0
 
+    def heap_peak_mb(self) -> float:
+        """Sum of the heap memory pools' peak use since JVM start, in MiB."""
+        mf = self._jvm.java.lang.management.ManagementFactory
+        heap = self._jvm.java.lang.management.MemoryType.HEAP
+        pools = mf.getMemoryPoolMXBeans()
+        return sum(pools.get(i).getPeakUsage().getUsed() for i in range(pools.size())
+                   if pools.get(i).getType() == heap) / (1 << 20)
+
     def gc_s(self) -> float:
         """Cumulative GC time of every collector, in seconds."""
         beans = self._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()

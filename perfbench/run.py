@@ -5,19 +5,20 @@ Run from the repository root:
 
     python3 perfbench/run.py --workload ssb_dashboard --seed 1 --seconds 6 --trace 0
 
-Workloads (one client, one query in flight, inputs generated from --seed):
+Workloads (one client, one query in flight, inputs generated from --seed
+at TPC-H scale factor 0.01, see ``datagen``):
 
 * ``ssb_dashboard`` — the 13 SSB flight queries as parameterized templates,
   one seeded set of values per query bound through ``Engine.sql(args=...)``
   in ``hybrid`` mode with the segment cache (default 1 GiB) sized far above
-  the working set (about 0.4 MB of column segments): repeated queries over
+  the working set (about 1.4 MB of column segments): repeated queries over
   shared column sets, where the engine's resolution and cache routing show.
-* ``ingest_refresh`` — seeded batches of 5 000 lineitem rows appended with
+* ``ingest_refresh`` — seeded batches of 15 000 lineitem rows appended with
   ``snapshot_append`` to a versioned store; after every append
   ``Engine.attach_snapshot(replace=True)`` pins the new version and three
   aggregates run over it in ``hybrid`` mode. The segment cache is sized at
   half the live working set seen on the correctness cycle (dimension
-  segments plus the current version's segments, about 0.7 MB), so every
+  segments plus the current version's segments, about 1.4 MB), so every
   refresh admits and evicts. Every ``APPENDS_PER_CYCLE`` appends the store
   is compacted, then a fresh store starts, so the run stays stationary. The
   store lives under ``.perfbench_work/run-<pid>/store/cycle-<n>`` in the
@@ -32,22 +33,26 @@ TPC-H workload: a pass of the 22 TPC-H queries takes about 10 s warm and
 20 s cold on ``local[4]`` at any scale, more than a run of about a minute
 can both warm up and measure.
 
-Reported times are restated at a reference host speed: before every query
-the run times a fixed pure-Python loop (``host.cpu_probe``), and each time
-is multiplied by ``REF_PROBE_S`` over the mean probe time of its phase. The
-host this was tuned on changed its per-core speed by up to 40% within an
-hour with no CPU steal recorded; the raw figures are printed beside the
-reported ones.
+Reported times are as measured. Beside them every run records host
+attribution: CPU steal and pressure, disk counters, JVM GC time, and the
+time of a fixed pure-Python loop (``host.cpu_probe``) taken just before and
+just after the timed region, which shows a change in the host's per-core
+speed between runs. Benchmark bookkeeping inside the timed region (store
+clean-up, byte accounting, manifest reads) is taken out of the timed wall.
+The JVM runs with the engine's own session settings; no heap size is fixed,
+so ``peak_rss_mb`` follows the memory the program touches.
+
+Metric names, units and directions come from ``BENCHMARK.json``; the
+layer-to-metric map (``MOVES``) is kept here.
 
 ``--trace 0`` prints the end-to-end metrics, ``--trace 1`` runs the same
 workload with spans around every call into the engine's layers and prints
 the per-layer metrics. The last stdout line is one JSON object
 ``{"correct", "attempted", "failed", "metrics"}``; the lines before it give
-the raw and host-scaled figures, every pass time, the host attribution and,
-traced, which end-to-end metric each layer metric should move and the
-tracing overhead against the last untraced report. Reports and span dumps
-are kept under ``.perfbench_out/``. The run exits non-zero on a wrong result
-or a failed operation.
+every pass time, the host attribution and, traced, which end-to-end metric
+each layer metric should move and the tracing overhead against the last
+untraced report. Reports and span dumps are kept under ``.perfbench_out/``.
+The run exits non-zero on a wrong result or a failed operation.
 """
 
 from __future__ import annotations
@@ -61,6 +66,7 @@ import subprocess
 import sys
 import time
 from collections import defaultdict
+from contextlib import contextmanager
 
 import numpy as np
 import pyarrow as pa
@@ -80,14 +86,12 @@ OUT = os.path.join(ROOT, ".perfbench_out")
 
 CONVERGED_REL = 0.10     # warm-up converged: timed pass within 10% of warm pass
 ATTACH_REPEATS = 3       # set-up attaches per run; setup_s counts the median
-# Host speed reference: the seconds host.cpu_probe takes on the 4-vCPU VM the
-# benchmark was tuned on when that VM's host is calm. Reported times are
-# restated at this probe time (see Bench.host_scale).
-REF_PROBE_S = 0.026
+PROBES = 5               # host speed probes before and after the timed region
 
-END_TO_END = {
-    "setup_s": "s", "query_geomean_s": "s", "throughput_qps": "1/s", "peak_rss_mb": "MB",
-}
+
+def load_spec() -> dict:
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        return json.load(f)
 
 
 def process_age_s() -> float:
@@ -132,8 +136,7 @@ class Bench:
         self.timed = False
         self.timed_queries = 0
         self.qid = 0
-        # host speed probe before every query: (in timed region, seconds)
-        self.probes: list[tuple[bool, float]] = []
+        self.aside_s = 0.0   # bookkeeping time inside the timed region
         # traced counters, summed over the timed region
         self.pass_jobs: list[tuple[int, int]] = []   # (jobs, tasks) per timed pass
         self.plan_counts: dict[str, int] = defaultdict(int)
@@ -150,11 +153,6 @@ class Bench:
             "spark.sql.shuffle.partitions": str(self.cores),
             "spark.local.dir": os.path.join(self.work, "spark-local"),
             "spark.sql.warehouse.dir": os.path.join(self.work, "warehouse"),
-            # a fixed, pre-touched heap: the JVM's resident peak is then the
-            # heap plus what grows outside it, instead of however far the
-            # garbage collector happened to spread allocations over the heap
-            "spark.driver.memory": "1g",
-            "spark.driver.extraJavaOptions": "-Xms1g -XX:+AlwaysPreTouch",
         }
         with self.tracer.span("session.start"):
             self.spark = get_spark("perfbench", master=f"local[{self.cores}]",
@@ -199,6 +197,17 @@ class Bench:
         # the manager's counters are public; Engine keeps it privately
         return self.eng._segment_cache
 
+    @contextmanager
+    def aside(self):
+        """Benchmark bookkeeping: inside the timed region its time is taken
+        out of the timed wall."""
+        t = time.perf_counter()
+        try:
+            yield
+        finally:
+            if self.timed:
+                self.aside_s += time.perf_counter() - t
+
     # -- operations -------------------------------------------------------------
     def op(self, what: str, fn):
         """Run one non-query operation, counting it and its failure."""
@@ -224,7 +233,6 @@ class Bench:
         try:
             if traced_timed:
                 self._trace_before()
-            self.probes.append((self.timed, host.cpu_probe()))
             t = time.perf_counter()
             with tr.span("bench.query"):
                 with tr.span("engine.resolve"):
@@ -308,14 +316,15 @@ class Bench:
         Warm-up is the correctness pass, which pays the cold start of every
         query kind, then ``warm_passes`` pure passes. The timed region runs
         whole passes, so every kind is sampled equally, until --seconds
-        have passed. Warm-up counts as converged when the first timed pass
-        is within CONVERGED_REL of the last warm pass."""
+        have passed. With a warm pass, warm-up counts as converged when the
+        first timed pass is within CONVERGED_REL of the last warm pass."""
         for gate in (True, *([False] * warm_passes)):
             t = time.perf_counter()
             run_pass(gate)
             self.pass_times.append(("gate" if gate else "warm", time.perf_counter() - t))
         self.setup_done = process_age_s()
 
+        probe0 = [host.cpu_probe() for _ in range(PROBES)]
         devices = host.disks()
         self.h0, self.cpu0, self.gc0 = host.snapshot(devices), self.jvm.cpu_s(), self.jvm.gc_s()
         self.timed = True
@@ -328,48 +337,36 @@ class Bench:
             run_pass(False)
             self.pass_times.append(("timed", time.perf_counter() - t))
             if self.tracer.enabled:
-                self.pass_jobs.append(self._pass_jobs(group))
-        # the probes are the benchmark's own work, not the workload's
-        self.timed_wall = (time.perf_counter() - self.t_timed
-                           - sum(p for timed, p in self.probes if timed))
-        warm, first = self.pass_times[warm_passes][1], self.pass_times[warm_passes + 1][1]
-        self.warm_drift = first / warm - 1.0
+                with self.aside():
+                    self.pass_jobs.append(self._pass_jobs(group))
+        self.timed_wall = time.perf_counter() - self.t_timed - self.aside_s
+        self.warm_drift = None
+        if warm_passes:
+            warm, first = self.pass_times[warm_passes][1], self.pass_times[warm_passes + 1][1]
+            self.warm_drift = first / warm - 1.0
         self.timed = False
         self.cpu1, self.gc1 = self.jvm.cpu_s(), self.jvm.gc_s()
-        self.jvm_hwm_mb = self.jvm.hwm_mb()
+        self.jvm_hwm_mb, self.heap_peak_mb = self.jvm.hwm_mb(), self.jvm.heap_peak_mb()
         self.host = host.attribution(self.h0, host.snapshot(devices), self.timed_wall)
+        probe1 = [host.cpu_probe() for _ in range(PROBES)]
+        self.host["cpu_probe_s"] = [statistics.median(probe0), statistics.median(probe1)]
+        self.host["bookkeeping_s"] = self.aside_s
 
     # -- report -------------------------------------------------------------------
-    def host_scale(self, timed: bool) -> float:
-        """REF_PROBE_S over the mean probe time of the timed region (or of
-        set-up): multiplying a time by it restates the time on a host whose
-        probe takes REF_PROBE_S."""
-        return REF_PROBE_S / statistics.mean(p for t, p in self.probes if t == timed)
-
-    def end_to_end(self, setup_s: float) -> tuple[dict[str, float], dict[str, float]]:
-        """(reported, raw) end-to-end figures; the reported times are scaled
-        to the reference host speed, the raw ones are as measured. Beside the
-        END_TO_END metrics they hold query_tail_s, which the traced run
-        reports as a per-layer metric."""
+    def end_to_end(self, setup_s: float) -> dict[str, float]:
+        """The end-to-end figures, plus query_tail_s and peak_rss_mb, which
+        the traced run reports as per-layer metrics."""
         samples = [x for v in self.lat.values() for x in v]
         tail_s, tail_pct = tail(samples)
         self.notes.append(f"query_tail_s is the p{tail_pct:.1f} of {len(samples)} "
                           f"timed query latencies")
-        raw = {
+        return {
             "setup_s": setup_s,
             "query_geomean_s": kind_geomean(self.lat),
             "query_tail_s": tail_s,
             "throughput_qps": self.timed_queries / self.timed_wall,
             "peak_rss_mb": self.jvm_hwm_mb + host.python_max_rss_mb(),
         }
-        k_setup, k = self.host_scale(False), self.host_scale(True)
-        return {
-            "setup_s": raw["setup_s"] * k_setup,
-            "query_geomean_s": raw["query_geomean_s"] * k,
-            "query_tail_s": raw["query_tail_s"] * k,
-            "throughput_qps": raw["throughput_qps"] / k,
-            "peak_rss_mb": raw["peak_rss_mb"],
-        }, raw
 
     def layers(self, extra: dict[str, float]) -> dict[str, float]:
         tr = self.tracer
@@ -392,6 +389,7 @@ class Bench:
             "engine.tasks_per_pass": statistics.median(t for _, t in self.pass_jobs),
             "engine.core_util": (self.cpu1 - self.cpu0) / (self.timed_wall * self.cores),
             "engine.gc_s": self.gc1 - self.gc0,
+            "engine.heap_peak_mb": self.heap_peak_mb,
             "sources.scan_rows": self.plan_counts["scan_rows"] / q,
             "sources.scan_bytes": self.plan_counts["scan_bytes"] / q,
             "engine.shuffle_bytes": self.plan_counts["shuffle_bytes"] / q,
@@ -411,7 +409,7 @@ class Bench:
 
 APPENDS_PER_CYCLE = 4
 INGEST_BATCHES = 12      # distinct batches; cycles reuse them in turn
-INGEST_BATCH_ROWS = 5000
+INGEST_BATCH_ROWS = 15000  # a cycle's 4 appends hold sf0.01 of lineitem
 INGEST_CACHE_SHARE = 0.5  # cache capacity as a share of the live working set
 
 
@@ -435,7 +433,9 @@ def run_ssb(b: Bench, data_dir: str, paths: dict, tables: dict) -> list[float]:
             b.query(kind, SSB[kind], args, expect=expect,
                     compare_mode="pushdown" if gate else None)
 
-    b.run(run_pass, warm_passes=1)
+    # the correctness pass runs every kind in hybrid mode and leaves the
+    # cache holding the whole working set; there is no separate warm pass
+    b.run(run_pass, warm_passes=0)
     b.notes.append(f"segment cache: capacity {b.cache.capacity} bytes, working set "
                    f"{b.cache.used} bytes in {len(b.cache.entries)} segments")
     return attach_times
@@ -444,6 +444,11 @@ def run_ssb(b: Bench, data_dir: str, paths: dict, tables: dict) -> list[float]:
 def _dir_bytes(d: str) -> int:
     return sum(os.path.getsize(os.path.join(p, f))
                for p, _, files in os.walk(d) for f in files)
+
+
+def _manifest_files(root: str, version: int) -> list[str]:
+    with open(os.path.join(root, "_manifests", f"v{version}.json")) as f:
+        return [os.path.join(root, p) for p in json.load(f)["files"]]
 
 
 def run_ingest(b: Bench, data_dir: str, paths: dict, tables: dict) -> list[float]:
@@ -471,7 +476,8 @@ def run_ingest(b: Bench, data_dir: str, paths: dict, tables: dict) -> list[float
         ``gate`` every result is checked against DuckDB over the version's
         manifest files and against pushdown mode."""
         root = st["root"]
-        grown0 = _dir_bytes(root) if b.timed else 0
+        with b.aside():
+            grown0 = _dir_bytes(root) if b.timed else 0
         t0 = time.perf_counter()
         v = b.op("write", write)
         t_write = time.perf_counter() - t0
@@ -480,10 +486,8 @@ def run_ingest(b: Bench, data_dir: str, paths: dict, tables: dict) -> list[float
             b.op("attach_snapshot",
                  lambda: b.eng.attach_snapshot(LIVE, root, version=v, replace=True))
         t_attach = time.perf_counter() - t1
-        with open(os.path.join(root, "_manifests", f"v{v}.json")) as f:
-            files = [os.path.join(root, p) for p in json.load(f)["files"]]
         if gate:
-            duckref.register_files(con, LIVE, files)
+            duckref.register_files(con, LIVE, _manifest_files(root, v))
         for i, kind in enumerate(["fresh_totals"] + permuted(b.rng, ["brand_revenue",
                                                                      "nation_revenue"])):
             args = params[kind]
@@ -492,21 +496,22 @@ def run_ingest(b: Bench, data_dir: str, paths: dict, tables: dict) -> list[float
                     compare_mode="pushdown" if gate else None)
             if i == 0 and is_append and b.timed:
                 lags.append(time.perf_counter() - t0)
-        origin = f"{LIVE}@{root}@v{v}"
-        st["live_ws"] = max(st["live_ws"], sum(
-            e.size_bytes for (name, _), e in b.cache.entries.items()
-            if not name.startswith(f"{LIVE}@") or name == origin))
-        if b.timed:
-            counts["bytes_written"] += _dir_bytes(root) - grown0
-            counts["versions"] += 1
-            counts["files"] += len(files)
-            counts["attach_snapshot_s"] += t_attach
-            if is_append:
-                counts["appends"] += 1
-                counts["append_s"] += t_write
-            else:
-                counts["compactions"] += 1
-                counts["compact_s"] += t_write
+        with b.aside():
+            origin = f"{LIVE}@{root}@v{v}"
+            st["live_ws"] = max(st["live_ws"], sum(
+                e.size_bytes for (name, _), e in b.cache.entries.items()
+                if not name.startswith(f"{LIVE}@") or name == origin))
+            if b.timed:
+                counts["bytes_written"] += _dir_bytes(root) - grown0
+                counts["versions"] += 1
+                counts["files"] += len(_manifest_files(root, v))
+                counts["attach_snapshot_s"] += t_attach
+                if is_append:
+                    counts["appends"] += 1
+                    counts["append_s"] += t_write
+                else:
+                    counts["compactions"] += 1
+                    counts["compact_s"] += t_write
 
     def append():
         path = batch_paths[st["batch"] % INGEST_BATCHES]
@@ -525,7 +530,8 @@ def run_ingest(b: Bench, data_dir: str, paths: dict, tables: dict) -> list[float
         correctness cycle the first appended version and the compacted one
         are checked."""
         if st["root"] is not None:
-            shutil.rmtree(st["root"])
+            with b.aside():
+                shutil.rmtree(st["root"])
         st["cycle"] += 1
         st["root"] = os.path.join(b.work, "store", f"cycle-{st['cycle']}")
         for i in range(APPENDS_PER_CYCLE):
@@ -543,6 +549,9 @@ def run_ingest(b: Bench, data_dir: str, paths: dict, tables: dict) -> list[float
                            f"capacity {cap} bytes")
             b.eng.set_mode("hybrid", cache_capacity_bytes=cap)
 
+    # the correctness cycle ends by rebuilding the cache at its smaller
+    # capacity; one pure cycle brings the rebuilt cache to its steady
+    # admit/evict pattern before timing
     b.run(run_pass, warm_passes=1)
 
     def per(key, n):
@@ -563,54 +572,45 @@ def run_ingest(b: Bench, data_dir: str, paths: dict, tables: dict) -> list[float
 
 WORKLOADS = {"ssb_dashboard": run_ssb, "ingest_refresh": run_ingest}
 
-# Per-layer metrics of the traced run: name -> (better, the end-to-end
-# metric it should move, the workload where it should move it). Metrics of
-# a layer a workload does not use read 0 there.
-PER_LAYER = {
-    "session.start_s": ("lower", "setup_s", "both"),
-    "catalog.attach_s": ("lower", "setup_s", "both"),
-    "catalog.attach_snapshot_s": ("lower", "fresh_lag_s, throughput_qps", "ingest_refresh"),
-    "engine.resolve_s": ("lower", "query_geomean_s, throughput_qps",
+# Which end-to-end metric each per-layer metric of BENCHMARK.json should
+# move, and on which workload. Metrics of a layer a workload does not use
+# read 0 there.
+MOVES = {
+    "session.start_s": ("setup_s", "both"),
+    "catalog.attach_s": ("setup_s", "both"),
+    "catalog.attach_snapshot_s": ("fresh_lag_s, throughput_qps", "ingest_refresh"),
+    "engine.resolve_s": ("query_geomean_s, throughput_qps",
                          "ssb_dashboard (hybrid routing re-resolves every query)"),
-    "engine.plan_s": ("lower", "query_geomean_s", "both"),
-    "engine.collect_s": ("lower", "query_geomean_s, throughput_qps", "both"),
-    "engine.jobs_per_pass": ("lower", "query_geomean_s", "both"),
-    "engine.tasks_per_pass": ("lower", "query_geomean_s", "both"),
-    "engine.core_util": ("higher", "throughput_qps", "both"),
-    "engine.gc_s": ("lower", "query_tail_s", "both"),
-    "sources.scan_rows": ("lower", "query_geomean_s", "ingest_refresh; ~0 on ssb_dashboard"),
-    "sources.scan_bytes": ("lower", "query_geomean_s", "ingest_refresh; ~0 on ssb_dashboard"),
-    "engine.shuffle_bytes": ("lower", "query_geomean_s", "both"),
-    "engine.spill_bytes": ("lower", "query_tail_s", "both"),
-    "plans.cache.hit_ratio": ("higher", "query_geomean_s",
+    "engine.plan_s": ("query_geomean_s", "both"),
+    "engine.collect_s": ("query_geomean_s, throughput_qps", "both"),
+    "engine.jobs_per_pass": ("query_geomean_s", "both"),
+    "engine.tasks_per_pass": ("query_geomean_s", "both"),
+    "engine.core_util": ("throughput_qps", "both"),
+    "engine.gc_s": ("query_tail_s", "both"),
+    "engine.heap_peak_mb": ("peak_rss_mb", "both"),
+    "sources.scan_rows": ("query_geomean_s", "ingest_refresh; ~0 on ssb_dashboard"),
+    "sources.scan_bytes": ("query_geomean_s", "ingest_refresh; ~0 on ssb_dashboard"),
+    "engine.shuffle_bytes": ("query_geomean_s", "both"),
+    "engine.spill_bytes": ("query_tail_s", "both"),
+    "plans.cache.hit_ratio": ("query_geomean_s",
                               "ssb_dashboard; low by construction on ingest_refresh"),
-    "plans.cache.evictions": ("lower", "query_tail_s, fresh_lag_s, peak_rss_mb",
+    "plans.cache.evictions": ("query_tail_s, fresh_lag_s, peak_rss_mb",
                               "ingest_refresh; ~0 on ssb_dashboard"),
-    "plans.cache.used_bytes": ("lower", "peak_rss_mb", "both"),
-    "sources.versioned.append_s": ("lower", "fresh_lag_s, throughput_qps", "ingest_refresh"),
-    "sources.versioned.bytes_written": ("lower", "fresh_lag_s", "ingest_refresh"),
-    "sources.versioned.files_per_version": ("lower", "query_geomean_s, query_tail_s",
-                                            "ingest_refresh"),
-    "sources.versioned.compact_s": ("lower", "query_tail_s, throughput_qps", "ingest_refresh"),
-    "fresh_lag_s": ("lower", "(end to end, ingest only)", "ingest_refresh"),
-    "query_tail_s": ("lower", "(end to end; too few samples per run to repeat)", "both"),
-    "failed_share": ("lower", "(end to end, all operations)", "both"),
-    "self.bench_s": ("lower", "query_geomean_s", "both"),
-    "self.catalog_s": ("lower", "throughput_qps", "ingest_refresh"),
-    "self.engine_s": ("lower", "query_geomean_s", "both"),
-    "self.plans.metrics_s": ("lower", "(tracing cost only)", "both"),
-    "self.sources.versioned_s": ("lower", "throughput_qps", "ingest_refresh"),
+    "plans.cache.used_bytes": ("peak_rss_mb (through engine.heap_peak_mb)", "both"),
+    "sources.versioned.append_s": ("fresh_lag_s, throughput_qps", "ingest_refresh"),
+    "sources.versioned.bytes_written": ("fresh_lag_s", "ingest_refresh"),
+    "sources.versioned.files_per_version": ("query_geomean_s, query_tail_s", "ingest_refresh"),
+    "sources.versioned.compact_s": ("query_tail_s, throughput_qps", "ingest_refresh"),
+    "fresh_lag_s": ("(end to end, ingest only)", "ingest_refresh"),
+    "query_tail_s": ("(end to end; too few samples per run to repeat)", "both"),
+    "peak_rss_mb": ("(end to end; JVM heap growth makes it vary ~18% between runs)", "both"),
+    "failed_share": ("(end to end, all operations)", "both"),
+    "self.bench_s": ("query_geomean_s", "both"),
+    "self.catalog_s": ("throughput_qps", "ingest_refresh"),
+    "self.engine_s": ("query_geomean_s", "both"),
+    "self.plans.metrics_s": ("(tracing cost only)", "both"),
+    "self.sources.versioned_s": ("throughput_qps", "ingest_refresh"),
 }
-
-
-def unit_of(name: str) -> str:
-    if name.endswith("_s"):
-        return "s"
-    if name.endswith(("_bytes", "bytes_written")):
-        return "bytes"
-    if name.endswith(("hit_ratio", "core_util", "failed_share")):
-        return "ratio"
-    return "count"
 
 
 def main(argv=None) -> int:
@@ -623,6 +623,12 @@ def main(argv=None) -> int:
     if not os.path.isfile(os.path.join(ROOT, "pysparkdb", "engine.py")):
         print(f"perfbench: no pysparkdb package under {ROOT}; run from a "
               f"repository checkout", file=sys.stderr)
+        return 2
+    spec = load_spec()
+    layer_names = {m["name"] for m in spec["per_layer"]}
+    if layer_names != set(MOVES):
+        print(f"perfbench: BENCHMARK.json per_layer and MOVES differ: "
+              f"{sorted(layer_names ^ set(MOVES))}", file=sys.stderr)
         return 2
     sys.path.insert(0, ROOT)
     work = os.path.join(WORK, f"run-{os.getpid()}")
@@ -641,13 +647,12 @@ def main(argv=None) -> int:
         b.stop()
         shutil.rmtree(work, ignore_errors=True)
     setup_s = b.setup_done - (sum(attach_times) - statistics.median(attach_times))
-    e2e, raw = b.end_to_end(setup_s)
+    e2e = b.end_to_end(setup_s)
     report = {
-        "end_to_end": e2e, "end_to_end_raw": raw,
-        "cpu_probe_s": {"set-up": REF_PROBE_S / b.host_scale(False),
-                        "timed": REF_PROBE_S / b.host_scale(True)}, "pass_times": b.pass_times,
+        "end_to_end": e2e, "pass_times": b.pass_times,
         "warm_up_drift": b.warm_drift,
-        "warm_up_converged": abs(b.warm_drift) <= CONVERGED_REL, "host": b.host,
+        "warm_up_converged": (None if b.warm_drift is None
+                              else abs(b.warm_drift) <= CONVERGED_REL), "host": b.host,
         "jvm_gc_s": b.gc1 - b.gc0, "attach_s": attach_times,
         "kind_median_s": {k: statistics.median(v) for k, v in sorted(b.lat.items())},
         "queries_per_kind": {k: len(v) for k, v in sorted(b.lat.items())},
@@ -655,15 +660,16 @@ def main(argv=None) -> int:
     }
     os.makedirs(OUT, exist_ok=True)
     name = f"{a.workload}-trace{a.trace}"
-    metrics = {k: e2e[k] for k in END_TO_END}
+    listed = spec["per_layer"] if a.trace else spec["end_to_end"]
+    measured = e2e
     if a.trace:
         measured = b.layers({**getattr(b, "ingest_layers", {}),
-                             "query_tail_s": e2e["query_tail_s"]})
-        unknown = set(measured) - set(PER_LAYER)
+                             "query_tail_s": e2e["query_tail_s"],
+                             "peak_rss_mb": e2e["peak_rss_mb"]})
+        unknown = set(measured) - set(MOVES)
         if unknown:
-            raise RuntimeError(f"per-layer metrics missing from PER_LAYER: {unknown}")
-        metrics = {k: measured.get(k, 0.0) for k in PER_LAYER}
-        report["layer_moves"] = {k: f"{v[1]} on {v[2]}" for k, v in PER_LAYER.items()}
+            raise RuntimeError(f"per-layer metrics missing from BENCHMARK.json: {unknown}")
+        report["layer_moves"] = {k: f"{v[0]} on {v[1]}" for k, v in MOVES.items()}
         b.tracer.dump(os.path.join(OUT, f"{name}-spans.json"))
         try:
             with open(os.path.join(OUT, f"{a.workload}-trace0.json")) as f:
@@ -678,8 +684,8 @@ def main(argv=None) -> int:
     correct = b.failed == 0
     print(json.dumps({
         "correct": correct, "attempted": b.attempted, "failed": b.failed,
-        "metrics": {k: {"value": v, "unit": END_TO_END.get(k) or unit_of(k)}
-                    for k, v in metrics.items()},
+        "metrics": {m["name"]: {"value": measured.get(m["name"], 0.0), "unit": m["unit"]}
+                    for m in listed},
     }))
     return 0 if correct else 1
 

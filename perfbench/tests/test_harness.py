@@ -1,14 +1,8 @@
-"""The span recorder, and BENCHMARK.json against what run.py prints."""
-
-import json
-import os
+"""The span recorder."""
 
 import pytest
 
 import spans
-from run import END_TO_END, PER_LAYER, unit_of
-
-ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def test_self_time_subtracts_child_spans(monkeypatch):
@@ -38,11 +32,3 @@ def test_layer_of_keeps_dotted_module_names():
     assert spans.layer_of("plans.metrics.collect_with_metrics") == "plans.metrics"
     assert spans.layer_of("sources.versioned.append") == "sources.versioned"
 
-
-def test_benchmark_json_matches_the_printed_metrics():
-    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
-        spec = json.load(f)
-    e2e = {m["name"]: m["unit"] for m in spec["end_to_end"]}
-    assert e2e == END_TO_END
-    layers = {m["name"]: (m["unit"], m["better"]) for m in spec["per_layer"]}
-    assert layers == {k: (unit_of(k), v[0]) for k, v in PER_LAYER.items()}
