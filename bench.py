@@ -81,15 +81,18 @@ def host_counters() -> dict:
     # Disk-side attribution (VERDICT r15 task #5): the round-15 close saw
     # zero-steal, zero-PSI windows still failing the scan probe — shared-I/O
     # co-tenancy that neither CPU counter prices. Sum sectors moved and
-    # ms-doing-I/O across whole-disk devices (/sys/block lists only whole
-    # disks, so partitions are not double-counted); a reading whose
-    # disk_ms_d approaches its wall-clock spent the window waiting on the
-    # device, and a scan-speed reading with huge disk_sect_d against calm
-    # neighbors marks an I/O-phase episode.
+    # ms-doing-I/O across whole-disk devices: /sys/block lists only whole
+    # disks, so partitions are not double-counted, and device-mapper
+    # (dm-*) and md devices are skipped because they layer over those
+    # disks and would count each I/O twice. A reading whose disk_ms_d
+    # approaches its wall-clock spent the window waiting on the device,
+    # and a scan-speed reading with huge disk_sect_d against calm
+    # neighbors marks an I/O-phase episode. disk_ms_d is a sum over
+    # devices, so on a multi-disk host it can exceed the wall-clock.
     try:
         disks = {
             d for d in os.listdir("/sys/block")
-            if not d.startswith(("loop", "ram", "zram"))
+            if not d.startswith(("loop", "ram", "zram", "dm-", "md"))
         }
         sect = ms = 0
         with open("/proc/diskstats") as f:

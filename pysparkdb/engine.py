@@ -11,6 +11,7 @@ handle per table for the operator-builder API (pysparkdb.operators).
 from __future__ import annotations
 
 import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -37,6 +38,12 @@ _RESOLVE_LOCK = threading.RLock()
 # until the win is clear). Plan-stat bytes cost no Spark job to read —
 # the reference's stats.json role.
 _AUTO_BYTES_PER_CORE = 40 << 20
+
+# Routing-memo bound (see Engine._route_views_through_cache): the most
+# recently used distinct (text, args, mode) routings an Engine keeps. A
+# dashboard's panel set is tens of texts; each entry holds only plan
+# handles and references to segments the cache already owns.
+_ROUTE_MEMO_SIZE = 256
 
 # The reference's execution-mode axis (fpdb-plan/include/fpdb/plan/Mode.h:
 # 13-18, selected by resources/config/exec.conf:4 `MODE=`): PULL_UP moves
@@ -93,6 +100,20 @@ class _SnapshotAttach(NamedTuple):
     origin: str        # root@vN — stable identity for cache keys
 
 
+class _RoutedQuery(NamedTuple):
+    """One memoized cache routing of a caching/hybrid ``sql()`` call."""
+
+    plain: DataFrame   # the unrouted resolution the routing was computed from
+    # the routed re-resolution's analyzed plan (JVM LogicalPlan) — not the
+    # DataFrame the caller ran, whose executed plan would keep its
+    # broadcast relations and metrics alive for as long as the entry
+    routed_plan: object
+    # per routed view: (cache table key, columns, the _Entry serving them);
+    # an _Entry belongs to one SegmentCacheManager, so finding the same
+    # entries also proves the same manager
+    requests: tuple
+
+
 class Engine:
     def __init__(self, spark: SparkSession | None = None, data_dir: str | None = None):
         self.spark = apply_engine_confs(spark or get_spark())
@@ -123,6 +144,9 @@ class Engine:
         # concurrent sql() on the session, breaking the documented
         # thread-safety contract
         self.auto_bytes_per_core = _AUTO_BYTES_PER_CORE
+        # (query text, repr(args), mode) -> _RoutedQuery, least recently
+        # used first; read and written only under _RESOLVE_LOCK
+        self._route_memo: OrderedDict[tuple, _RoutedQuery] = OrderedDict()
         if data_dir is not None:
             self.attach(data_dir)
 
@@ -168,6 +192,7 @@ class Engine:
             old = self._segment_cache
             if old is not None:
                 old.clear()
+            self._forget_routes()
             self._segment_cache = SegmentCacheManager(
                 self.spark,
                 capacity_bytes=(
@@ -193,6 +218,14 @@ class Engine:
         if self._segment_cache is not None:
             self._segment_cache.clear()
             self._segment_cache = None
+        self._forget_routes()
+
+    def _forget_routes(self) -> None:
+        """Drop the routing memo — on every attach and cache rebuild, so
+        no memoized routing outlives the catalog or manager it was
+        computed against (the validity checks would refuse it anyway)."""
+        with _RESOLVE_LOCK:
+            self._route_memo.clear()
 
     @staticmethod
     def _strip_fs_scheme(p: str) -> str:
@@ -281,6 +314,7 @@ class Engine:
         directory's file list from first registration: pass it only for
         immutable directories (the benchmark datasets); an attach after
         rewriting ``data_dir`` must keep the default rebuild."""
+        self._forget_routes()
         if reuse:
             from pysparkdb.catalog import cached_catalog
 
@@ -336,7 +370,12 @@ class Engine:
         the scan-pushdown confs are disabled. Cache routing applies to the
         plain resolution path; when ``predicate_transfer`` is also set the
         transfer pass wins and routing is skipped (caching semi-join-
-        reduced relations would poison the segment keys).
+        reduced relations would poison the segment keys). A repeated
+        (text, args, mode) reuses its earlier routing through a bounded
+        memo, only while its plain resolution is semantically unchanged
+        and every segment it was routed to still serves it; this is not
+        a result cache — each call gets a fresh DataFrame that plans and
+        runs its own jobs (see ``_route_views_through_cache``).
 
         Thread-safe: concurrent ``sql()`` calls (either mode, any Engine
         over this session) are safe — resolution is serialized under
@@ -457,7 +496,11 @@ class Engine:
         list, not the catalog dir); here attribution is by VIEW NAME on
         the ANALYZED plan (resolved temp views keep their SubqueryAlias
         wrapper there), and the working set is the view-output attributes
-        whose exprIds any operator references (or the query returns)."""
+        whose exprIds any operator references (or the query returns).
+        With no such view live there is nothing to attribute, and the
+        plan walk (hundreds of Py4J calls) is skipped."""
+        if not names:
+            return {}
         analyzed = df._jdf.queryExecution().analyzed()
         used_ids: set[int] = set()
         out = analyzed.output()
@@ -507,8 +550,68 @@ class Engine:
         recorded byte total prorated to the working set (a mapInArrow
         plan's own stats see only the task list); a legacy attach with
         UNKNOWN bytes is served uncached rather than admitted blind —
-        an unsized admission could pin a corpus-scale segment."""
-        assert self._segment_cache is not None
+        an unsized admission could pin a corpus-scale segment.
+
+        Routing memo: a repeat of the same (text, args, mode) skips the
+        walk, the projections and the view-swap re-resolution. The caller
+        still resolves the text plainly, and the memoized routing is used
+        only when (1) that plain resolution ``sameSemantics`` the one the
+        routing was computed from — views, relations, bound literals,
+        functions and analysis-time confs unchanged — and (2) every
+        recorded cache request is still served by the identical entry of
+        the same manager. The hit then replays the requests' cache
+        accounting and returns a NEW DataFrame over the routed analyzed
+        plan, with its own QueryExecution: the memo is not a result
+        cache, every call optimizes, plans and runs its own jobs. A
+        failed check touches no counter and routes in full, which
+        re-records. Only a full routing whose every request landed in the
+        cache is recorded (never the plain-plan fallback below); the memo
+        is bounded (``_ROUTE_MEMO_SIZE``, least recently used out), held
+        under ``_RESOLVE_LOCK``, and dropped on every attach and cache
+        rebuild."""
+        cache = self._segment_cache
+        assert cache is not None
+        key = (query, repr(args), self._mode)
+        # One lock region for check, replay and full routing: a concurrent
+        # routing must not admit or evict between a memo's validation and
+        # its replay, nor between a full routing's requests and its record.
+        with _RESOLVE_LOCK:
+            memo = self._route_memo.get(key)
+            if (memo is not None
+                    and all(cache.serving(t, cols) is e
+                            for t, cols, e in memo.requests)
+                    and df.sameSemantics(memo.plain)):
+                for _, _, e in memo.requests:
+                    cache.count_hit(e)
+                self._route_memo.move_to_end(key)
+                return DataFrame(
+                    self.spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+                        self.spark._jsparkSession, memo.routed_plan),
+                    self.spark)
+            routed, requests = self._route_full(df, query, args)
+            if requests:
+                self._route_memo[key] = _RoutedQuery(
+                    df, routed._jdf.queryExecution().analyzed(), requests)
+                self._route_memo.move_to_end(key)
+                while len(self._route_memo) > _ROUTE_MEMO_SIZE:
+                    self._route_memo.popitem(last=False)
+            return routed
+
+    def _route_full(
+        self, df: DataFrame, query: str, args: dict | list | None
+    ) -> tuple[DataFrame, tuple | None]:
+        """The routing itself (see _route_views_through_cache): the routed
+        DataFrame, plus its cache requests when it may be memoized —
+        None for the plain-plan fallbacks and for a routing in which any
+        request did not land in (or was evicted from) the cache."""
+        cache = self._segment_cache
+        requests: list[tuple] = []
+
+        def project(src: DataFrame, table: str, cols: list[str], **kw):
+            out = cache.project(src, table, cols, **kw)
+            requests.append((table, cols, cache.serving(table, cols)))
+            return out
+
         needed = (self._leaf_columns_by_table(df)
                   if self.catalog is not None else {})
         data_dir = self.catalog.data_dir if self.catalog is not None else ""
@@ -518,7 +621,7 @@ class Engine:
         # caching/hybrid modes — the mode axis must never change a result,
         # including schema order.
         routed = {
-            name: self._segment_cache.project(
+            name: project(
                 self.catalog.tables[name],
                 f"{name}@{data_dir}",
                 [c for c in self.catalog.tables[name].columns if c in cols],
@@ -536,7 +639,7 @@ class Engine:
                     # unsized or empty attach: plain plan
                     continue
                 want = [c for c in att.df.columns if c in cols]
-                routed[name] = self._segment_cache.project(
+                routed[name] = project(
                     att.df, f"{name}@{att.origin}", want,
                     size_hint=max(
                         1,
@@ -552,10 +655,10 @@ class Engine:
             if not cols:
                 continue
             want = [c for c in satt.df.columns if c in cols]
-            routed[name] = self._segment_cache.project(
+            routed[name] = project(
                 satt.df, f"{name}@{satt.origin}", want)
         if not routed:
-            return df
+            return df, None
         from pyspark.errors import AnalysisException
 
         restore = {n: self.catalog.tables[n] for n in needed} if needed else {}
@@ -568,8 +671,8 @@ class Engine:
             try:
                 for name, rdf in routed.items():
                     rdf.createOrReplaceTempView(name)
-                return (self.spark.sql(query, args=args) if args
-                        else self.spark.sql(query))
+                out = (self.spark.sql(query, args=args) if args
+                       else self.spark.sql(query))
             except AnalysisException:
                 # The working set came from the OPTIMIZED plan; in rare
                 # shapes the optimizer prunes a column the raw text still
@@ -577,10 +680,16 @@ class Engine:
                 # predicate, an eliminated join), so re-resolution against
                 # the narrower views fails. Serve the plain plan — the
                 # cache is an optimization, never a correctness gate.
-                return df
+                return df, None
             finally:
                 for name, odf in restore.items():
                     odf.createOrReplaceTempView(name)
+        # an admission may have evicted an entry an earlier request of this
+        # query was served by; such a routing is served but not recorded
+        if any(e is None or cache.serving(t, cols) is not e
+               for t, cols, e in requests):
+            return out, None
+        return out, tuple(requests)
 
     def table(self, name: str) -> DataFrame:
         assert self.catalog is not None, "call attach(data_dir) first"
@@ -630,6 +739,7 @@ class Engine:
                     f"no snapshot versions committed under {root!r}")
             resolved = versions[-1]
         df = snapshot_read(self.spark, root, resolved)
+        self._forget_routes()
         df.createOrReplaceTempView(name)
         self._snapshot_tables[name] = _SnapshotAttach(
             df, f"{root}@v{resolved}")
@@ -685,6 +795,7 @@ class Engine:
 
             df = empty_frame(
                 self.spark, T.StructType.fromJson(_json.loads(schema_json)))
+        self._forget_routes()
         df.createOrReplaceTempView(name)
         self._arrow_s3_tables[name] = _RemoteAttach(
             files, conf, df, manifest.get("bytes"), f"{uri}@v{_version}")
@@ -761,6 +872,7 @@ class Engine:
                     f"resolving those names would silently repoint at the "
                     f"remote store; pass replace=True to do this "
                     f"deliberately (no view was touched)")
+        self._forget_routes()
         out: dict[str, DataFrame] = {}
         for name, files in sorted(groups.items()):
             df = _read_parquet_files(self.spark, sorted(files), conf)

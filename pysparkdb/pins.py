@@ -12,7 +12,7 @@ accumulated one MEMORY_AND_DISK entry per distinct input plan forever).
 
 This registry is the owner-side lifecycle (VERDICT r15 task #6): every
 standing library pin registers here at creation, and
-``release_persisted(spark)`` unpersists everything registered — the
+``release_persisted()`` unpersists everything registered — the
 between-pipelines hygiene call for long-lived sessions (a serving
 deployment calls it after each pipeline; short-lived jobs can ignore it
 and let the session end collect the pins).
@@ -51,7 +51,16 @@ def pin(
 def release_persisted(blocking: bool = False) -> int:
     """Unpersist every registered library pin; returns how many handles
     were released. Safe at any time — an unpersisted frame is simply
-    recomputed on next use (performance, never correctness)."""
+    recomputed on next use (performance, never correctness).
+
+    ``blocking`` must be a bool: anything else (a SparkSession passed
+    positionally, say) raises TypeError before any pin is released, rather
+    than failing inside the JVM call for every pin while the count still
+    claims them released."""
+    if not isinstance(blocking, bool):
+        raise TypeError(
+            f"release_persisted(blocking=...) takes a bool, got "
+            f"{type(blocking).__name__}")
     n = 0
     while _PINNED:
         df = _PINNED.pop()

@@ -129,19 +129,15 @@ class SegmentCacheManager:
         for plans whose stats don't see the data they move (a mapInArrow
         remote scan's stats cover only its task list).
         """
+        entry = self.serving(table, columns)
+        if entry is not None:
+            self.count_hit(entry)
+            return entry.df.select(*columns)
+
         key = (table, tuple(sorted(columns)))
         now = time.monotonic()
         self._clock += 1
-
-        entry = self.entries.get(key) or self._covering(table, key[1])
-        if entry is not None:
-            entry.hits += 1
-            entry.last_access = now
-            if not self._pinned:  # inside project_zip the outer call counted
-                self.hit_count += 1
-            return entry.df.select(*columns)
-
-        if not self._pinned:
+        if not self._pinned:  # inside project_zip the outer call counted
             self.miss_count += 1
         proj = df.select(*columns)
         size = size_hint if size_hint is not None else _plan_size_bytes(proj)
@@ -150,6 +146,25 @@ class SegmentCacheManager:
             self.entries[key] = _Entry(proj, key[1], size, hits=1, last_access=now)
             self.used += size
         return proj
+
+    def serving(self, table: str, columns: list[str]) -> _Entry | None:
+        """The entry a ``project(table, columns)`` call would hit right
+        now — the exact projection or the first cached superset — or None
+        when the call would miss. Reads no counter and moves no state."""
+        key = (table, tuple(sorted(columns)))
+        return self.entries.get(key) or self._covering(table, key[1])
+
+    def count_hit(self, entry: _Entry) -> None:
+        """The accounting of one request served by ``entry``: exactly what
+        a ``project()`` hit records (the Belady clock, the entry's
+        frequency and recency, the manager's hit counter). Callers that
+        already hold the served projection — the engine's routing memo —
+        replay their requests through this."""
+        self._clock += 1
+        entry.hits += 1
+        entry.last_access = time.monotonic()
+        if not self._pinned:  # inside project_zip the outer call counted
+            self.hit_count += 1
 
     def project_zip(
         self, df: DataFrame, table: str, columns: list[str],

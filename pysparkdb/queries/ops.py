@@ -1640,9 +1640,12 @@ def op_winsorize_approx(spark, sf_dir):
     the exact twin's two-pass shape with the first pass sketch-sized.
     Each percentile PAIR comes from one array-form aggregate (the
     op_winsorize shared-buffer rationale; for the sketch side one GK
-    summary queried at both points replaces two identical summaries —
-    GK state is deterministic in the input multiset and accuracy, so
-    the approx values are unchanged, verified value-identical)."""
+    summary queried at both points replaces two identical summaries).
+    The GK values are deterministic only for a fixed partitioning: the
+    summary merge depends on how rows fall into partitions, so
+    parallel_scan's repartition may shift the approx bounds within the
+    certified 1% band — which is why the oracle checks the certificate
+    booleans, never the approx values themselves."""
     l = parallel_scan(tables(spark, sf_dir)["lineitem"].select(
         "l_returnflag", "l_extendedprice"))
     st = l.groupBy("l_returnflag").agg(

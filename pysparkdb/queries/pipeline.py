@@ -1877,16 +1877,15 @@ def pipeline_snapshot_curation(spark, sf_dir):
     )
     from pysparkdb.streaming.windows import stream_clean_documents
 
-    from pysparkdb.scratch import scratch_root
+    from pysparkdb.scratch import workdir_root
 
     docs = tables(spark, sf_dir)["documents"]
     n_landed = docs.count()
     # whole workdir (landing + snapshot root + stream checkpoints) is
-    # ephemeral — rmtree'd in the finally — so it goes on scratch_root()
-    # (tmpfs when available): the two drains' WAL/state fsync traffic and
-    # the scratch snapshot commits are this composite's per-run floor,
-    # not its computation (guide §5/§6; VERDICT r15 task #1)
-    workdir = tempfile.mkdtemp(prefix="snapcur-", dir=scratch_root())
+    # ephemeral — rmtree'd in the finally — but corpus-sized, so it goes
+    # on workdir_root() (the platform tempdir unless PYSPARKDB_SCRATCH is
+    # set), never a RAM-backed tmpfs
+    workdir = tempfile.mkdtemp(prefix="snapcur-", dir=workdir_root())
     try:
         landing = os.path.join(workdir, "landing")
         root = os.path.join(workdir, "corpus")
@@ -2062,12 +2061,12 @@ def pipeline_incremental_refresh(spark, sf_dir):
         snapshot_rewrite,
     )
 
-    from pysparkdb.scratch import scratch_root
+    from pysparkdb.scratch import workdir_root
 
     docs = tables(spark, sf_dir)["documents"]
-    # ephemeral scratch corpus (rmtree'd below) → scratch_root(), the
+    # ephemeral scratch corpus (rmtree'd below) → workdir_root(), the
     # snapshot_curation rationale
-    workdir = tempfile.mkdtemp(prefix="increfresh-", dir=scratch_root())
+    workdir = tempfile.mkdtemp(prefix="increfresh-", dir=workdir_root())
     try:
         root = os.path.join(workdir, "corpus")
         snapshot_append(docs.filter(F.col("doc_id") % 3 != 0), root)  # v1
@@ -2182,14 +2181,14 @@ def pipeline_schema_evolution(spark, sf_dir):
         snapshot_schema,
     )
 
-    from pysparkdb.scratch import scratch_root
+    from pysparkdb.scratch import workdir_root
 
     docs = tables(spark, sf_dir)["documents"].select(
         "doc_id", "lang", "n_chars"
     )
-    # ephemeral scratch corpus (rmtree'd below) → scratch_root(), the
+    # ephemeral scratch corpus (rmtree'd below) → workdir_root(), the
     # snapshot_curation rationale
-    workdir = tempfile.mkdtemp(prefix="schemaevo-", dir=scratch_root())
+    workdir = tempfile.mkdtemp(prefix="schemaevo-", dir=workdir_root())
     try:
         root = os.path.join(workdir, "corpus")
         snapshot_append(docs.filter(F.col("doc_id") % 3 != 0), root)  # v1

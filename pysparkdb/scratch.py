@@ -1,30 +1,35 @@
 """Ephemeral scratch-directory placement for in-run temporaries.
 
-Several operators create directories that live only inside one query run
-and are deleted before (or shortly after) it returns: Structured
-Streaming checkpoint dirs for drain-and-stop (Trigger.AvailableNow)
-replays, and the snapshot-pipeline scratch corpus that
-pipeline_snapshot_curation builds and rmtree's in its finally. Their I/O
-is pure overhead — offsets/WAL/commit-log/state-snapshot files written,
-fsynced and immediately discarded — and on a disk-backed /tmp it is the
-dominant cost of every short stream run (guide §5/§6: the
-Structured-Streaming per-run floor, VERDICT r15 task #1).
+Two kinds of directory live only inside one query run and are deleted
+before (or shortly after) it returns, and they are placed differently
+because they differ in size:
 
-``scratch_root()`` picks where such directories go:
+- Structured Streaming checkpoint dirs for drain-and-stop
+  (Trigger.AvailableNow) replays — ``scratch_root()``. Their I/O is pure
+  overhead (offsets/WAL/commit-log/state-snapshot files written, fsynced
+  and immediately discarded), and on a disk-backed /tmp it is the
+  dominant cost of every short stream run (guide §5/§6: the
+  Structured-Streaming per-run floor). Their contents are offset/commit
+  logs (KBs) plus state snapshots bounded by the stream's state — orders
+  of magnitude below the corpus being processed — so a RAM-backed tmpfs
+  is the right default.
+- Snapshot-pipeline workdirs (pipeline_snapshot_curation,
+  pipeline_incremental_refresh, pipeline_schema_evolution) —
+  ``workdir_root()``. They hold a landing copy plus several corpus
+  snapshot versions and compactions: corpus-sized data, which on a host
+  where the corpus approaches RAM would fill tmpfs (ENOSPC mid-run) or
+  compete with executor memory. They stay on the platform tempdir.
 
-- ``$PYSPARKDB_SCRATCH`` when set — the deployment knob. Point it at fast
-  local NVMe (or durable storage if you want post-mortem access to a
-  failed run's checkpoint) on hosts where RAM is tight.
-- otherwise a RAM-backed tmpfs (/dev/shm) when one is writable — the
-  right default for scratch that is deleted within the run: these
-  checkpoints exist to satisfy the streaming engine's WAL protocol
-  during a single drain, not to survive a crash (a crashed run is simply
-  re-run from the parquet inputs), so durability buys nothing and the
-  fsync tax is pure waste. Sizing: the contents are offset/commit logs
-  (KBs) plus state snapshots bounded by the stream's state — orders of
-  magnitude below the corpus being processed.
-- otherwise ``None`` → the platform default tempdir (tempfile's choice),
-  the pre-round-16 behavior.
+``$PYSPARKDB_SCRATCH``, when set, is the deployment knob for both: point
+it at fast local NVMe (or durable storage if you want post-mortem access
+to a failed run's scratch). Otherwise:
+
+- ``scratch_root()`` picks /dev/shm when it is writable — these
+  checkpoints exist to satisfy the streaming engine's WAL protocol during
+  a single drain, not to survive a crash (a crashed run is simply re-run
+  from the parquet inputs), so durability buys nothing and the fsync tax
+  is pure waste — and ``None`` (the platform default tempdir) otherwise;
+- ``workdir_root()`` returns ``None``: the platform default tempdir.
 
 DURABLE streaming checkpoints — a production writeStream to a real sink
 that must resume across restarts — must NOT come from here; callers own
@@ -37,10 +42,17 @@ from __future__ import annotations
 import os
 
 
+def workdir_root() -> str | None:
+    """Directory under which corpus-sized ephemeral workdirs are created,
+    or None for the platform default tempdir. See module docstring."""
+    return os.environ.get("PYSPARKDB_SCRATCH") or None
+
+
 def scratch_root() -> str | None:
-    """Directory under which ephemeral scratch dirs are created, or None
-    for the platform default tempdir. See module docstring for policy."""
-    env = os.environ.get("PYSPARKDB_SCRATCH")
+    """Directory under which ephemeral stream-checkpoint dirs are
+    created, or None for the platform default tempdir. See module
+    docstring for policy."""
+    env = workdir_root()
     if env:
         return env
     shm = "/dev/shm"

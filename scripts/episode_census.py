@@ -75,6 +75,8 @@ def census(timeline: list[dict], frozen: dict, bands: dict) -> dict:
         share = bench.reading_steal_share(
             dur, {"steal_d": e.get("steal_d", 0)}, N_CPUS)
         gc_share = e.get("gc_d_ms", 0) / 1000.0 / max(dur, 1e-9)
+        # a sum of busy time over every disk, so it can exceed 1 when
+        # several disks are busy at once
         disk_share = e.get("disk_ms_d", 0) / 1000.0 / max(dur, 1e-9)
         if share > bench.STALL_STEAL_SHARE:
             bucket = "steal"

@@ -63,3 +63,20 @@ def test_repeat_invocations_do_not_leak_extra_cache_entries(spark, sf_dir):
     assert _n_cached_rdds(spark) == first, "repeat runs added cache entries"
     pins.release_persisted(blocking=True)
     assert _n_cached_rdds(spark) <= base
+
+
+def test_release_rejects_a_non_bool_blocking_and_keeps_the_pins(spark):
+    """A SparkSession passed where ``blocking`` goes (the old documented
+    call shape) must raise, not count pins as released while the JVM call
+    fails on each of them."""
+    import pytest
+
+    pins.release_persisted(blocking=True)
+    pinned = pins.pin(spark.range(10))
+    try:
+        with pytest.raises(TypeError, match="bool"):
+            pins.release_persisted(spark)
+        assert pins._PINNED == [pinned]
+        assert pinned.storageLevel.useMemory or pinned.storageLevel.useDisk
+    finally:
+        assert pins.release_persisted(blocking=True) == 1

@@ -1080,3 +1080,28 @@ def test_naive_bayes_learns_separable_corpus(spark):
     assert acc >= 0.95, f"NB failed to learn a separable corpus: {acc:.0%}"
     # and the prior alone would NOT reach that (classes are balanced):
     # a majority-class guesser scores ~1/3 here
+
+
+def test_snapshot_pipeline_workdirs_stay_off_tmpfs(spark, sf_dir, monkeypatch,
+                                                   tmp_path):
+    """Snapshot-pipeline workdirs hold corpus-sized data, so they go to the
+    platform tempdir unless PYSPARKDB_SCRATCH is set — never to the
+    /dev/shm default that only stream checkpoints get."""
+    import tempfile
+
+    from pysparkdb import scratch
+
+    monkeypatch.delenv("PYSPARKDB_SCRATCH", raising=False)
+    made = []
+    mkdtemp = tempfile.mkdtemp
+
+    def spy(*a, **kw):
+        made.append((kw.get("prefix"), kw.get("dir")))
+        return mkdtemp(*a, **kw)
+
+    monkeypatch.setattr(tempfile, "mkdtemp", spy)
+    load_all()["pipeline_schema_evolution"].fn(spark, sf_dir).collect()
+    assert ("schemaevo-", None) in made, made
+
+    monkeypatch.setenv("PYSPARKDB_SCRATCH", str(tmp_path))
+    assert scratch.workdir_root() == str(tmp_path) == scratch.scratch_root()

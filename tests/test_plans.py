@@ -772,6 +772,180 @@ class TestModeAxis:
             eng.set_mode("pushdown")
             eng.clear_segment_cache()
 
+    # SSB flight 1 as a dashboard panel: the same text with bound values
+    SSB_Q = """
+        SELECT CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(25,6)))
+                    AS DOUBLE) AS revenue
+        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        WHERE EXTRACT(YEAR FROM o_orderdate) = :year
+          AND l_discount BETWEEN :lo AND :hi AND l_quantity < 25
+    """
+    SSB_ARGS = {"year": 1996, "lo": 0.01, "hi": 0.03}
+
+    @staticmethod
+    def _spy_full_routing(eng, monkeypatch) -> list:
+        """Record every full routing (the memo's miss path) of ``eng``."""
+        calls = []
+        full = eng._route_full
+
+        def spy(*a):
+            calls.append(a[1])
+            return full(*a)
+
+        monkeypatch.setattr(eng, "_route_full", spy)
+        return calls
+
+    @staticmethod
+    def _run_counted(spark, eng, q, args=None):
+        """(DataFrame, rows, Spark jobs, cache hits, cache misses) of one
+        ``eng.sql`` call collected under its own job group."""
+        import uuid
+
+        sc = spark.sparkContext
+        c = eng._segment_cache
+        h0, m0 = c.hit_count, c.miss_count
+        group = f"memo-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            df = eng.sql(q, args=args)
+            rows = df.collect()
+        finally:
+            for prop in ("spark.jobGroup.id", "spark.job.description",
+                         "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(prop, None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        return df, rows, jobs, c.hit_count - h0, c.miss_count - m0
+
+    def test_repeated_hybrid_query_reuses_its_routing(
+            self, spark, sf_dir, monkeypatch):
+        """A repeated hybrid query is routed once: later calls return the
+        pushdown rows, run as many Spark jobs as the routed run and count
+        the same cache hits, each through a fresh QueryExecution (the memo
+        is not a result cache). The memo survives a mode interlude without
+        cache parameters and is dropped by a cache rebuild."""
+        from pysparkdb.engine import Engine
+
+        eng = Engine(spark).attach(sf_dir, validate=False)
+        try:
+            want = eng.sql(self.SSB_Q, args=self.SSB_ARGS,
+                           mode="pushdown").collect()
+            assert want and want[0].revenue is not None
+            eng.set_mode("hybrid")
+            eng.sql(self.SSB_Q, args=self.SSB_ARGS).collect()  # admits
+            eng._forget_routes()
+            full = self._spy_full_routing(eng, monkeypatch)
+            runs = [self._run_counted(spark, eng, self.SSB_Q, self.SSB_ARGS)
+                    for _ in range(3)]
+            assert len(full) == 1, "repeats were routed again"
+            _, _, jobs, hits, _ = runs[0]
+            assert jobs > 0 and hits > 0
+            for _, rows, j, h, m in runs:
+                assert rows == want
+                assert (j, h, m) == (jobs, hits, 0)
+            qes = [df._jdf.queryExecution() for df, *_ in runs]
+            assert not qes[1].equals(qes[2]) and not qes[0].equals(qes[1])
+
+            eng.set_mode("pushdown")
+            eng.set_mode("hybrid")
+            assert self._run_counted(
+                spark, eng, self.SSB_Q, self.SSB_ARGS)[1] == want
+            assert len(full) == 1, "a mode interlude dropped the memo"
+            eng.set_mode("hybrid", cache_policy="lru")
+            assert not eng._route_memo
+        finally:
+            eng.set_mode("pushdown")
+            eng.clear_segment_cache()
+
+    def test_routing_memo_falls_back_when_its_inputs_change(
+            self, spark, sf_dir, tmp_path, monkeypatch):
+        """Every change that could make a memoized routing wrong or its
+        accounting stale falls back to the full routing and returns the
+        pushdown rows: changed args, an evicted segment, a re-pinned
+        snapshot version, a referenced temp view replaced by other means,
+        and a nondeterministic (unseeded rand()) query. A failed check
+        counts nothing itself, and the memo never outgrows its bound."""
+        from pyspark.sql import functions as F
+
+        from pysparkdb import engine as engine_mod
+        from pysparkdb.engine import Engine
+        from pysparkdb.sources.versioned import snapshot_append
+
+        eng = Engine(spark).attach(sf_dir, validate=False)
+        root = str(tmp_path / "pin")
+        nation = eng.table("nation")
+        snapshot_append(nation.filter(F.col("n_nationkey") < 10), root)
+        snapshot_append(nation.filter(F.col("n_nationkey") >= 10), root)
+
+        def pushdown_rows(q, args=None):
+            mode = eng.mode
+            try:
+                return eng.sql(q, args=args, mode="pushdown").collect()
+            finally:
+                eng.set_mode(mode)
+
+        def check_full(q, args=None):
+            """One more full routing; the pushdown rows."""
+            n = len(full)
+            want = pushdown_rows(q, args)
+            assert self._run_counted(spark, eng, q, args)[1] == want
+            assert len(full) == n + 1, f"memo served a changed input: {q}"
+
+        try:
+            eng.set_mode("hybrid")
+            full = self._spy_full_routing(eng, monkeypatch)
+            eng.sql(self.SSB_Q, args=self.SSB_ARGS).collect()
+            # changed args
+            check_full(self.SSB_Q, {**self.SSB_ARGS, "year": 1995})
+
+            # an evicted segment the memoized routing used: the failed
+            # check adds no counts, so the full routing's own are all
+            memo = eng._route_memo[
+                (self.SSB_Q, repr(self.SSB_ARGS), "hybrid")]
+            c = eng._segment_cache
+            used = memo.requests[0][2]
+            c._evict(next(k for k, e in c.entries.items() if e is used))
+            _, rows, _, hits, misses = self._run_counted(
+                spark, eng, self.SSB_Q, self.SSB_ARGS)
+            assert rows == pushdown_rows(self.SSB_Q, self.SSB_ARGS)
+            assert (hits + misses, misses) == (len(memo.requests), 1)
+            assert len(full) == 3
+
+            # a re-pinned snapshot version
+            pin_q = ("SELECT COUNT(*) AS n, SUM(n_nationkey) AS s "
+                     "FROM memo_pin")
+            eng.attach_snapshot("memo_pin", root, version=1)
+            check_full(pin_q)
+            self._run_counted(spark, eng, pin_q)
+            assert len(full) == 4, "the pinned-view repeat was routed again"
+            eng.attach_snapshot("memo_pin", root, version=2, replace=True)
+            check_full(pin_q)
+
+            # a referenced temp view replaced by other means
+            view_q = ("SELECT COUNT(*) AS n FROM lineitem "
+                      "JOIN memo_keys ON l_orderkey = k")
+            spark.range(1, 50).toDF("k").createOrReplaceTempView("memo_keys")
+            check_full(view_q)
+            spark.range(1, 20).toDF("k").createOrReplaceTempView("memo_keys")
+            check_full(view_q)
+
+            # a nondeterministic query never matches its earlier plan
+            rand_q = "SELECT COUNT(*) AS n FROM lineitem WHERE rand() < 2.0"
+            check_full(rand_q)
+            check_full(rand_q)
+
+            assert len(eng._route_memo) <= engine_mod._ROUTE_MEMO_SIZE
+            monkeypatch.setattr(engine_mod, "_ROUTE_MEMO_SIZE", 2)
+            for year in (1993, 1994, 1995):
+                eng.sql(self.SSB_Q, args={**self.SSB_ARGS, "year": year})
+            assert len(eng._route_memo) == 2
+            assert (self.SSB_Q, repr({**self.SSB_ARGS, "year": 1995}),
+                    "hybrid") in eng._route_memo
+        finally:
+            for v in ("memo_pin", "memo_keys"):
+                spark.catalog.dropTempView(v)
+            eng.set_mode("pushdown")
+            eng.clear_segment_cache()
+
 
 class TestPushdown:
     def test_q6_filters_reach_scan(self, spark, sf_dir):
