@@ -19,8 +19,9 @@ from pysparkdb.catalog import Catalog
 from pysparkdb.session import apply_engine_confs, get_spark
 
 # Serializes SQL-text RESOLUTION (not execution) across threads. Temp views
-# are session-global, so the predicate-transfer pass's swap-resolve-restore
-# would otherwise race a concurrent sql() resolving against the reduced
+# are session-global, so the view swap-resolve-restore of the predicate-
+# transfer pass and of cache routing (Engine._resolve_with_views) would
+# otherwise race a concurrent sql() resolving against the swapped
 # views (the reference runs N concurrent queries against one server —
 # fpdb-calcite MultiQueryTest — so the facade must too). Resolution is
 # milliseconds; execution of the returned DataFrames proceeds fully in
@@ -83,21 +84,22 @@ _PUSHDOWN_CONFS = (
 from typing import NamedTuple  # noqa: E402
 
 
-class _RemoteAttach(NamedTuple):
-    """One attach_arrow_s3 / attach_arrow_s3_snapshot registration."""
+class _View(NamedTuple):
+    """One registered view the engine may swap: a catalog table, a local
+    attach_snapshot pin or a remote attach_arrow_s3(_snapshot) view."""
 
-    files: list[str]   # absolute data-object paths (the attach's plan)
-    conf: object       # S3Conf
-    df: DataFrame      # the registered plan (identity check for stats)
-    nbytes: int | None  # total data bytes, None = unknown (legacy manifest)
-    origin: str        # stable identity (prefix / uri@version) for cache keys
-
-
-class _SnapshotAttach(NamedTuple):
-    """One local attach_snapshot registration (manifest-pinned view)."""
-
-    df: DataFrame      # the registered plan (identity check)
-    origin: str        # root@vN — stable identity for cache keys
+    df: DataFrame      # the registered plan (liveness is checked against it)
+    # stable identity for cache keys (``name@origin``): the catalog's
+    # data_dir, root@vN for a local pin, uri@vN or prefix/name remote
+    origin: str
+    # remote views only: the data objects and the S3Conf (what
+    # arrow_s3_table_stats profiles) and the recorded data bytes, None =
+    # unknown (legacy manifest). A mapInArrow plan's own stats see only
+    # its task list, so remote views are sized by nbytes; local views by
+    # their plan stats (parquet footers).
+    files: list[str] | None = None
+    conf: object = None
+    nbytes: int | None = None
 
 
 class _RoutedQuery(NamedTuple):
@@ -120,23 +122,16 @@ class Engine:
         self.catalog: Catalog | None = None
         self._mode = "pushdown"
         self._segment_cache = None
-        # attach_arrow_s3 registry: view name -> _RemoteAttach, so
-        # arrow_s3_table_stats can profile an attached view with ZERO
+        # Every view attach, attach_snapshot and attach_arrow_s3(_snapshot)
+        # registered, by name (the latest registration of a name wins):
+        # the base tables of the predicate-transfer pass and the views
+        # cache routing swaps. A view replaced or dropped by other means
+        # stays here but is skipped (see _live). Remote entries keep their
+        # file list, so arrow_s3_table_stats profiles a view with ZERO
         # further LIST RPCs (the attach's one LIST already named every
-        # object). The DataFrame is kept so the stats call can verify the
-        # session view still IS the attach's plan — a view replaced by
-        # other means would otherwise be profiled against a stale file
-        # list. nbytes (total data bytes, from the LIST / the manifest)
-        # sizes the table for predicate-transfer ordering and cache
-        # admission — a mapInArrow plan's own optimizer stats see only
-        # the tiny task list, so without it a 100 TB remote fact table
-        # would masquerade as broadcast-small.
-        self._arrow_s3_tables: dict[str, _RemoteAttach] = {}
-        # attach_snapshot registry: local pinned-version views, kept so
-        # the predicate-transfer pass can see them as base tables (their
-        # LogicalRelation plans carry real parquet stats, so sizing is
-        # the ordinary plan-stat path)
-        self._snapshot_tables: dict[str, _SnapshotAttach] = {}
+        # object), and their byte totals, without which a 100 TB remote
+        # fact table would masquerade as broadcast-small.
+        self._views: dict[str, _View] = {}
         # per-ENGINE predicate_transfer="auto" crossover (bytes/core):
         # an instance attribute so a caller tuning or force-flipping the
         # threshold (tests, the q5_auto certificate query) affects only
@@ -227,76 +222,10 @@ class Engine:
         with _RESOLVE_LOCK:
             self._route_memo.clear()
 
-    @staticmethod
-    def _strip_fs_scheme(p: str) -> str:
-        # file:/x and file:///x both normalize to /x; remote schemes with
-        # an authority (s3a://bucket/...) are kept verbatim
-        if p.startswith("file:"):
-            rest = p[len("file:"):]
-            while rest.startswith("//"):
-                rest = rest[1:]
-            return rest
-        return p
-
-    def _leaf_columns_by_table(self, df: DataFrame) -> dict[str, set]:
-        """Per attached table, the union of columns the optimized plan's
-        leaf scans actually read — the segment working set to route
-        through the cache. Plan-walk only (no job). Attribution is by the
-        leaf's FILE PATH against the catalog's registered paths, not by
-        column-name subset: a pinned snapshot view or any derived frame
-        whose output happens to be ⊆ a table's columns must not admit that
-        table's segment (it would pin memory the query never reads)."""
-        assert self.catalog is not None
-        path_to_table = {
-            self._strip_fs_scheme(p).rstrip("/"): n
-            for n, p in self.catalog.paths.items()
-        }
-        needed: dict[str, set] = {}
-        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
-        for i in range(leaves.size()):
-            leaf = leaves.apply(i)
-            try:
-                roots = leaf.relation().location().rootPaths()
-                root = roots.apply(0).toString() if roots.size() else None
-            except Exception:
-                # Not a file-source leaf. One case still attributes: an
-                # InMemoryRelation Spark's CacheManager substituted for a
-                # table scan because an ADMITTED SEGMENT's plan matched it
-                # exactly (repeats of a routed query hit this) — its cached
-                # physical plan still carries the file scan, so dig the
-                # root path out of it; skipping would bypass the routing
-                # and the manager's hit accounting on exactly the queries
-                # the cache serves best.
-                root = self._cached_leaf_root(leaf)
-            if root is None:
-                continue
-            tname = path_to_table.get(self._strip_fs_scheme(root).rstrip("/"))
-            if tname is None:
-                continue
-            out = leaf.output()
-            names = {out.apply(j).name() for j in range(out.size())}
-            if names:
-                needed.setdefault(tname, set()).update(names)
-        return needed
-
-    @staticmethod
-    def _cached_leaf_root(leaf) -> str | None:
-        """First file-scan root path inside an InMemoryRelation leaf's
-        cached physical plan, or None for any other leaf kind."""
-        try:
-            if leaf.getClass().getSimpleName() != "InMemoryRelation":
-                return None
-            phys = leaf.cachedPlan().collectLeaves()
-            for j in range(phys.size()):
-                try:
-                    roots = phys.apply(j).relation().location().rootPaths()
-                    if roots.size():
-                        return roots.apply(0).toString()
-                except Exception:
-                    continue
-        except Exception:
-            return None
-        return None
+    @property
+    def _arrow_s3_tables(self) -> dict[str, _View]:
+        """The remote views: what arrow_s3_table_stats can profile."""
+        return {n: v for n, v in self._views.items() if v.files is not None}
 
     def attach(
         self, data_dir: str, validate: bool = True, reuse: bool = False
@@ -322,6 +251,8 @@ class Engine:
         else:
             self.catalog = Catalog(self.spark, data_dir).register_all(
                 validate=validate)
+        for name, df in self.catalog.tables.items():
+            self._views[name] = _View(df, self.catalog.data_dir)
         return self
 
     def sql(
@@ -363,10 +294,11 @@ class Engine:
 
         ``mode`` switches the execution mode for THIS and subsequent calls
         (``set_mode`` semantics — session-scoped, like the reference's
-        exec.conf MODE): in ``"caching"``/``"hybrid"`` the attached-table
-        scans are routed through the SegmentCacheManager (each table's
-        optimizer-pruned column working set becomes a cached segment;
-        repeat queries over ⊆ columns serve from memory), in ``"pullup"``
+        exec.conf MODE): in ``"caching"``/``"hybrid"`` the attached views
+        (catalog tables, snapshot pins, remote attaches) are routed through
+        the SegmentCacheManager (the columns of each view the query text
+        references become a cached segment; repeat queries over ⊆ columns
+        serve from memory), in ``"pullup"``
         the scan-pushdown confs are disabled. Cache routing applies to the
         plain resolution path; when ``predicate_transfer`` is also set the
         transfer pass wins and routing is skipped (caching semi-join-
@@ -395,30 +327,21 @@ class Engine:
                 f"predicate_transfer must be True, False or 'auto', "
                 f"got {predicate_transfer!r}"
             )
-        with _RESOLVE_LOCK:
-            df = self.spark.sql(query, args=args) if args else self.spark.sql(query)
+        df = self._resolve_with_views(query, args, {})
         if not predicate_transfer:
-            if self._mode in ("caching", "hybrid") and (
-                self.catalog is not None or self._arrow_s3_tables
-                or self._snapshot_tables
-            ):
+            if self._mode in ("caching", "hybrid") and self._views:
                 return self._route_views_through_cache(df, query, args)
             return df
-        # The transferable table universe: the local catalog, local
-        # pinned-snapshot views, and every remote-attached view
-        # (attach_arrow_s3 / attach_arrow_s3_snapshot) — the reference
-        # applies its pre-pass to S3-backed tables in the first place,
-        # so the remote tier must be eligible here too. Identical
-        # schemas across any two entries fall to extract_join_edges'
-        # ambiguity exclusion (no edge, never a wrong reduction).
-        base_tables: dict[str, DataFrame] = dict(
-            self.catalog.tables) if self.catalog is not None else {}
-        for sname, satt in self._live_attached(self._snapshot_tables).items():
-            base_tables[sname] = satt.df
-        live_remote = self._live_attached(self._arrow_s3_tables)
-        for rname, att in live_remote.items():
-            base_tables[rname] = att.df
-        assert base_tables, "attach a data_dir or remote tables first"
+        # The transferable table universe: every live registered view —
+        # the local catalog, local pinned-snapshot views and the remote
+        # attaches (the reference applies its pre-pass to S3-backed tables
+        # in the first place, so the remote tier must be eligible here
+        # too). Identical schemas across any two entries fall to
+        # extract_join_edges' ambiguity exclusion (no edge, never a wrong
+        # reduction).
+        assert self._views, "attach a data_dir or remote tables first"
+        live = {n: v for n, v in list(self._views.items()) if self._live(n, v)}
+        base_tables = {n: v.df for n, v in live.items()}
         from pysparkdb.plans.predicate_transfer import (
             _plan_bytes,
             extract_join_edges,
@@ -429,24 +352,16 @@ class Engine:
         if not edges:
             return df
         edge_tables = {e.left for e in edges} | {e.right for e in edges}
-        # Sizing: local tables read optimizer plan stats (parquet footers,
+        # Sizing: local views read optimizer plan stats (parquet footers,
         # free); remote mapInArrow plans' stats see only the task list, so
         # their size is the attach-recorded byte total — unknown (legacy
         # manifest without "bytes") means ∞: the table still RECEIVES
         # reductions but is never trusted as broadcast-small, the only
-        # safe default for what may be a 100 TB corpus. Keyed on the
-        # LIVE-filtered attach set (the same dict base_tables was built
-        # from), not the raw registry: a name once attached remotely but
-        # since re-registered as a catalog/snapshot table must be sized
-        # by ITS plan stats, not the stale attach's byte total.
+        # safe default for what may be a 100 TB corpus.
         sizes = {
-            n: (
-                (live_remote[n].nbytes
-                 if live_remote[n].nbytes is not None
-                 else float("inf"))
-                if n in live_remote
-                else _plan_bytes(base_tables[n])
-            )
+            n: (_plan_bytes(live[n].df) if live[n].files is None
+                else live[n].nbytes if live[n].nbytes is not None
+                else float("inf"))
             for n in edge_tables
         }
         if predicate_transfer == "auto":
@@ -454,88 +369,95 @@ class Engine:
             if max(sizes.values()) < self.auto_bytes_per_core * cores:
                 return df  # below the measured crossover: plain plan wins
         reduced = _transfer(base_tables, edges, sizes=sizes)
-        # Re-resolve the same text against the reduced relations: temp views
-        # are swapped only while spark.sql() analyzes the string (resolution
-        # happens at creation; the returned DataFrame keeps its plan), then
-        # restored — atomically w.r.t. every other sql() resolution.
+        return self._resolve_with_views(query, args, {
+            n: rdf for n, rdf in reduced.items() if rdf is not base_tables[n]})
+
+    def _resolve_with_views(
+        self, query: str, args: dict | list | None, views: dict[str, DataFrame]
+    ) -> DataFrame:
+        """Resolve the text with each named registered view swapped for
+        the given plan, then restore each name to its registered plan.
+        Temp views are swapped only while spark.sql() analyzes the string
+        (resolution happens at creation; the returned DataFrame keeps its
+        plan), atomically w.r.t. every other sql() resolution. Only live
+        views may be swapped: restoring a view replaced by other means
+        would silently resurrect the registered plan."""
         with _RESOLVE_LOCK:
             try:
-                for name, rdf in reduced.items():
-                    rdf.createOrReplaceTempView(name)
+                for name, vdf in views.items():
+                    vdf.createOrReplaceTempView(name)
                 return (self.spark.sql(query, args=args) if args
                         else self.spark.sql(query))
             finally:
-                for name, odf in base_tables.items():
-                    odf.createOrReplaceTempView(name)
+                for name in views:
+                    self._views[name].df.createOrReplaceTempView(name)
 
-    def _live_attached(self, registry: dict) -> dict:
-        """Filter an attach registry down to names whose CURRENT session
-        view still IS the registered plan. A view replaced or dropped by
-        other means must neither be swapped (wrong data under the name)
-        nor restored (the finally block would silently resurrect it) —
-        the same staleness rule arrow_s3_table_stats enforces."""
-        out = {}
-        for name, val in registry.items():
-            rdf = getattr(val, "df", val)
-            try:
-                if self.spark.table(name).sameSemantics(rdf):
-                    out[name] = val
-            except Exception:
-                continue
-        return out
+    def _live(self, name: str, view: _View) -> bool:
+        """Whether the CURRENT session view ``name`` still IS the
+        registered plan. A view replaced or dropped by other means must
+        neither be swapped (wrong data under the name) nor restored (the
+        swap would silently resurrect it) — the same staleness rule
+        arrow_s3_table_stats enforces."""
+        try:
+            return self.spark.table(name).sameSemantics(view.df)
+        except Exception:
+            return False
 
-    def _attached_view_columns(
-        self, df: DataFrame, names
-    ) -> dict[str, set]:
-        """Per attached view (any name in ``names``), the columns THIS
-        query actually references — the working set the segment cache
-        routes for remote attaches AND local snapshot pins. The catalog
-        tables' plan-walk (leaf file paths against catalog paths) cannot
-        attribute a mapInArrow scan (whose leaf is the task list) nor a
-        manifest-pinned view (whose leaf paths are the manifest's file
-        list, not the catalog dir); here attribution is by VIEW NAME on
-        the ANALYZED plan (resolved temp views keep their SubqueryAlias
-        wrapper there), and the working set is the view-output attributes
-        whose exprIds any operator references (or the query returns).
-        With no such view live there is nothing to attribute, and the
-        plan walk (hundreds of Py4J calls) is skipped."""
-        if not names:
-            return {}
+    def _view_columns(self, df: DataFrame) -> dict[str, set]:
+        """Per live registered view the query reads, the columns of it the
+        query text references — the segment working set cache routing
+        projects. One walk of the ANALYZED plan by view name, for every
+        kind: at a SubqueryAlias over a temp View whose name is a live
+        registered view, the view's output is recorded and its body is
+        not entered (a catalog view's own timestamp-cast Project would
+        otherwise reference every column). Subquery-expression plans are
+        walked too, so a view used both outside and inside a subquery
+        keeps the columns only the subquery reads. The working set is the
+        view-output attributes any operator references or the query
+        returns; a view whose working set is empty is left out."""
         analyzed = df._jdf.queryExecution().analyzed()
         used_ids: set[int] = set()
         out = analyzed.output()
         for i in range(out.size()):
             used_ids.add(out.apply(i).exprId().id())
         per_view: dict[str, list[tuple[str, int]]] = {}
+        live: dict[str, bool] = {}
 
         def walk(node):
             refs = node.references().iterator()
             while refs.hasNext():
                 used_ids.add(refs.next().exprId().id())
-            if node.getClass().getSimpleName() == "SubqueryAlias":
+            # a temp view resolves to SubqueryAlias(name, View(...)); a
+            # query alias or CTE of the same name has another child
+            if (node.getClass().getSimpleName() == "SubqueryAlias"
+                    and node.child().getClass().getSimpleName() == "View"):
                 name = node.alias()
-                if name in names:
+                if name not in live and name in self._views:
+                    live[name] = self._live(name, self._views[name])
+                if live.get(name):
                     o = node.output()
                     per_view.setdefault(name, []).extend(
                         (o.apply(i).name(), o.apply(i).exprId().id())
                         for i in range(o.size()))
-            for i in range(node.children().size()):
-                walk(node.children().apply(i))
+                    return
+            for plans in (node.children(), node.subqueries()):
+                for i in range(plans.size()):
+                    walk(plans.apply(i))
 
         walk(analyzed)
-        return {
-            name: {c for c, eid in pairs if eid in used_ids}
-            for name, pairs in per_view.items()
-        }
+        cols = {name: {c for c, eid in pairs if eid in used_ids}
+                for name, pairs in per_view.items()}
+        return {name: c for name, c in cols.items() if c}
 
     def _route_views_through_cache(
         self, df: DataFrame, query: str, args: dict | list | None
     ) -> DataFrame:
         """CACHING_ONLY / HYBRID scan routing (CacheLoadPOp.cpp analog):
-        swap each attached table's view for its SegmentCacheManager
-        projection over the columns THIS query's optimized plan reads,
-        re-resolve the same text, restore the views — the predicate-
-        transfer view-swap pattern, under the same resolution lock. A
+        swap each live registered view the query reads — catalog table,
+        snapshot pin or remote attach — for its SegmentCacheManager
+        projection over the columns THIS query's text references (see
+        ``_view_columns``), re-resolve the same text, restore the views —
+        the predicate-transfer view-swap (``_resolve_with_views``). A
         first-seen working set admits (miss: the load obeys the session's
         pushdown confs — off in caching mode, on in hybrid); repeats and
         subset requests serve from the InMemoryRelation.
@@ -550,7 +472,8 @@ class Engine:
         recorded byte total prorated to the working set (a mapInArrow
         plan's own stats see only the task list); a legacy attach with
         UNKNOWN bytes is served uncached rather than admitted blind —
-        an unsized admission could pin a corpus-scale segment.
+        an unsized admission could pin a corpus-scale segment. Local
+        views are sized by their plan stats.
 
         Routing memo: a repeat of the same (text, args, mode) skips the
         walk, the projections and the view-swap re-resolution. The caller
@@ -565,7 +488,7 @@ class Engine:
         cache, every call optimizes, plans and runs its own jobs. A
         failed check touches no counter and routes in full, which
         re-records. Only a full routing whose every request landed in the
-        cache is recorded (never the plain-plan fallback below); the memo
+        cache is recorded (never a routing that routed nothing); the memo
         is bounded (``_ROUTE_MEMO_SIZE``, least recently used out), held
         under ``_RESOLVE_LOCK``, and dropped on every attach and cache
         rebuild."""
@@ -602,88 +525,30 @@ class Engine:
     ) -> tuple[DataFrame, tuple | None]:
         """The routing itself (see _route_views_through_cache): the routed
         DataFrame, plus its cache requests when it may be memoized —
-        None for the plain-plan fallbacks and for a routing in which any
+        None when nothing was routed and for a routing in which any
         request did not land in (or was evicted from) the cache."""
         cache = self._segment_cache
+        routed: dict[str, DataFrame] = {}
         requests: list[tuple] = []
-
-        def project(src: DataFrame, table: str, cols: list[str], **kw):
-            out = cache.project(src, table, cols, **kw)
-            requests.append((table, cols, cache.serving(table, cols)))
-            return out
-
-        needed = (self._leaf_columns_by_table(df)
-                  if self.catalog is not None else {})
-        data_dir = self.catalog.data_dir if self.catalog is not None else ""
-        # Project in each table's DECLARED column order (cache identity is
-        # canonicalized inside project(), which sorts its key): a sorted
-        # projection would make SELECT * return alphabetized columns in
-        # caching/hybrid modes — the mode axis must never change a result,
-        # including schema order.
-        routed = {
-            name: project(
-                self.catalog.tables[name],
-                f"{name}@{data_dir}",
-                [c for c in self.catalog.tables[name].columns if c in cols],
-            )
-            for name, cols in needed.items()
-        }
-        live_remote = self._live_attached(self._arrow_s3_tables)
-        live_snap = self._live_attached(self._snapshot_tables)
-        attached_cols = self._attached_view_columns(
-            df, set(live_remote) | set(live_snap))
-        for name, cols in attached_cols.items():
-            att = live_remote.get(name)
-            if att is not None:
-                if not cols or att.nbytes is None or not att.files:
-                    # unsized or empty attach: plain plan
+        for name, cols in self._view_columns(df).items():
+            view = self._views[name]
+            # Project in the view's DECLARED column order (cache identity
+            # is canonicalized inside project(), which sorts its key): a
+            # sorted projection would make SELECT * return alphabetized
+            # columns in caching/hybrid modes — the mode axis must never
+            # change a result, including schema order.
+            want = [c for c in view.df.columns if c in cols]
+            hint = None
+            if view.files is not None:
+                if not view.nbytes:  # unsized or empty remote attach
                     continue
-                want = [c for c in att.df.columns if c in cols]
-                routed[name] = project(
-                    att.df, f"{name}@{att.origin}", want,
-                    size_hint=max(
-                        1,
-                        att.nbytes * len(want) // max(len(att.df.columns), 1)
-                    ),
-                )
-                continue
-            # local attach_snapshot pin: same view-name attribution; its
-            # plan is an ordinary parquet read over the manifest's file
-            # list, so plan-stat sizing applies (no size_hint needed) —
-            # the local/remote parity the mode-axis matrix promises
-            satt = live_snap[name]
-            if not cols:
-                continue
-            want = [c for c in satt.df.columns if c in cols]
-            routed[name] = project(
-                satt.df, f"{name}@{satt.origin}", want)
+                hint = max(1, view.nbytes * len(want) // len(view.df.columns))
+            table = f"{name}@{view.origin}"
+            routed[name] = cache.project(view.df, table, want, size_hint=hint)
+            requests.append((table, want, cache.serving(table, want)))
         if not routed:
             return df, None
-        from pyspark.errors import AnalysisException
-
-        restore = {n: self.catalog.tables[n] for n in needed} if needed else {}
-        for name in routed:
-            if name in restore:
-                continue
-            restore[name] = (live_remote[name].df if name in live_remote
-                             else live_snap[name].df)
-        with _RESOLVE_LOCK:
-            try:
-                for name, rdf in routed.items():
-                    rdf.createOrReplaceTempView(name)
-                out = (self.spark.sql(query, args=args) if args
-                       else self.spark.sql(query))
-            except AnalysisException:
-                # The working set came from the OPTIMIZED plan; in rare
-                # shapes the optimizer prunes a column the raw text still
-                # references at analysis (a folded `true OR col > 0`
-                # predicate, an eliminated join), so re-resolution against
-                # the narrower views fails. Serve the plain plan — the
-                # cache is an optimization, never a correctness gate.
-                return df, None
-            finally:
-                for name, odf in restore.items():
-                    odf.createOrReplaceTempView(name)
+        out = self._resolve_with_views(query, args, routed)
         # an admission may have evicted an entry an earlier request of this
         # query was served by; such a routing is served but not recorded
         if any(e is None or cache.serving(t, cols) is not e
@@ -741,8 +606,7 @@ class Engine:
         df = snapshot_read(self.spark, root, resolved)
         self._forget_routes()
         df.createOrReplaceTempView(name)
-        self._snapshot_tables[name] = _SnapshotAttach(
-            df, f"{root}@v{resolved}")
+        self._views[name] = _View(df, f"{root}@v{resolved}")
         return df
 
     def attach_arrow_s3_snapshot(
@@ -797,8 +661,8 @@ class Engine:
                 self.spark, T.StructType.fromJson(_json.loads(schema_json)))
         self._forget_routes()
         df.createOrReplaceTempView(name)
-        self._arrow_s3_tables[name] = _RemoteAttach(
-            files, conf, df, manifest.get("bytes"), f"{uri}@v{_version}")
+        self._views[name] = _View(
+            df, f"{uri}@v{_version}", files, conf, manifest.get("bytes"))
         return df
 
     def attach_arrow_s3(
@@ -877,8 +741,8 @@ class Engine:
         for name, files in sorted(groups.items()):
             df = _read_parquet_files(self.spark, sorted(files), conf)
             df.createOrReplaceTempView(name)
-            self._arrow_s3_tables[name] = _RemoteAttach(
-                sorted(files), conf, df, sizes[name], f"{prefix}/{name}")
+            self._views[name] = _View(
+                df, f"{prefix}/{name}", sorted(files), conf, sizes[name])
             out[name] = df
         return out
 
@@ -904,7 +768,7 @@ class Engine:
                 f"(attached: {sorted(self._arrow_s3_tables) or 'none'})")
         from pysparkdb.sources.arrow_s3 import _scan_stats_files
 
-        files, conf, attached_df = self._arrow_s3_tables[name][:3]
+        attached_df, _, files, conf, _ = self._arrow_s3_tables[name]
         # the file list certifies the ATTACHED plan; if the session view
         # was replaced since (another attach, createOrReplaceTempView by
         # other means, a dropped-and-recreated table), profiling the old

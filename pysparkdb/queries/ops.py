@@ -791,8 +791,8 @@ def op_rollup(spark, sf_dir):
     rows and None breaks ordering. One shuffle: Spark expands grouping
     sets map-side (Expand node), partial-aggregates each set, then a
     single hash exchange — identical shape at any scale."""
-    l = parallel_scan(tables(spark, sf_dir)["lineitem"].select(
-        "l_returnflag", "l_linestatus", "l_quantity"))
+    l = tables(spark, sf_dir)["lineitem"].select(
+        "l_returnflag", "l_linestatus", "l_quantity")
     return (
         l.rollup("l_returnflag", "l_linestatus")
         .agg(dsum(F.col("l_quantity")).alias("sum_qty"),
@@ -1204,8 +1204,8 @@ def op_cube(spark, sf_dir):
     multiplier is the Expand fan-out (4x here), never an extra shuffle
     or rescan per set. NULL subtotal keys COALESCEd to 'ALL' sentinels
     (op_rollup convention: the oracle sort breaks on None)."""
-    l = parallel_scan(tables(spark, sf_dir)["lineitem"].select(
-        "l_returnflag", "l_linestatus", "l_quantity"))
+    l = tables(spark, sf_dir)["lineitem"].select(
+        "l_returnflag", "l_linestatus", "l_quantity")
     return (
         l.cube("l_returnflag", "l_linestatus")
         .agg(dsum(F.col("l_quantity")).alias("sum_qty"),

@@ -45,6 +45,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pysparkdb.sources.versioned import ConcurrentAppendError
+
 # DNF filter: list of (column, op, literal) conjuncts, ANDed. Picklable —
 # it ships to executors inside the task closure; pyarrow expressions do not
 # pickle, so tasks rebuild the expression from this form.
@@ -873,13 +875,6 @@ def _arrow_resolve_version(
     if version not in tags:
         raise ValueError(f"tag {version!r} not found (have: {sorted(tags)})")
     return tags[version]
-
-
-class ConcurrentAppendError(RuntimeError):
-    """Another writer committed the same snapshot version first. The
-    losing append's data objects are unreferenced (invisible to every
-    reader; the GC pass expires them) — retry the whole append to land
-    the batch on the new latest version."""
 
 
 def _get_manifest(client, bucket: str, keyprefix: str, version: int) -> dict:

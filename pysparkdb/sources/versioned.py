@@ -24,10 +24,12 @@ implements the minimal core of that idea with nothing but parquet + JSON:
   column added in batch 7 silently vanishes whenever the sampled footer
   predates it).
 
-Contract: single writer (the commit is a manifest write; real formats
-arbitrate concurrent writers with CAS on the log — out of scope here and
-documented rather than half-built). Manifests are written to a temp name
-and atomically renamed, so readers never observe a torn manifest.
+Concurrent writers: a commit publishes manifest v{N+1}, where N is the
+version its writer read, CREATE-ONLY (written to a temp name, then
+hard-linked into place), so readers never observe a torn manifest and two
+writers racing for the same version cannot both succeed: the loser raises
+ConcurrentAppendError — the object-store tier's conditional-PUT contract —
+and its staged files stay unreferenced until snapshot_gc collects them.
 
 This composes with the rest of the engine: the reference's catalog is
 static JSON metadata over immutable S3 objects
@@ -90,46 +92,13 @@ def snapshot_tag(
             f"tag {name!r} already exists (-> v{json.load(open(path))['version']}); "
             f"pass replace=True to move it deliberately")
     os.makedirs(os.path.join(root, _REFS_DIR), exist_ok=True)
-    tmp = path + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump({"version": version}, f)
-    if replace:
-        os.rename(tmp, path)  # atomic publish, like manifests
-    else:
-        # create-only publish must be ATOMIC: an exists-check followed by
-        # rename silently overwrites on POSIX, so two racing creators
-        # would both "succeed" last-writer-wins — the same race the
-        # remote tier closes with a conditional PUT. os.link refuses with
-        # FileExistsError when the target already exists. Filesystems
-        # WITHOUT hard-link support (some NFS/overlay/FAT mounts) raise
-        # OSError(EPERM/ENOTSUP) instead — fall back to open(path, 'x'):
-        # O_CREAT|O_EXCL gives the same create-only atomicity without a
-        # link, at the cost of writing the payload twice.
-        try:
-            os.link(tmp, path)
-        except FileExistsError:
-            raise ValueError(
-                f"tag {name!r} already exists "
-                f"(-> v{json.load(open(path))['version']}); "
-                f"pass replace=True to move it deliberately") from None
-        except OSError as exc:
-            if exc.errno not in (
-                    errno.EPERM, errno.ENOTSUP, getattr(
-                        errno, "EOPNOTSUPP", errno.ENOTSUP)):
-                raise
-            try:
-                with open(path, "x") as f:
-                    json.dump({"version": version}, f)
-            except FileExistsError:
-                raise ValueError(
-                    f"tag {name!r} already exists "
-                    f"(-> v{json.load(open(path))['version']}); "
-                    f"pass replace=True to move it deliberately") from None
-        finally:
-            try:
-                os.remove(tmp)
-            except FileNotFoundError:
-                pass
+    try:
+        _publish(path, {"version": version}, replace=replace)
+    except FileExistsError:
+        raise ValueError(
+            f"tag {name!r} already exists "
+            f"(-> v{json.load(open(path))['version']}); "
+            f"pass replace=True to move it deliberately") from None
     return version
 
 
@@ -208,15 +177,59 @@ def _read_manifest(root: str, version: int) -> dict:
         ) from None
 
 
+class ConcurrentAppendError(RuntimeError):
+    """Another writer committed the same snapshot version first (local
+    or object-store tier). The losing append's data files are
+    unreferenced (invisible to every reader; the GC pass expires them) —
+    retry the whole append to land the batch on the new latest version."""
+
+
+def _publish(path: str, body: dict, replace: bool = False) -> None:
+    """Write ``body`` as JSON at ``path`` atomically: to a temp name, then
+    renamed (``replace=True``) or published CREATE-ONLY — FileExistsError
+    when ``path`` exists. An exists-check followed by rename would
+    silently overwrite on POSIX, so two racing creators would both
+    "succeed" last-writer-wins — the race the remote tier closes with a
+    conditional PUT. os.link refuses when the target exists. Filesystems
+    WITHOUT hard-link support (some NFS/overlay/FAT mounts) raise
+    OSError(EPERM/ENOTSUP) instead; there open(path, 'x') (O_CREAT|O_EXCL)
+    gives the same create-only guarantee, at the cost of writing the
+    payload twice and of a reader possibly seeing it half-written."""
+    tmp = path + f".tmp-{uuid.uuid4().hex}"
+    with open(tmp, "w") as f:
+        json.dump(body, f)
+    if replace:
+        os.rename(tmp, path)
+        return
+    try:
+        os.link(tmp, path)
+    except OSError as exc:  # FileExistsError (EEXIST) propagates
+        if exc.errno not in (errno.EPERM, errno.ENOTSUP, getattr(
+                errno, "EOPNOTSUPP", errno.ENOTSUP)):
+            raise
+        with open(path, "x") as f:
+            json.dump(body, f)
+    finally:
+        try:
+            os.remove(tmp)
+        except FileNotFoundError:
+            pass
+
+
 def _commit(root: str, version: int, files: list[str], n_rows: int, parent: int | None,
             epoch: int | None = None, schema: dict | None = None) -> None:
+    """Publish version ``version``'s manifest; ConcurrentAppendError if
+    another writer committed that version first (its manifest is kept)."""
     os.makedirs(os.path.join(root, _MANIFEST_DIR), exist_ok=True)
     body = {"version": version, "files": sorted(files), "n_rows": n_rows,
             "parent": parent, "epoch": epoch, "schema": schema}
-    tmp = _manifest_path(root, version) + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(body, f)
-    os.rename(tmp, _manifest_path(root, version))  # atomic publish
+    try:
+        _publish(_manifest_path(root, version), body)
+    except FileExistsError:
+        raise ConcurrentAppendError(
+            f"version {version} under {root!r} was committed concurrently "
+            f"by another writer; this commit's files are unreferenced — "
+            f"retry to land them on the new latest version") from None
 
 
 def _schema_dict(df_schema) -> dict:
@@ -296,29 +309,31 @@ def _footer_rows(files: list[str]) -> int:
     return sum(pq.ParquetFile(p).metadata.num_rows for p in files)
 
 
+def _latest(root: str) -> int | None:
+    versions = snapshot_versions(root)
+    return versions[-1] if versions else None
+
+
 def _stage_batch(
-    df: DataFrame, root: str, prefix: str
-) -> tuple[int, int | None, list[str], int]:
-    """Write ``df`` as a new immutable batch directory for the NEXT
-    version — the staging half shared by snapshot_append and
-    snapshot_rewrite (they differ only in what the manifest lists).
-    Returns (version, parent, new_files_rel, n_new_rows). The uuid suffix
-    makes a failed write recoverable: a crash before the manifest rename
+    df: DataFrame, root: str, prefix: str, version: int
+) -> tuple[list[str], int]:
+    """Write ``df`` as a new immutable batch directory for ``version`` —
+    the staging half shared by snapshot_append and snapshot_rewrite (they
+    differ only in what the manifest lists). Returns (new_files_rel,
+    n_new_rows). The uuid suffix
+    makes a failed write recoverable: a crash before the manifest publish
     leaves an orphan directory no manifest references (inert garbage,
     snapshot_gc collects it after the grace window) and the retry writes
     a fresh directory instead of colliding with the partial one. Row
     count comes from parquet footers (the catalog.zone_map pattern) — no
     Spark job per commit, which matters when every micro-batch commits."""
-    versions = snapshot_versions(root)
-    parent = versions[-1] if versions else None
-    version = (parent or 0) + 1
     batch_dir = os.path.join(
         root, _DATA_DIR, f"{prefix}-{version}-{uuid.uuid4().hex[:8]}"
     )
     df.write.mode("error").parquet(batch_dir)
     written = _parquet_files(batch_dir)
     new_files = [os.path.relpath(p, root) for p in written]
-    return version, parent, new_files, _footer_rows(written)
+    return new_files, _footer_rows(written)
 
 
 def snapshot_append(df: DataFrame, root: str, epoch: int | None = None) -> int:
@@ -329,15 +344,19 @@ def snapshot_append(df: DataFrame, root: str, epoch: int | None = None) -> int:
     the parent's merged with df's — new columns append (earlier files
     read NULL for them), omitted parent columns stay (df's rows read
     NULL there), type changes raise BEFORE any data is staged (a failed
-    merge must not leave an orphan batch directory)."""
-    versions = snapshot_versions(root)
+    merge must not leave an orphan batch directory). The commit is at
+    the version after the manifest read here: if another writer commits
+    that version meanwhile, this append raises ConcurrentAppendError
+    rather than publish a file list that drops the other's files."""
+    parent = _latest(root)
     prev = (
-        _read_manifest(root, versions[-1])
-        if versions
+        _read_manifest(root, parent)
+        if parent is not None
         else {"files": [], "n_rows": 0, "schema": None}
     )
     schema = _merge_schema(prev.get("schema"), df.schema)
-    version, parent, new_files, n_new = _stage_batch(df, root, "batch")
+    version = (parent or 0) + 1
+    new_files, n_new = _stage_batch(df, root, "batch", version)
     _commit(root, version, prev["files"] + new_files, prev["n_rows"] + n_new, parent,
             epoch=epoch, schema=schema)
     return version
@@ -552,7 +571,7 @@ def snapshot_gc(
                 if not os.listdir(dirpath):
                     os.rmdir(dirpath)
     # tmp manifests from crashed commits (_commit writes vN.json.tmp-<uuid>
-    # then renames): snapshot_versions skips them but nothing else ever
+    # then publishes it): snapshot_versions skips them but nothing else ever
     # removed them — a long-lived root restarting after crashes would
     # accumulate them forever. Same grace window as data orphans (a young
     # tmp may be a commit in flight).
@@ -763,9 +782,11 @@ def snapshot_rewrite(spark: SparkSession, root: str, df: DataFrame) -> int:
     files until snapshot_gc's retention horizon reclaims them (that pair
     is the complete erasure story: rewrite removes from the live version,
     GC removes the bytes). Readers see the change atomically at the
-    manifest rename; snapshot_diff against the parent yields the
+    manifest publish; snapshot_diff against the parent yields the
     insert/delete feed downstream increments consume."""
-    version, parent, files, n_rows = _stage_batch(df, root, "rewrite")
+    parent = _latest(root)
+    version = (parent or 0) + 1
+    files, n_rows = _stage_batch(df, root, "rewrite", version)
     # full replacement owns its schema outright: a rewrite may drop or
     # retype columns (it lists no historical files, so there is nothing
     # the declared schema must stay compatible with)

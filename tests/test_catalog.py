@@ -233,7 +233,7 @@ def test_engine_attach_snapshot_origin_consistent_under_concurrent_append(
     # the read was issued at the RESOLVED int, never None-latest
     assert seen_versions == [1]
     # origin and contents agree: both name v1
-    assert eng._snapshot_tables["docs"].origin.endswith("@v1")
+    assert eng._views["docs"].origin.endswith("@v1")
     assert df.count() == 10
 
 

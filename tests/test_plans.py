@@ -673,10 +673,10 @@ class TestModeAxis:
         eng = Engine(spark).attach(sf_dir, validate=False)
         try:
             eng.set_mode("caching")
-            # optimizer folds `true OR l_tax > 0` away, so the working set
-            # lacks l_tax while the raw text still references it —
-            # re-resolution against the routed view fails analysis and the
-            # engine must serve the PLAIN plan, not crash
+            # the optimizer folds `true OR l_tax > 0` away, but the working
+            # set comes from the ANALYZED plan, which still references
+            # l_tax — so the routed view holds it and re-resolution of the
+            # raw text succeeds
             n = eng.sql(
                 "SELECT l_quantity FROM lineitem WHERE true OR l_tax > 0"
             ).count()
@@ -943,6 +943,84 @@ class TestModeAxis:
         finally:
             for v in ("memo_pin", "memo_keys"):
                 spark.catalog.dropTempView(v)
+            eng.set_mode("pushdown")
+            eng.clear_segment_cache()
+
+    @staticmethod
+    def _segments(eng, table):
+        """Column tuples of ``eng``'s cached segments of catalog ``table``."""
+        prefix = f"{table}@{eng.catalog.data_dir}"
+        return [cols for t, cols in eng._segment_cache.entries if t == prefix]
+
+    def test_hybrid_segment_holds_only_the_referenced_columns(
+            self, spark, sf_dir):
+        """A hybrid SSB flight-1 query admits lineitem and orders segments
+        that hold the columns its text references, not the whole tables
+        (the catalog view's own cast Project is not counted)."""
+        from pysparkdb.engine import Engine
+
+        eng = Engine(spark).attach(sf_dir, validate=False)
+        try:
+            want = eng.sql(self.SSB_Q, args=self.SSB_ARGS,
+                           mode="pushdown").collect()
+            got = eng.sql(self.SSB_Q, args=self.SSB_ARGS,
+                          mode="hybrid").collect()
+            assert want and got == want
+            assert self._segments(eng, "lineitem") == [(
+                "l_discount", "l_extendedprice", "l_orderkey", "l_quantity")]
+            assert self._segments(eng, "orders") == [
+                ("o_orderdate", "o_orderkey")]
+        finally:
+            eng.set_mode("pushdown")
+            eng.clear_segment_cache()
+
+    def test_view_read_in_a_subquery_keeps_the_subquery_columns(
+            self, spark, sf_dir):
+        """A view used both in the outer query and in a scalar subquery,
+        with a column (l_tax) only the subquery reads: the working set
+        covers both uses, so the routed re-resolution succeeds."""
+        from pysparkdb.engine import Engine
+
+        q = ("SELECT COUNT(*) AS n FROM lineitem WHERE l_quantity > "
+             "(SELECT AVG(l_quantity) FROM lineitem WHERE l_tax > 0.05)")
+        eng = Engine(spark).attach(sf_dir, validate=False)
+        try:
+            want = eng.sql(q, mode="pushdown").collect()
+            assert want[0].n > 0
+            assert eng.sql(q, mode="hybrid").collect() == want
+            assert self._segments(eng, "lineitem") == [
+                ("l_quantity", "l_tax")]
+            # a subquery alias named like a registered view is not that view
+            q = ("SELECT COUNT(*) AS n FROM lineitem WHERE l_orderkey IN "
+                 "(SELECT o_orderkey FROM orders AS lineitem "
+                 "WHERE o_totalprice > 1000)")
+            want = eng.sql(q, mode="pushdown").collect()
+            assert eng.sql(q, mode="hybrid").collect() == want
+            assert self._segments(eng, "orders") == [
+                ("o_orderkey", "o_totalprice")]
+        finally:
+            eng.set_mode("pushdown")
+            eng.clear_segment_cache()
+
+    def test_dataframe_view_over_a_catalog_file_is_not_routed(
+            self, spark, sf_dir):
+        """A DataFrame temp view over a catalog table's own file is not a
+        registered view: it admits no segment and counts no cache hit or
+        miss (attribution is by view name, not by file path)."""
+        from pysparkdb.engine import Engine
+
+        eng = Engine(spark).attach(sf_dir, validate=False)
+        spark.read.parquet(eng.catalog.paths["lineitem"]) \
+            .createOrReplaceTempView("li_file")
+        q = "SELECT COUNT(*) AS n, SUM(l_quantity) AS q FROM li_file"
+        try:
+            want = eng.sql(q, mode="pushdown").collect()
+            eng.set_mode("hybrid")
+            c = eng._segment_cache
+            assert eng.sql(q).collect() == want
+            assert (c.entries, c.hit_count, c.miss_count) == ({}, 0, 0)
+        finally:
+            spark.catalog.dropTempView("li_file")
             eng.set_mode("pushdown")
             eng.clear_segment_cache()
 

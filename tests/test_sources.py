@@ -494,6 +494,55 @@ class TestSnapshotVersioning:
         keys = {r.n_nationkey for r in snapshot_read(spark, root, 1).collect()}
         assert keys == set(range(10))
 
+    def test_racing_commits_of_one_version_keep_the_first(self, tmp_path):
+        """Manifests publish create-only: a second commit of the same
+        version raises ConcurrentAppendError (the object-store tier's
+        class) and leaves the first manifest intact."""
+        from pysparkdb.sources import ConcurrentAppendError
+        from pysparkdb.sources.versioned import _commit, _read_manifest
+
+        root = str(tmp_path / "snap")
+        _commit(root, 1, ["data/a.parquet"], 3, None)
+        with pytest.raises(ConcurrentAppendError, match="concurrently"):
+            _commit(root, 1, ["data/b.parquet"], 5, None)
+        m = _read_manifest(root, 1)
+        assert (m["files"], m["n_rows"]) == (["data/a.parquet"], 3)
+        mdir = os.path.join(root, "_manifests")
+        assert os.listdir(mdir) == ["v1.json"], "tmp manifest left behind"
+
+    def test_append_racing_another_append_raises(
+            self, spark, sf_dir, tmp_path, monkeypatch):
+        """An append commits at the version after the manifest it read:
+        another append landing while it stages makes it raise, instead of
+        publishing a file list that drops the other append's files."""
+        from pysparkdb.sources import ConcurrentAppendError
+        from pysparkdb.sources import versioned
+        from pysparkdb.sources.versioned import (
+            snapshot_append, snapshot_read, snapshot_versions,
+        )
+
+        root = str(tmp_path / "snap")
+        nation = tables(spark, sf_dir)["nation"]
+        snapshot_append(nation.filter(F.col("n_nationkey") < 5), root)  # v1
+        stage = versioned._stage_batch
+        raced = []
+
+        def stage_after_a_rival_append(*a, **kw):
+            if not raced:
+                raced.append(None)  # the rival stages through here too
+                raced[0] = snapshot_append(
+                    nation.filter(F.col("n_nationkey") >= 20), root)
+            return stage(*a, **kw)
+
+        monkeypatch.setattr(versioned, "_stage_batch",
+                            stage_after_a_rival_append)
+        with pytest.raises(ConcurrentAppendError):
+            snapshot_append(
+                nation.filter(F.col("n_nationkey").between(5, 9)), root)
+        assert raced == [2] and snapshot_versions(root) == [1, 2]
+        keys = {r.n_nationkey for r in snapshot_read(spark, root).collect()}
+        assert keys == set(range(5)) | set(range(20, 25))
+
     def test_snapshot_gc_age_horizon(self, spark, sf_dir, tmp_path):
         """older_than_s is the Delta VACUUM-RETAIN-shaped age horizon:
         versions whose manifest mtime is beyond the age drop (their
