@@ -85,8 +85,8 @@ from typing import NamedTuple  # noqa: E402
 
 
 class _View(NamedTuple):
-    """One registered view the engine may swap: a catalog table, a local
-    attach_snapshot pin or a remote attach_arrow_s3(_snapshot) view."""
+    """One registered view the engine may swap: a catalog table, an
+    attach_snapshot pin (local or remote) or an attach_arrow_s3 view."""
 
     df: DataFrame      # the registered plan (liveness is checked against it)
     # stable identity for cache keys (``name@origin``): the catalog's
@@ -122,7 +122,7 @@ class Engine:
         self.catalog: Catalog | None = None
         self._mode = "pushdown"
         self._segment_cache = None
-        # Every view attach, attach_snapshot and attach_arrow_s3(_snapshot)
+        # Every view attach, attach_snapshot and attach_arrow_s3
         # registered, by name (the latest registration of a name wins):
         # the base tables of the predicate-transfer pass and the views
         # cache routing swaps. A view replaced or dropped by other means
@@ -252,8 +252,19 @@ class Engine:
             self.catalog = Catalog(self.spark, data_dir).register_all(
                 validate=validate)
         for name, df in self.catalog.tables.items():
-            self._views[name] = _View(df, self.catalog.data_dir)
+            self._register(name, _View(df, self.catalog.data_dir))
         return self
+
+    def _register(self, name: str, view: _View) -> None:
+        """Record ``view`` under ``name``. If the name was registered
+        before, the segments cached under its old origin are released:
+        the data under an origin can change (a directory or prefix
+        rewritten in place, a snapshot root rebuilt at the same path), and
+        a later routing of the name must not be served stale rows."""
+        old = self._views.get(name)
+        if old is not None and self._segment_cache is not None:
+            self._segment_cache.release(f"{name}@{old.origin}")
+        self._views[name] = view
 
     def sql(
         self,
@@ -462,7 +473,7 @@ class Engine:
         pushdown confs — off in caching mode, on in hybrid); repeats and
         subset requests serve from the InMemoryRelation.
 
-        Remote-attached views (attach_arrow_s3 / attach_arrow_s3_snapshot)
+        Remote views (attach_arrow_s3, attach_snapshot of an S3Root)
         route through the SAME cache — the reference's hybrid economics
         (hot columns cached compute-side, cold pushed to storage:
         PrePToS3PTransformer.cpp:309-461) apply to actual remote data,
@@ -561,108 +572,47 @@ class Engine:
         return self.catalog.table(name)
 
     def attach_snapshot(
-        self, name: str, root: str, version: int | str | None = None,
+        self, name: str, root, version: int | str | None = None,
         replace: bool = False,
     ) -> DataFrame:
-        """Register a snapshot-versioned dataset (sources/versioned.py) as
-        a queryable view — time travel through the same SQL front door:
-        ``engine.attach_snapshot("docs", root, version=3)`` then
-        ``engine.sql("SELECT ... FROM docs")`` reads exactly version 3's
-        manifest, frozen while ingest appends new versions. Shadowing an
-        already-registered view refuses without ``replace=True`` — the
-        same session-catalog guard as attach_arrow_s3: silently
-        repointing every registered query at the snapshot is the exact
-        suite-poisoning bug the guard exists for (re-pinning the same
-        name at another version is the legitimate replace=True case)."""
-        from pysparkdb.sources.versioned import snapshot_read
+        """Register a snapshot (sources/versioned.py) pinned at ``version``
+        (default latest; a string is a tag name) as a queryable view —
+        time travel through the same SQL front door, for a local root or
+        an ``S3Root``: ``engine.attach_snapshot("docs", root, version=3)``
+        then ``engine.sql("SELECT ... FROM docs")`` reads exactly version
+        3's manifest, frozen while ingest appends new versions. The view,
+        its version and its cache origin (``root@vN``, ``uri@vN``) come
+        from ONE manifest read, so a concurrent append can never make
+        them name different versions (two pins of one root at different
+        versions must never share a cached segment). A version whose
+        manifest lists no files (an all-rows-erased rewrite) registers as
+        the EMPTY view under its recorded schema. Local views are sized by
+        their plan stats; remote views record the manifest's object list
+        (arrow_s3_table_stats profiles it with no LIST) and byte total.
+        Shadowing an already-registered view refuses without
+        ``replace=True`` — the same session-catalog guard as
+        attach_arrow_s3: silently repointing every registered query at
+        the snapshot is the exact suite-poisoning bug the guard exists
+        for (re-pinning the same name at another version is the
+        legitimate replace=True case)."""
+        from pysparkdb.sources.arrow_s3 import S3Root
+        from pysparkdb.sources.versioned import _frame, _pinned, _store
 
         if not replace and self.spark.catalog.tableExists(name):
             raise ValueError(
                 f"attach_snapshot({name!r}) would replace an "
                 f"already-registered view; pass replace=True to do this "
                 f"deliberately (no view was touched)")
-        # Resolve the pinned version (tag name / None-latest -> int)
-        # BEFORE reading, and read at the resolved int: resolving after
-        # snapshot_read would let a concurrent append (or tag move)
-        # between the two calls record origin root@vN+1 while the
-        # registered df actually reads vN — in caching/hybrid mode a
-        # later pin at the real vN+1 could then share cached segments
-        # with this stale view. Resolving first guarantees the df and
-        # its cache-identity origin name the same version (two pins of
-        # the same root at different versions must never share a
-        # cached segment).
-        from pysparkdb.sources.versioned import (
-            _resolve_version,
-            snapshot_versions,
-        )
-
-        resolved = _resolve_version(root, version)
-        if resolved is None:
-            versions = snapshot_versions(root)
-            if not versions:
-                raise ValueError(
-                    f"no snapshot versions committed under {root!r}")
-            resolved = versions[-1]
-        df = snapshot_read(self.spark, root, resolved)
+        store = _store(root)
+        version, m = _pinned(store, version)
+        df = _frame(self.spark, store, version, m)
+        view = _View(df, f"{store.name}@v{version}")
+        if isinstance(root, S3Root):
+            view = view._replace(files=[store.path(f) for f in m["files"]],
+                                 conf=root.conf, nbytes=m.get("bytes"))
         self._forget_routes()
         df.createOrReplaceTempView(name)
-        self._views[name] = _View(df, f"{root}@v{resolved}")
-        return df
-
-    def attach_arrow_s3_snapshot(
-        self, name: str, uri: str, conf, version: int | str | None = None,
-        replace: bool = False,
-    ) -> DataFrame:
-        """Register an object-store manifest snapshot as a queryable view
-        pinned at ``version`` (default latest) — the remote twin of
-        ``attach_snapshot``, completing the reproducible-training-
-        snapshot workflow for remote corpora at the engine front door:
-        ``engine.attach_arrow_s3_snapshot("docs", root, conf, version=3)``
-        then ``engine.sql("SELECT ... FROM docs")`` reads exactly version
-        3's manifest, frozen while ingest appends new versions. Planning
-        is the manifest's EXPLICIT file list (no LIST over the data
-        prefix, no eventual-consistency window), and the same list is
-        recorded for ``arrow_s3_table_stats`` so the footer-stats
-        profile of the pinned view issues zero further LISTs. A version
-        whose manifest lists NO objects (an all-rows-erased
-        ``arrow_s3_snapshot_rewrite`` — the erasure terminal state)
-        registers as the EMPTY view under its committed schema, exactly
-        as ``arrow_s3_snapshot_read`` reads it: the engine front door
-        must be able to pin what the read path can read. Shadowing an
-        already-registered view refuses without ``replace=True``,
-        exactly as attach_arrow_s3."""
-        import json as _json
-
-        from pyspark.sql import types as T
-
-        from pysparkdb.sources.arrow_s3 import (
-            _read_parquet_files,
-            _snapshot_manifest_files,
-        )
-
-        if not replace and self.spark.catalog.tableExists(name):
-            raise ValueError(
-                f"attach_arrow_s3_snapshot({name!r}) would replace an "
-                f"already-registered view; pass replace=True to do this "
-                f"deliberately (no view was touched)")
-        _version, files, manifest = _snapshot_manifest_files(
-            conf, uri, version)
-        if files:
-            df = _read_parquet_files(self.spark, files, conf)
-        else:
-            schema_json = manifest.get("schema")
-            if schema_json is None:
-                raise ValueError(
-                    f"version {_version} is empty and predates schema "
-                    f"recording — nothing to reconstruct a view from")
-            from pysparkdb.sources.versioned import empty_frame
-
-            df = empty_frame(
-                self.spark, T.StructType.fromJson(_json.loads(schema_json)))
-        self._forget_routes()
-        df.createOrReplaceTempView(name)
-        self._views[name] = _View(
-            df, f"{uri}@v{_version}", files, conf, manifest.get("bytes"))
+        self._register(name, view)
         return df
 
     def attach_arrow_s3(
@@ -741,8 +691,8 @@ class Engine:
         for name, files in sorted(groups.items()):
             df = _read_parquet_files(self.spark, sorted(files), conf)
             df.createOrReplaceTempView(name)
-            self._views[name] = _View(
-                df, f"{prefix}/{name}", sorted(files), conf, sizes[name])
+            self._register(name, _View(
+                df, f"{prefix}/{name}", sorted(files), conf, sizes[name]))
             out[name] = df
         return out
 

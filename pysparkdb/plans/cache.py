@@ -271,6 +271,12 @@ class SegmentCacheManager:
         e.df.unpersist()
         self.used -= e.size_bytes
 
+    def release(self, table: str) -> None:
+        """Evict every segment cached for ``table`` (the engine's
+        ``name@origin`` key) — the data behind the key was replaced."""
+        for key in [k for k in self.entries if k[0] == table]:
+            self._evict(key)
+
     def hit_ratio(self) -> float:
         """getCrtQueryHitRatio analog (reference TestUtil.cpp:404-406)."""
         total = self.hit_count + self.miss_count

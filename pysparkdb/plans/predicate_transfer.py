@@ -295,7 +295,7 @@ def extract_join_edges(df: DataFrame, tables: dict[str, DataFrame]) -> list[Join
         # Origin nodes producing a table's columns: file-source scans
         # (LogicalRelation) AND the jar-less remote scan shape — a
         # mapInArrow node whose output IS the attached view's schema
-        # (Engine.attach_arrow_s3 / attach_arrow_s3_snapshot register
+        # (Engine.attach_arrow_s3 and a remote attach_snapshot register
         # _read_parquet_files plans; their leaf is the task list, so the
         # MapInArrow node is where the table's attributes are minted).
         # Same signature matching, same ambiguity exclusion.

@@ -7,12 +7,13 @@ solve this with a transaction log over immutable data files; this module
 implements the minimal core of that idea with nothing but parquet + JSON:
 
 - data files are IMMUTABLE: every append writes a fresh uniquely-named
-  ``data/batch-N-<uuid>/`` directory and never touches earlier files;
-- a version is a MANIFEST (``_manifests/v{N}.json``): the explicit list of
-  data files visible at that version, plus row counts for audit;
-- reading version N is ``spark.read.parquet(*manifest(N).files)`` — Spark
-  plans exactly those splits, so old versions stay readable forever and
-  concurrent readers of different versions never conflict;
+  ``data/batch-<uuid>/`` directory and never touches earlier files;
+- a version is a MANIFEST (``_manifests/v{N}.json``, N from 1): the
+  explicit list of data files visible at that version (relative to the
+  root), plus row and byte counts for audit and sizing;
+- reading version N plans exactly ``manifest(N).files`` — so old versions
+  stay readable forever and concurrent readers of different versions
+  never conflict;
 - compaction rewrites the CURRENT file set into fewer files as a new
   version; history before it is untouched (the file list, not the data,
   is the unit of change);
@@ -20,21 +21,32 @@ implements the minimal core of that idea with nothing but parquet + JSON:
   log-recorded-schema idea): appends may add new nullable columns, and
   every read declares the manifest schema explicitly, so old files serve
   NULL for later columns and a mixed-schema file list can never depend on
-  which footer Spark happens to sample (without a declared schema, a
-  column added in batch 7 silently vanishes whenever the sampled footer
-  predates it).
+  which footer the reader happens to sample.
+
+One protocol, two stores. Every ``snapshot_*`` call takes a ``root`` that
+is either a local directory or an ``arrow_s3.S3Root(uri, conf)``. The
+protocol (tags, version resolution, append, compact, rewrite, read, diff,
+GC, the epoch sink) is written once here against a small store interface:
+the manifest and tag calls ``list``, ``get``, ``put_if_absent``, ``put``
+and ``delete``, and the data calls ``write_parquet`` and ``read_parquet``.
+``_LocalStore`` below is the filesystem store; the S3 store lives in
+arrow_s3.py beside the jar-less reader and writer.
 
 Concurrent writers: a commit publishes manifest v{N+1}, where N is the
-version its writer read, CREATE-ONLY (written to a temp name, then
-hard-linked into place), so readers never observe a torn manifest and two
-writers racing for the same version cannot both succeed: the loser raises
-ConcurrentAppendError — the object-store tier's conditional-PUT contract —
-and its staged files stay unreferenced until snapshot_gc collects them.
+version its writer read, through the store's ``put_if_absent`` — locally a
+temp file hard-linked into place, on S3 a conditional PUT checked by
+reading the manifest back — so readers never observe a torn manifest and
+two writers racing for one version cannot both succeed. The loser raises
+ConcurrentAppendError; with ``retries=N`` an append instead re-commits
+its already written batch on the new latest version (the batch directory
+is version-agnostic: only the manifest binds it to a version). A batch
+that is never committed stays unreferenced until snapshot_gc collects it.
 
 This composes with the rest of the engine: the reference's catalog is
 static JSON metadata over immutable S3 objects
 (fpdb-catalogue/src/obj-store/ObjStoreCatalogueEntryReader.cpp) — a
-manifest is the same idea made multi-version.
+manifest is the same idea made multi-version, and the store holding the
+objects changes only how they are fetched.
 """
 
 from __future__ import annotations
@@ -43,145 +55,44 @@ import errno
 import json
 import os
 import re
+import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 _MANIFEST_DIR = "_manifests"
 _DATA_DIR = "data"
 _REFS_DIR = "_refs"
-
-
-def _manifest_path(root: str, version: int) -> str:
-    return os.path.join(root, _MANIFEST_DIR, f"v{version}.json")
-
-
-def _ref_path(root: str, name: str) -> str:
-    if not re.fullmatch(r"[A-Za-z0-9][A-Za-z0-9._-]*", name):
-        # the name doubles as a filename/object key; reject separators
-        # and dotfiles before they hit the filesystem
-        raise ValueError(f"invalid tag name {name!r}")
-    return os.path.join(root, _REFS_DIR, f"{name}.json")
-
-
-def snapshot_tag(
-    root: str, name: str, version: int | None = None, replace: bool = False
-) -> int:
-    """Pin ``version`` (default: latest) under a NAMED TAG — the
-    Iceberg-tag analog for the reproducible-training workflow: a training
-    run tags the corpus it read (``snapshot_tag(root, "train-v1")``) and
-    every later reader resolves the name (``snapshot_read(spark, root,
-    "train-v1")``, ``Engine.attach_snapshot(..., version="train-v1")``)
-    instead of copying an integer between systems. A tagged version is
-    RETENTION-PINNED: snapshot_gc's horizons never expire it until the
-    tag is deleted (``snapshot_untag``) — the property that makes a tag
-    a contract rather than a comment. Overwriting an existing tag
-    refuses without ``replace=True`` (silently moving a name every
-    consumer resolves is the shadowing bug class again). Returns the
-    pinned version."""
-    versions = snapshot_versions(root)
-    if not versions:
-        raise ValueError(f"no snapshot versions committed under {root!r}")
-    version = versions[-1] if version is None else version
-    if version not in versions:
-        raise ValueError(f"version {version} not in {versions}")
-    path = _ref_path(root, name)
-    if not replace and os.path.exists(path):
-        raise ValueError(
-            f"tag {name!r} already exists (-> v{json.load(open(path))['version']}); "
-            f"pass replace=True to move it deliberately")
-    os.makedirs(os.path.join(root, _REFS_DIR), exist_ok=True)
-    try:
-        _publish(path, {"version": version}, replace=replace)
-    except FileExistsError:
-        raise ValueError(
-            f"tag {name!r} already exists "
-            f"(-> v{json.load(open(path))['version']}); "
-            f"pass replace=True to move it deliberately") from None
-    return version
-
-
-def snapshot_tags(root: str) -> dict[str, int]:
-    """All tags under the root as {name: version}."""
-    rdir = os.path.join(root, _REFS_DIR)
-    if not os.path.isdir(rdir):
-        return {}
-    out: dict[str, int] = {}
-    for fname in os.listdir(rdir):
-        if not fname.endswith(".json") or ".tmp-" in fname:
-            continue
-        with open(os.path.join(rdir, fname)) as f:
-            out[fname[:-len(".json")]] = json.load(f)["version"]
-    return out
-
-
-def snapshot_untag(root: str, name: str) -> None:
-    """Delete a tag — releasing its retention pin (the version becomes
-    expirable by the next snapshot_gc horizon like any other)."""
-    try:
-        os.remove(_ref_path(root, name))
-    except FileNotFoundError:
-        raise ValueError(
-            f"tag {name!r} not found (have: {sorted(snapshot_tags(root))})"
-        ) from None
-
-
-def empty_frame(spark: SparkSession, schema) -> DataFrame:
-    """Zero-row frame under ``schema``, built JVM-side (range(0) +
-    NULL-literal casts — handles nested types: CAST(NULL AS struct<...>)
-    is valid for any Spark type). ``spark.createDataFrame([], schema)``
-    would route even an EMPTY local list through the Python-worker RDD
-    path, putting a PythonWorkerFactory dependency (and its documented
-    pool-restart artifact) inside otherwise JVM-pure attach/read plans —
-    the round-14/15 certificate-query excision, applied to the erased-
-    snapshot reconstruction path."""
-    return spark.range(0).select(
-        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
-    )
-
-
-def _resolve_version(root: str, version: int | str | None) -> int | None:
-    """Tag names resolve to their pinned version; ints/None pass through."""
-    if not isinstance(version, str):
-        return version
-    tags = snapshot_tags(root)
-    if version not in tags:
-        raise ValueError(
-            f"tag {version!r} not found (have: {sorted(tags)})")
-    return tags[version]
-
-
-def snapshot_versions(root: str) -> list[int]:
-    """Committed versions, ascending (1-based)."""
-    mdir = os.path.join(root, _MANIFEST_DIR)
-    if not os.path.isdir(mdir):
-        return []
-    out = []
-    for name in os.listdir(mdir):
-        m = re.fullmatch(r"v(\d+)\.json", name)
-        if m:  # skip editor artifacts / tmp files rather than brick the root
-            out.append(int(m.group(1)))
-    return sorted(out)
-
-
-def _read_manifest(root: str, version: int) -> dict:
-    try:
-        with open(_manifest_path(root, version)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        # the same error contract as snapshot_read: callers catch
-        # ValueError and see the available versions, not an internal path
-        raise ValueError(
-            f"version {version} not in {snapshot_versions(root)} under {root!r}"
-        ) from None
+# the parent of a root's first version
+_EMPTY = {"files": [], "n_rows": 0, "bytes": 0, "schema": None}
 
 
 class ConcurrentAppendError(RuntimeError):
     """Another writer committed the same snapshot version first (local
-    or object-store tier). The losing append's data files are
+    or object-store root). The losing commit's data files are
     unreferenced (invisible to every reader; the GC pass expires them) —
-    retry the whole append to land the batch on the new latest version."""
+    retry the whole append (or pass ``retries=``) to land the batch on
+    the new latest version."""
+
+
+def _manifest_key(version: int) -> str:
+    return f"{_MANIFEST_DIR}/v{version}.json"
+
+
+def _ref_key(name: str) -> str:
+    if not re.fullmatch(r"[A-Za-z0-9][A-Za-z0-9._-]*", name):
+        # the name doubles as a filename/object key; reject separators
+        # and dotfiles before they reach the store
+        raise ValueError(f"invalid tag name {name!r}")
+    return f"{_REFS_DIR}/{name}.json"
+
+
+def _is_sidecar(name: str) -> bool:
+    # _SUCCESS, .crc, editor dotfiles: never manifest-listed
+    return name.startswith(("_", "."))
 
 
 def _publish(path: str, body: dict, replace: bool = False) -> None:
@@ -189,12 +100,13 @@ def _publish(path: str, body: dict, replace: bool = False) -> None:
     renamed (``replace=True``) or published CREATE-ONLY — FileExistsError
     when ``path`` exists. An exists-check followed by rename would
     silently overwrite on POSIX, so two racing creators would both
-    "succeed" last-writer-wins — the race the remote tier closes with a
+    "succeed" last-writer-wins — the race the S3 store closes with a
     conditional PUT. os.link refuses when the target exists. Filesystems
     WITHOUT hard-link support (some NFS/overlay/FAT mounts) raise
     OSError(EPERM/ENOTSUP) instead; there open(path, 'x') (O_CREAT|O_EXCL)
     gives the same create-only guarantee, at the cost of writing the
     payload twice and of a reader possibly seeing it half-written."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
     tmp = path + f".tmp-{uuid.uuid4().hex}"
     with open(tmp, "w") as f:
         json.dump(body, f)
@@ -216,20 +128,271 @@ def _publish(path: str, body: dict, replace: bool = False) -> None:
             pass
 
 
-def _commit(root: str, version: int, files: list[str], n_rows: int, parent: int | None,
-            epoch: int | None = None, schema: dict | None = None) -> None:
-    """Publish version ``version``'s manifest; ConcurrentAppendError if
-    another writer committed that version first (its manifest is kept)."""
-    os.makedirs(os.path.join(root, _MANIFEST_DIR), exist_ok=True)
-    body = {"version": version, "files": sorted(files), "n_rows": n_rows,
-            "parent": parent, "epoch": epoch, "schema": schema}
+class _LocalStore:
+    """A snapshot root on a local (or mounted) filesystem. Keys are
+    root-relative paths."""
+
+    def __init__(self, root: str):
+        self.name = root
+
+    def path(self, key: str) -> str:
+        return os.path.join(self.name, key)
+
+    def list(self, prefix: str, recursive: bool = False) -> dict[str, float]:
+        """{key: mtime} of the files under ``prefix``, sidecars skipped."""
+        out: dict[str, float] = {}
+        for dirpath, _dirs, files in os.walk(self.path(prefix)):
+            for name in files:
+                if _is_sidecar(name):
+                    continue
+                full = os.path.join(dirpath, name)
+                try:
+                    out[os.path.relpath(full, self.name)] = \
+                        os.path.getmtime(full)
+                except FileNotFoundError:
+                    pass  # removed while listing
+            if not recursive:
+                break
+        return out
+
+    def get(self, key: str) -> dict | None:
+        try:
+            with open(self.path(key)) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return None
+
+    def put_if_absent(self, key: str, body: dict) -> None:
+        _publish(self.path(key), body)
+
+    def put(self, key: str, body: dict) -> None:
+        _publish(self.path(key), body, replace=True)
+
+    def delete(self, key: str) -> None:
+        """Remove ``key``; a data directory left without a data file goes
+        too, with its sidecars (so GC leaves no empty batch directories)."""
+        path = self.path(key)
+        try:
+            os.remove(path)
+        except FileNotFoundError:
+            pass
+        top = self.path(_DATA_DIR)
+        d = os.path.dirname(path)
+        while d.startswith(top + os.sep):
+            try:
+                names = os.listdir(d)
+            except FileNotFoundError:
+                break
+            if any(not _is_sidecar(n) for n in names):
+                break
+            for n in names:
+                try:
+                    os.remove(os.path.join(d, n))
+                except OSError:
+                    pass  # a sidecar directory (_temporary): dir stays
+            try:
+                os.rmdir(d)
+            except OSError:
+                break
+            d = os.path.dirname(d)
+
+    def write_parquet(
+        self, df: DataFrame, prefix: str, row_group_bytes: int | None = None
+    ) -> tuple[list[str], int, int]:
+        """Write ``df`` as the new directory ``prefix``: (file keys, rows,
+        bytes). Rows come from the parquet footers (the catalog.zone_map
+        pattern) — no Spark job per commit."""
+        import pyarrow.parquet as pq
+
+        w = df.write.mode("error")
+        if row_group_bytes is not None:
+            w = w.option("parquet.block.size", str(row_group_bytes))
+        w.parquet(self.path(prefix))
+        files = sorted(k for k in self.list(prefix) if k.endswith(".parquet"))
+        paths = [self.path(k) for k in files]
+        return (files, sum(pq.read_metadata(p).num_rows for p in paths),
+                sum(os.path.getsize(p) for p in paths))
+
+    def read_parquet(
+        self, spark: SparkSession, files: list[str], schema
+    ) -> DataFrame:
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*[self.path(f) for f in files])
+
+
+def _store(root):
+    if isinstance(root, (str, os.PathLike)):
+        return _LocalStore(os.fspath(root))
+    from pysparkdb.sources.arrow_s3 import S3Root, _S3Store
+
+    if isinstance(root, S3Root):
+        return _S3Store(root)
+    raise TypeError(
+        f"a snapshot root is a local path or an S3Root, got {root!r}")
+
+
+def _versions(store, listed: dict | None = None) -> list[int]:
+    """Committed versions, ascending. Only ``v<digits>.json`` names count:
+    editor artifacts and temp files must not brick the root."""
+    if listed is None:
+        listed = store.list(_MANIFEST_DIR)
+    out = []
+    for key in listed:
+        m = re.fullmatch(r"v(\d+)\.json", key.rsplit("/", 1)[-1])
+        if m:
+            out.append(int(m.group(1)))
+    return sorted(out)
+
+
+def _manifest(store, version: int) -> dict:
+    m = store.get(_manifest_key(version))
+    if m is None:
+        # callers catch ValueError and see the available versions, not
+        # an internal path
+        versions = _versions(store)
+        if not versions:
+            raise ValueError(
+                f"no snapshot versions committed under {store.name!r}")
+        raise ValueError(
+            f"version {version} not in {versions} under {store.name!r}")
+    return m
+
+
+def _head(store) -> tuple[list[int], dict]:
+    """(committed versions, the latest manifest — _EMPTY for none)."""
+    versions = _versions(store)
+    if not versions:
+        return [], dict(_EMPTY)
+    return versions, _manifest(store, versions[-1])
+
+
+def _tags(store) -> dict[str, int]:
+    out: dict[str, int] = {}
+    for key in store.list(_REFS_DIR):
+        fname = key.rsplit("/", 1)[-1]
+        if not fname.endswith(".json") or ".tmp-" in fname:
+            continue
+        body = store.get(key)
+        if body is not None:  # untagged while listing
+            out[fname[:-len(".json")]] = body["version"]
+    return out
+
+
+def _pinned(store, version: int | str | None) -> tuple[int, dict]:
+    """(version, manifest) for a version, a tag name or None (latest).
+    A known version costs one manifest read and no listing."""
+    if isinstance(version, str):
+        tags = _tags(store)
+        if version not in tags:
+            raise ValueError(
+                f"tag {version!r} not found (have: {sorted(tags)})")
+        version = tags[version]
+    if version is None:
+        versions = _versions(store)
+        if not versions:
+            raise ValueError(
+                f"no snapshot versions committed under {store.name!r}")
+        version = versions[-1]
+    return version, _manifest(store, version)
+
+
+def _schema(m: dict) -> dict | None:
+    """A manifest's recorded schema; manifests written by earlier
+    object-store code hold it as a JSON string."""
+    s = m.get("schema")
+    return json.loads(s) if isinstance(s, str) else s
+
+
+def _struct(m: dict):
+    s = _schema(m)
+    return None if s is None else T.StructType.fromJson(s)
+
+
+def _manifest_epoch(m: dict) -> int | None:
+    """The newest micro-batch epoch a manifest answers for: its own
+    ``epoch`` (a streaming commit) or the ``last_epoch`` that every other
+    commit PROPAGATES from its parent. The propagation keeps the replay
+    guard to one manifest read: without it a maintenance-only tail
+    (compactions, erasure rewrites, manual appends) would make every
+    micro-batch commit read backwards through all of it. Manifests
+    predating the field fall through to the bounded walk."""
+    e = m.get("epoch")
+    return e if e is not None else m.get("last_epoch")
+
+
+def _commit(
+    store, versions: list[int], parent: dict, files: list[str],
+    n_rows: int, nbytes: int | None, schema: dict | None, token: str,
+    epoch: int | None = None, **flags,
+) -> int:
+    """Publish the manifest of the version after ``versions[-1]``;
+    ConcurrentAppendError if another writer committed it first (its
+    manifest is kept). ``token`` is unique per writer — the collision
+    witness of stores that check a PUT by reading it back."""
+    version = (versions[-1] if versions else 0) + 1
+    body = {"version": version, "parent": versions[-1] if versions else None,
+            "files": sorted(files), "n_rows": n_rows, "schema": schema,
+            "commit_token": token, **flags}
+    # total data bytes the version references: sizes a remote snapshot
+    # view without a LIST. Unknown (omitted) when the parent predates the
+    # field — a partial sum would understate the table
+    if nbytes is not None:
+        body["bytes"] = nbytes
+    if epoch is not None:
+        body["epoch"] = epoch  # the streaming replay guard's provenance
+    elif _manifest_epoch(parent) is not None:
+        body["last_epoch"] = _manifest_epoch(parent)
     try:
-        _publish(_manifest_path(root, version), body)
-    except FileExistsError:
+        store.put_if_absent(_manifest_key(version), body)
+    except FileExistsError as exc:
         raise ConcurrentAppendError(
-            f"version {version} under {root!r} was committed concurrently "
-            f"by another writer; this commit's files are unreferenced — "
-            f"retry to land them on the new latest version") from None
+            f"version {version} under {store.name!r} was committed "
+            f"concurrently by another writer ({exc}); this commit's files "
+            f"are unreferenced — retry to land them on the new latest "
+            f"version") from None
+    return version
+
+
+def _stage(store, df: DataFrame, kind: str, row_group_bytes=None):
+    """Write ``df`` as a new immutable ``data/{kind}-<uuid>/`` directory:
+    (files, rows, bytes, commit token). The uuid makes a failed write
+    recoverable — a crash before the manifest publish leaves a directory
+    no manifest references (snapshot_gc collects it after the grace
+    window), and the retry writes a fresh one."""
+    token = f"{kind}-{uuid.uuid4().hex}"
+    files, n_rows, nbytes = store.write_parquet(
+        df, f"{_DATA_DIR}/{token}", row_group_bytes)
+    return files, n_rows, nbytes, token
+
+
+def _frame(spark: SparkSession, store, version: int, m: dict) -> DataFrame:
+    """The rows of manifest ``m`` under its recorded schema. A version
+    listing NO files (an all-rows-erased ``snapshot_rewrite``, the erasure
+    terminal state) is the EMPTY frame under that schema: an unreadable
+    latest version would strand the store until the next append."""
+    schema = _struct(m)
+    if m["files"]:
+        # legacy pre-schema manifests (schema None) keep the inferred read
+        return store.read_parquet(spark, m["files"], schema)
+    if schema is None:
+        raise ValueError(
+            f"version {version} is empty and predates schema recording — "
+            f"nothing to reconstruct a frame from")
+    return empty_frame(spark, schema)
+
+
+def empty_frame(spark: SparkSession, schema) -> DataFrame:
+    """Zero-row frame under ``schema``, built JVM-side (range(0) +
+    NULL-literal casts — handles nested types: CAST(NULL AS struct<...>)
+    is valid for any Spark type). ``spark.createDataFrame([], schema)``
+    would route even an EMPTY local list through the Python-worker RDD
+    path, putting a PythonWorkerFactory dependency (and its documented
+    pool-restart artifact) inside otherwise JVM-pure attach/read plans —
+    the round-14/15 certificate-query excision, applied to the erased-
+    snapshot reconstruction path."""
+    return spark.range(0).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+    )
 
 
 def _schema_dict(df_schema) -> dict:
@@ -237,13 +400,9 @@ def _schema_dict(df_schema) -> dict:
     normalized to nullable — parquet treats all columns as optional, and a
     version's schema must admit later appends that omit a column (their
     rows read as NULL)."""
-    from pyspark.sql import types as T
-
-    return json.loads(
-        T.StructType(
-            [T.StructField(f.name, f.dataType, True) for f in df_schema.fields]
-        ).json()
-    )
+    return T.StructType(
+        [T.StructField(f.name, f.dataType, True) for f in df_schema.fields]
+    ).jsonValue()
 
 
 def _merge_schema(parent: dict | None, df_schema) -> dict:
@@ -255,8 +414,6 @@ def _merge_schema(parent: dict | None, df_schema) -> dict:
     migration), and parent columns the frame omits REMAIN (the new rows
     read as NULL there). Column order: parent columns first, new columns
     appended in frame order."""
-    from pyspark.sql import types as T
-
     incoming = _schema_dict(df_schema)
     if parent is None:
         return incoming
@@ -280,321 +437,235 @@ def _merge_schema(parent: dict | None, df_schema) -> dict:
     return out
 
 
-def snapshot_schema(root: str, version: int | str | None = None):
-    """The recorded StructType of ``version`` (default: latest; a string
-    is a tag name), or None for a pre-schema-evolution manifest (legacy
-    roots keep their original sampled-footer read path)."""
-    from pyspark.sql import types as T
+def snapshot_versions(root) -> list[int]:
+    """Committed versions, ascending (from 1; object-store roots written
+    by earlier code may also hold a v0)."""
+    return _versions(_store(root))
 
-    version = _resolve_version(root, version)
-    versions = snapshot_versions(root)
+
+def snapshot_tag(
+    root, name: str, version: int | None = None, replace: bool = False
+) -> int:
+    """Pin ``version`` (default: latest) under a NAMED TAG — the
+    Iceberg-tag analog for the reproducible-training workflow: a training
+    run tags the corpus it read (``snapshot_tag(root, "train-v1")``) and
+    every later reader resolves the name (``snapshot_read(spark, root,
+    "train-v1")``, ``Engine.attach_snapshot(..., version="train-v1")``)
+    instead of copying an integer between systems. A tagged version is
+    RETENTION-PINNED: snapshot_gc's horizons never expire it until the
+    tag is deleted (``snapshot_untag``) — the property that makes a tag
+    a contract rather than a comment. Overwriting an existing tag
+    refuses without ``replace=True`` (silently moving a name every
+    consumer resolves is the shadowing bug class again), and two writers
+    racing to create one tag cannot both win: the tag is published
+    create-only, like a manifest. Returns the pinned version."""
+    store = _store(root)
+    key = _ref_key(name)
+    versions = _versions(store)
     if not versions:
-        raise ValueError(f"no snapshot versions committed under {root!r}")
-    m = _read_manifest(root, versions[-1] if version is None else version)
-    s = m.get("schema")
-    return None if s is None else T.StructType.fromJson(s)
-
-
-def _parquet_files(d: str) -> list[str]:
-    return [
-        os.path.join(d, f)
-        for f in os.listdir(d)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    ]
-
-
-def _footer_rows(files: list[str]) -> int:
-    import pyarrow.parquet as pq
-
-    return sum(pq.ParquetFile(p).metadata.num_rows for p in files)
-
-
-def _latest(root: str) -> int | None:
-    versions = snapshot_versions(root)
-    return versions[-1] if versions else None
-
-
-def _stage_batch(
-    df: DataFrame, root: str, prefix: str, version: int
-) -> tuple[list[str], int]:
-    """Write ``df`` as a new immutable batch directory for ``version`` —
-    the staging half shared by snapshot_append and snapshot_rewrite (they
-    differ only in what the manifest lists). Returns (new_files_rel,
-    n_new_rows). The uuid suffix
-    makes a failed write recoverable: a crash before the manifest publish
-    leaves an orphan directory no manifest references (inert garbage,
-    snapshot_gc collects it after the grace window) and the retry writes
-    a fresh directory instead of colliding with the partial one. Row
-    count comes from parquet footers (the catalog.zone_map pattern) — no
-    Spark job per commit, which matters when every micro-batch commits."""
-    batch_dir = os.path.join(
-        root, _DATA_DIR, f"{prefix}-{version}-{uuid.uuid4().hex[:8]}"
-    )
-    df.write.mode("error").parquet(batch_dir)
-    written = _parquet_files(batch_dir)
-    new_files = [os.path.relpath(p, root) for p in written]
-    return new_files, _footer_rows(written)
-
-
-def snapshot_append(df: DataFrame, root: str, epoch: int | None = None) -> int:
-    """Append df as a new immutable batch; commit and return the new
-    version. Data lands under data/batch-{version}-{uuid}/; the manifest
-    is the parent's file list plus the new files (see _stage_batch for
-    the crash-recovery story). Schema evolution: the committed schema is
-    the parent's merged with df's — new columns append (earlier files
-    read NULL for them), omitted parent columns stay (df's rows read
-    NULL there), type changes raise BEFORE any data is staged (a failed
-    merge must not leave an orphan batch directory). The commit is at
-    the version after the manifest read here: if another writer commits
-    that version meanwhile, this append raises ConcurrentAppendError
-    rather than publish a file list that drops the other's files."""
-    parent = _latest(root)
-    prev = (
-        _read_manifest(root, parent)
-        if parent is not None
-        else {"files": [], "n_rows": 0, "schema": None}
-    )
-    schema = _merge_schema(prev.get("schema"), df.schema)
-    version = (parent or 0) + 1
-    new_files, n_new = _stage_batch(df, root, "batch", version)
-    _commit(root, version, prev["files"] + new_files, prev["n_rows"] + n_new, parent,
-            epoch=epoch, schema=schema)
+        raise ValueError(f"no snapshot versions committed under {store.name!r}")
+    version = versions[-1] if version is None else version
+    if version not in versions:
+        raise ValueError(f"version {version} not in {versions}")
+    if replace:
+        store.put(key, {"version": version})
+        return version
+    try:
+        store.put_if_absent(key, {"version": version})
+    except FileExistsError:
+        have = store.get(key) or {"version": "?"}
+        raise ValueError(
+            f"tag {name!r} already exists (-> v{have['version']}); "
+            f"pass replace=True to move it deliberately") from None
     return version
 
 
+def snapshot_tags(root) -> dict[str, int]:
+    """All tags under the root as {name: version}."""
+    return _tags(_store(root))
+
+
+def snapshot_untag(root, name: str) -> None:
+    """Delete a tag — releasing its retention pin (the version becomes
+    expirable by the next snapshot_gc horizon like any other). Raises on
+    a tag that does not exist: a typo'd untag must not silently
+    'succeed' while the real pin keeps bytes alive."""
+    store = _store(root)
+    key = _ref_key(name)
+    if store.get(key) is None:
+        raise ValueError(
+            f"tag {name!r} not found (have: {sorted(_tags(store))})")
+    store.delete(key)
+
+
+def snapshot_schema(root, version: int | str | None = None):
+    """The recorded StructType of ``version`` (default: latest; a string
+    is a tag name) — one manifest read, no data or footer is touched — or
+    None for a pre-schema-evolution manifest (legacy roots keep their
+    original sampled-footer read path)."""
+    return _struct(_pinned(_store(root), version)[1])
+
+
+def snapshot_append(
+    df: DataFrame, root, epoch: int | None = None, retries: int = 0
+) -> int:
+    """Append df as a new immutable batch; commit and return the new
+    version. The manifest is the parent's file list plus the batch's
+    files. Schema evolution: the committed schema is the parent's merged
+    with df's — new columns append (earlier files read NULL for them),
+    omitted parent columns stay (df's rows read NULL there), type changes
+    raise BEFORE any data is staged (a failed merge must not leave an
+    orphan batch directory).
+
+    The commit is at the version after the manifest read here: if another
+    writer commits that version meanwhile, the append raises
+    ConcurrentAppendError rather than publish a file list that drops the
+    other's files. With ``retries=N`` the loser lands anyway: it re-reads
+    the new latest manifest and re-commits the SAME files under the next
+    version (nothing is rewritten, and a scheduler-driven ingest needs no
+    caller loop); after N consecutive losses the error propagates and
+    the batch is left to GC. ``epoch`` records the streaming micro-batch
+    that produced the version (see commit_epoch)."""
+    return _append(_store(root), df, epoch, retries)
+
+
+def _append(store, df: DataFrame, epoch, retries: int, head=None) -> int:
+    """snapshot_append's body; ``head`` is a (versions, latest manifest)
+    pair the caller just read (commit_epoch's), used by the first attempt
+    only — a retry follows a lost race, so its head is stale by
+    definition."""
+    staged = None
+    attempt = 0
+    while True:
+        versions, prev = head if head is not None else _head(store)
+        head = None
+        schema = _merge_schema(_schema(prev), df.schema)
+        if staged is None:
+            staged = _stage(store, df, "batch")
+        files, n_rows, nbytes, token = staged
+        try:
+            return _commit(
+                store, versions, prev, prev["files"] + files,
+                prev["n_rows"] + n_rows,
+                None if prev.get("bytes") is None else prev["bytes"] + nbytes,
+                schema, token, epoch)
+        except ConcurrentAppendError:
+            attempt += 1
+            if attempt > retries:
+                raise
+
+
 def snapshot_read(
-    spark: SparkSession, root: str, version: int | str | None = None
+    spark: SparkSession, root, version: int | str | None = None
 ) -> DataFrame:
     """Read the dataset as of `version` (default: latest; a STRING is a
-    tag name, resolved through snapshot_tags). Spark plans
-    exactly the manifest's files — no directory listing, no eventual-
-    consistency window, identical bytes on every replay. A version whose
-    manifest lists NO files (an all-rows-erased ``snapshot_rewrite``, the
-    erasure terminal state) reads back as the EMPTY frame under its
-    recorded schema — the same contract as the remote twin
-    (arrow_s3_snapshot_read): an unreadable latest version would strand
-    the store until the next append."""
-    from pyspark.sql import types as T
-
-    version = _resolve_version(root, version)
-    versions = snapshot_versions(root)
-    if not versions:
-        raise ValueError(f"no snapshot versions committed under {root!r}")
-    if version is None:
-        version = versions[-1]
-    if version not in versions:
-        raise ValueError(f"version {version} not in {versions}")
-    m = _read_manifest(root, version)
-    if not m["files"]:
-        schema = m.get("schema")
-        if schema is None:
-            raise ValueError(
-                f"version {version} is empty and predates schema "
-                f"recording — nothing to reconstruct a frame from")
-        return empty_frame(spark, T.StructType.fromJson(schema))
-    paths = [os.path.join(root, f) for f in m["files"]]
-    schema = m.get("schema")
-    if schema is None:  # legacy pre-schema manifest: original read path
-        return spark.read.parquet(*paths)
-    # the manifest schema is DECLARED on the read: files predating a
-    # column serve NULL for it, and the result shape never depends on
-    # which footer Spark samples from a mixed-schema file list
-    return spark.read.schema(T.StructType.fromJson(schema)).parquet(*paths)
+    tag name, resolved through snapshot_tags). Plans exactly the
+    manifest's files under its recorded schema — no directory listing, no
+    eventual-consistency window, identical bytes on every replay. A
+    version whose manifest lists NO files reads back as the EMPTY frame
+    under its recorded schema."""
+    store = _store(root)
+    version, m = _pinned(store, version)
+    return _frame(spark, store, version, m)
 
 
 def snapshot_gc(
-    root: str, retain_versions: int | None = None,
+    root, retain_versions: int | None = None,
     orphan_grace_s: float = 600.0, older_than_s: float | None = None,
     dry_run: bool = False, _pre_delete_hook=None,
 ) -> dict[str, list[str]]:
     """Garbage-collect the snapshot root — the VACUUM analog. Two classes
     of dead files, both identified purely from manifests (no data reads):
 
-    - **orphans**: ``data/`` files no manifest references (crashed writes
-      that never committed — snapshot_append documents them as inert),
-      deleted only once OLDER than ``orphan_grace_s``: an in-flight
-      append stages its data files BEFORE committing the manifest, so an
+    - **orphans**: ``data/`` files no manifest references (crashed or
+      race-losing writes), deleted only once OLDER than
+      ``orphan_grace_s`` by the store's mtime: an in-flight append stages
+      its data files BEFORE committing the manifest, so an
       unreferenced-but-young file may be a write in progress — deleting
       it would corrupt the version about to commit. The grace window is
       the same writer-race guard as Delta/Iceberg VACUUM retention
       (public designs); set it above your longest plausible commit.
+      Temp manifests of crashed local commits go with the same grace.
     - **expired**: with ``retain_versions=k``, manifests older than the
       newest k are dropped and any file referenced ONLY by dropped
       versions is deleted. ``older_than_s=t`` adds the AGE horizon
       (Delta's ``VACUUM RETAIN n HOURS`` shape): versions whose manifest
       mtime is older than ``t`` seconds drop too — with both given, a
-      version drops if EITHER rule drops it. The newest version (and the
-      newest epoch-bearing manifest — the streaming replay guard) always
-      survive, whatever the horizons. Readers of retained versions are
-      untouched (their manifests still list every file they need); time
-      travel beyond the horizon is explicitly given up — the same
-      contract as Delta/Iceberg retention.
+      version drops if EITHER rule drops it. The newest version, every
+      TAGGED version and the newest manifest carrying an epoch signal
+      (the streaming replay guard, see _manifest_epoch) always survive.
+      This is what completes the right-to-erasure story: a
+      ``snapshot_rewrite`` erases rows from the new version onward, and
+      expiry removes the bytes earlier versions still reference. Readers
+      of retained versions are untouched; time travel beyond the horizon
+      is explicitly given up.
 
-    Returns {"orphans": [...], "expired": [...]} of deleted paths
+    Returns {"orphans": [...], "expired": [...]} of deleted keys
     (root-relative). ``dry_run=True`` computes and returns the same
-    report while deleting NOTHING (Delta's ``VACUUM ... DRY RUN``) — the
-    review step an erasure/retention sweep runs before committing to
-    byte-level deletion. Safe on a root with live readers of RETAINED
-    versions: deletion only ever touches files no retained manifest
-    references, and manifests are removed before their now-unreferenced
-    files."""
-    import time as _time
+    report while deleting NOTHING (Delta's ``VACUUM ... DRY RUN``).
+    Manifests are removed before their now-unreferenced files, so a
+    crash mid-GC can strand re-collectable bytes but never a manifest
+    whose files are gone. An in-flight append references only its
+    parent's files (the newest version, always retained) plus its own
+    batch (orphan-class, grace-protected). Manifest reads run on a
+    32-thread pool: a streaming root commits one manifest per micro-batch,
+    and on an object store each read is a network round trip."""
     if retain_versions is not None and retain_versions < 1:
         # versions[-0:] would silently keep EVERYTHING — the opposite of
         # the requested horizon; at least the newest version must survive
         raise ValueError(f"retain_versions must be >= 1, got {retain_versions}")
-    versions = snapshot_versions(root)
-    if not versions:
-        return {"orphans": [], "expired": []}
-    # each manifest is read ONCE and reused by the epoch scan and both
-    # reference sets — on a streaming root with thousands of micro-batch
-    # versions the previous three passes tripled GC's file I/O
-    manifests = {v: _read_manifest(root, v) for v in versions}
-    # copy, never alias `versions`: the age rule below edits `keep`
-    keep = list(versions) if retain_versions is None \
-        else versions[-retain_versions:]
-    drop = [v for v in versions if v not in keep]
+    store = _store(root)
+    listed = store.list(_MANIFEST_DIR)
+    versions = _versions(store, listed)
+    manifests: dict[int, dict] = {}
+    if versions:
+        with ThreadPoolExecutor(max_workers=min(32, len(versions))) as pool:
+            manifests = dict(zip(versions, pool.map(
+                lambda v: _manifest(store, v), versions)))
+    now = time.time()
+    keep = set(versions if retain_versions is None
+               else versions[-retain_versions:])
     if older_than_s is not None:
-        # the age horizon (Delta VACUUM-RETAIN shape): a version's age is
-        # its manifest's mtime; the newest version never age-drops (an
-        # idle root must stay readable however old it gets)
-        now = _time.time()
-        for v in versions[:-1]:
-            if v in drop:
-                continue
-            try:
-                age = now - os.path.getmtime(_manifest_path(root, v))
-            except FileNotFoundError:
-                continue
-            if age > older_than_s:
-                drop.append(v)
-                keep.remove(v)
-        drop.sort()
-    # TAGGED versions are retention-pinned (the snapshot_tag contract):
-    # a consumer that tagged the corpus it trained on must keep reading
-    # it until the tag is deliberately deleted, whatever the horizons.
-    for tv in sorted(set(snapshot_tags(root).values())):
-        if tv in drop:
-            drop.remove(tv)
-            keep = sorted(keep + [tv])
-    # The newest EPOCH-BEARING manifest is the streaming sink's replay
-    # guard (last_committed_epoch): if the retained tail were all
-    # epoch-less compactions, expiring it would let a crash-replayed
-    # micro-batch re-commit and duplicate rows. It is always retained,
-    # whatever the horizon.
+        # the newest version never age-drops: an idle root must stay
+        # readable however old it gets
+        keep -= {v for v in versions[:-1]
+                 if now - listed[_manifest_key(v)] > older_than_s}
     for v in reversed(versions):
-        if manifests[v].get("epoch") is not None:
-            if v in drop:
-                drop.remove(v)
-                keep = sorted(keep + [v])
+        if _manifest_epoch(manifests[v]) is not None:
+            keep.add(v)
             break
-
-    referenced_keep: set[str] = set()
-    for v in keep:
-        referenced_keep.update(manifests[v]["files"])
-    referenced_drop: set[str] = set()
-    for v in drop:
-        referenced_drop.update(manifests[v]["files"])
-
-    expired = sorted(referenced_drop - referenced_keep)
-    # manifests first: a crash mid-GC must never leave a manifest whose
-    # files are gone
-    if not dry_run:
-        # LAST-INSTANT tag re-read (the tag-vs-GC race): a snapshot_tag
-        # landing after the reference-set build above but before the
-        # deletes would be silently expired — the exact pin-travels-
-        # with-the-data contract the tag exists to provide. Re-reading
-        # tags immediately before the delete loop shrinks the race to
-        # the read-to-delete instant below (~µs of local syscalls); a
-        # tagger needing a HARD guarantee against a concurrent sweep
-        # should verify its version still exists after tagging
-        # (snapshot_tag returns the version; snapshot_versions confirms).
-        # ``_pre_delete_hook`` is test injection for exactly this window.
-        if _pre_delete_hook is not None:
-            _pre_delete_hook()
-        rescued = [tv for tv in sorted(set(snapshot_tags(root).values()))
-                   if tv in drop]
-        for tv in rescued:
-            drop.remove(tv)
-            keep = sorted(keep + [tv])
-            referenced_keep.update(manifests[tv]["files"])
-        if rescued:
-            expired = sorted(referenced_drop - referenced_keep)
-    expired_set = set(expired)
+    if not dry_run and _pre_delete_hook is not None:
+        _pre_delete_hook()
+    # TAGGED versions are retention-pinned. Tags are read at the last
+    # instant before the deletes (the tag-vs-GC race): a snapshot_tag
+    # landing before this read is honoured, so the race shrinks to the
+    # read-to-delete instant; a tagger needing a HARD guarantee against a
+    # concurrent sweep should check its version still exists after
+    # tagging. ``_pre_delete_hook`` is test injection for that window.
+    keep |= set(_tags(store).values()) & set(versions)
+    drop = [v for v in versions if v not in keep]
+    referenced = set().union(*(manifests[v]["files"] for v in keep))
+    expired = sorted(
+        set().union(*(manifests[v]["files"] for v in drop)) - referenced)
     if not dry_run:
         for v in drop:
-            os.remove(_manifest_path(root, v))
-        for rel in expired:
-            try:
-                os.remove(os.path.join(root, rel))
-            except FileNotFoundError:
-                pass
-
-    orphans: list[str] = []
-    now = _time.time()
-    data_dir = os.path.join(root, _DATA_DIR)
-    if os.path.isdir(data_dir):
-        for dirpath, _dirs, files in os.walk(data_dir, topdown=False):
-            # sidecars (_SUCCESS, .crc) are never manifest-listed, so they
-            # must not be treated as orphans of a HEALTHY batch — they go
-            # only when their directory holds no live data file at all
-            data_files = [n for n in files if not n.startswith(("_", "."))]
-            sidecars = [n for n in files if n.startswith(("_", "."))]
-            for name in data_files:
-                full = os.path.join(dirpath, name)
-                rel = os.path.relpath(full, root)
-                # expired files were already deleted above (or, in a dry
-                # run, are reported in their own class) — never double-
-                # report them as orphans
-                if rel in referenced_keep or rel in expired_set:
-                    continue
-                try:
-                    age = now - os.path.getmtime(full)
-                except FileNotFoundError:
-                    continue
-                if age < orphan_grace_s:
-                    continue  # possibly an append mid-commit: leave it
-                if not dry_run:
-                    os.remove(full)
-                orphans.append(rel)
-            if dry_run:
-                continue  # report-only: leave sidecars/dirs untouched
-            remaining = [
-                n for n in os.listdir(dirpath) if not n.startswith(("_", "."))
-            ]
-            if not remaining:
-                for name in sidecars:
-                    try:
-                        os.remove(os.path.join(dirpath, name))
-                    except FileNotFoundError:
-                        pass
-                if not os.listdir(dirpath):
-                    os.rmdir(dirpath)
-    # tmp manifests from crashed commits (_commit writes vN.json.tmp-<uuid>
-    # then publishes it): snapshot_versions skips them but nothing else ever
-    # removed them — a long-lived root restarting after crashes would
-    # accumulate them forever. Same grace window as data orphans (a young
-    # tmp may be a commit in flight).
-    mdir = os.path.join(root, _MANIFEST_DIR)
-    if os.path.isdir(mdir):
-        for name in os.listdir(mdir):
-            if ".json.tmp-" not in name:
-                continue
-            full = os.path.join(mdir, name)
-            try:
-                if now - os.path.getmtime(full) < orphan_grace_s:
-                    continue
-                if not dry_run:
-                    os.remove(full)
-            except FileNotFoundError:
-                continue
-            orphans.append(os.path.relpath(full, root))
-    return {"orphans": orphans, "expired": expired}
+            store.delete(_manifest_key(v))
+        for key in expired:
+            store.delete(key)
+    listed_by_manifests = referenced | set(expired)
+    orphans = [key for key, mtime in store.list(_DATA_DIR, recursive=True).items()
+               if key not in listed_by_manifests and now - mtime >= orphan_grace_s]
+    orphans += [key for key, mtime in listed.items()
+                if ".json.tmp-" in key and now - mtime >= orphan_grace_s]
+    if not dry_run:
+        for key in orphans:
+            store.delete(key)
+    return {"orphans": sorted(orphans), "expired": expired}
 
 
 def snapshot_diff(
     spark: SparkSession,
-    root: str,
+    root,
     from_version: int | str,
     to_version: int | str,
     key_cols: list[str],
@@ -626,35 +697,27 @@ def snapshot_diff(
 
     Shape: file-level short-circuit first — manifests are explicit file
     lists, so files common to both versions (append-only history, the
-    usual case) contribute NOTHING to the diff and are never scanned; the
-    full-outer key join runs only over each side's private files. After a
-    compaction (which rewrites the file list) the private sets degrade to
-    the full snapshots and the join does the work; keys are assumed
-    unique per snapshot (the ingest path dedups — callers with duplicate
-    keys should diff on the full key). One shuffle by key either way."""
-    ma = _read_manifest(root, _resolve_version(root, from_version))
-    mb = _read_manifest(root, _resolve_version(root, to_version))
+    usual case) contribute NOTHING to the diff and are never scanned (on
+    an object store: never fetched); the full-outer key join runs only
+    over each side's private files, each read under ITS version's
+    recorded schema. After a compaction (which rewrites the file list)
+    the private sets degrade to the full snapshots and the join does the
+    work; keys are assumed unique per snapshot (the ingest path dedups —
+    callers with duplicate keys should diff on the full key). One shuffle
+    by key either way."""
+    store = _store(root)
+    _va, ma = _pinned(store, from_version)
+    vb, mb = _pinned(store, to_version)
     fa, fb = set(ma["files"]), set(mb["files"])
-    only_a, only_b = sorted(fa - fb), sorted(fb - fa)
 
-    def _read(files: list[str], manifest: dict) -> DataFrame | None:
+    def side(files: set[str], m: dict) -> DataFrame | None:
         if not files:
             return None
-        paths = [os.path.join(root, f) for f in files]
-        schema = manifest.get("schema")
-        if schema is None:
-            return spark.read.parquet(*paths)
-        from pyspark.sql import types as T
+        return store.read_parquet(spark, sorted(files), _struct(m))
 
-        # each side reads under ITS version's recorded schema, so a column
-        # added between the versions is NULL on the from side rather than
-        # sampled-footer-dependent (see snapshot_read)
-        return spark.read.schema(T.StructType.fromJson(schema)).parquet(*paths)
-
-    a, b = _read(only_a, ma), _read(only_b, mb)
     return _diff_tagged(
-        a, b, key_cols, detect_updates,
-        lambda: snapshot_read(spark, root, to_version))
+        side(fa - fb, ma), side(fb - fa, mb), key_cols, detect_updates,
+        lambda: _frame(spark, store, vb, mb))
 
 
 def _diff_tagged(
@@ -666,11 +729,8 @@ def _diff_tagged(
 ) -> DataFrame:
     """The storage-free core of snapshot_diff: tag each side's private
     rows insert/delete (plus full-row null-safe updates on request) with
-    one key-shuffle join. Shared verbatim by the local store's
-    snapshot_diff and the object-store arrow_s3_snapshot_diff — the CDC
-    semantics are a property of the manifest model, not of where the
-    bytes live. ``empty_base`` lazily supplies a schema-bearing frame
-    for the identical-file-lists case (no data is read from it)."""
+    one key-shuffle join. ``empty_base`` lazily supplies a schema-bearing
+    frame for the identical-file-lists case (no data is read from it)."""
     if a is None and b is None:  # identical file lists → empty diff
         return empty_base().limit(0).withColumn("_change", F.lit(""))
     if a is None:
@@ -723,7 +783,7 @@ def _diff_tagged(
 
 def snapshot_compact(
     spark: SparkSession,
-    root: str,
+    root,
     target_files: int = 1,
     zorder_cols: list[str] | None = None,
     row_group_bytes: int | None = None,
@@ -733,7 +793,10 @@ def snapshot_compact(
     compaction changes the file list, never history. The rewrite is one
     coalesce-write of the current snapshot (same economics as
     layout.compact_parquet: pay once, every later scan opens fewer
-    files).
+    files; on an object store the object count IS the scan-task
+    granularity, so many small micro-batch objects turn read parallelism
+    into per-key overhead). A writer that commits the next version first
+    wins: losing a compaction is cheap, losing an append loses data.
 
     `zorder_cols` makes this the OPTIMIZE-ZORDER maintenance pass of the
     lakehouse formats: the rewrite clusters rows along the Morton curve of
@@ -741,16 +804,13 @@ def snapshot_compact(
     on ANY of them skips most row groups off footer stats — streaming
     ingest appends unclustered micro-batches cheaply, and the periodic
     compaction restores scan-pruning locality as a new version while every
-    pinned training snapshot keeps its original files."""
-    versions = snapshot_versions(root)
+    pinned training snapshot keeps its original files.
+    ``row_group_bytes`` sets the parquet row-group size (local store)."""
+    store = _store(root)
+    versions, prev = _head(store)
     if not versions:
-        raise ValueError(f"no snapshot versions committed under {root!r}")
-    parent = versions[-1]
-    version = parent + 1
-    cur = snapshot_read(spark, root, parent)
-    batch_dir = os.path.join(
-        root, _DATA_DIR, f"compact-{version}-{uuid.uuid4().hex[:8]}"
-    )
+        raise ValueError(f"no snapshot versions committed under {store.name!r}")
+    cur = _frame(spark, store, versions[-1], prev)
     if zorder_cols:
         from pysparkdb.sources.layout import zorder_df
 
@@ -760,19 +820,14 @@ def snapshot_compact(
         out = zorder_df(cur, zorder_cols, n_partitions=target_files)
     else:
         out = cur.coalesce(target_files)
-    w = out.write.mode("error")
-    if row_group_bytes is not None:
-        w = w.option("parquet.block.size", str(row_group_bytes))
-    w.parquet(batch_dir)
-    files = [os.path.relpath(p, root) for p in _parquet_files(batch_dir)]
-    pm = _read_manifest(root, parent)
+    files, n_rows, nbytes, token = _stage(store, out, "compact", row_group_bytes)
     # same rows, same schema: compaction carries the parent schema forward
     # (cur was READ with it, so the rewrite's footers already conform)
-    _commit(root, version, files, pm["n_rows"], parent, schema=pm.get("schema"))
-    return version
+    return _commit(store, versions, prev, files, n_rows, nbytes,
+                   _schema(prev), token, compaction=True)
 
 
-def snapshot_rewrite(spark: SparkSession, root: str, df: DataFrame) -> int:
+def snapshot_rewrite(spark: SparkSession, root, df: DataFrame) -> int:
     """Commit ``df`` as a FULL-REPLACEMENT version — the delete path of
     the versioned store (retention sweeps, right-to-erasure, quality
     re-gating): unlike snapshot_append (adds files) and snapshot_compact
@@ -783,42 +838,62 @@ def snapshot_rewrite(spark: SparkSession, root: str, df: DataFrame) -> int:
     is the complete erasure story: rewrite removes from the live version,
     GC removes the bytes). Readers see the change atomically at the
     manifest publish; snapshot_diff against the parent yields the
-    insert/delete feed downstream increments consume."""
-    parent = _latest(root)
-    version = (parent or 0) + 1
-    files, n_rows = _stage_batch(df, root, "rewrite", version)
+    insert/delete feed downstream increments consume. A lost race raises
+    with no retry: the rewrite never saw the winner's rows, and replaying
+    it would silently erase them."""
+    store = _store(root)
+    versions, prev = _head(store)
+    files, n_rows, nbytes, token = _stage(store, df, "rewrite")
     # full replacement owns its schema outright: a rewrite may drop or
     # retype columns (it lists no historical files, so there is nothing
     # the declared schema must stay compatible with)
-    _commit(root, version, files, n_rows, parent, schema=_schema_dict(df.schema))
-    return version
+    return _commit(store, versions, prev, files, n_rows, nbytes,
+                   _schema_dict(df.schema), token, rewrite=True)
 
 
-def committed_epochs(root: str) -> set[int]:
-    """Streaming epoch ids already committed to a manifest (see
-    snapshot_stream_sink)."""
-    return {
-        m["epoch"]
-        for v in snapshot_versions(root)
-        for m in (_read_manifest(root, v),)
-        if m.get("epoch") is not None
-    }
+def _epoch_head(store) -> tuple[list[int], dict, int | None]:
+    """(versions, latest manifest, newest committed epoch). The newest
+    manifest answers on any root written with epoch propagation; older
+    roots fall back to the reverse walk, valid because Spark epoch ids
+    are monotonic per checkpoint."""
+    versions = _versions(store)
+    latest = None
+    for v in reversed(versions):
+        m = _manifest(store, v)
+        latest = latest or m
+        if _manifest_epoch(m) is not None:
+            return versions, latest, _manifest_epoch(m)
+    return versions, latest or dict(_EMPTY), None
 
 
-def last_committed_epoch(root: str) -> int | None:
-    """Newest epoch recorded by any manifest, walking back past
-    non-streaming versions (manual appends / compactions carry no epoch).
-    O(recent manifests) instead of committed_epochs' O(all) — the right
-    guard for a long-running stream, valid because Spark epoch ids are
-    monotonic per checkpoint."""
-    for v in reversed(snapshot_versions(root)):
-        e = _read_manifest(root, v).get("epoch")
-        if e is not None:
-            return e
-    return None
+def last_committed_epoch(root) -> int | None:
+    """Newest micro-batch epoch recorded by the root's manifests (one
+    listing + one manifest read on a root written by this code)."""
+    return _epoch_head(_store(root))[2]
 
 
-def snapshot_stream_sink(stream_df: DataFrame, root: str, checkpoint_dir: str):
+def commit_epoch(
+    batch_df: DataFrame, root, epoch_id: int, retries: int = 2
+) -> int | None:
+    """Idempotent micro-batch commit (the snapshot_stream_sink body,
+    module-level so the replay guard is directly testable): append the
+    batch as a new version unless this epoch already committed one —
+    returns the new version, or None for a skipped replay. Monotonic
+    epoch ids make ``<= last_committed_epoch`` the replay test. The
+    append runs with ``retries`` because a maintenance compaction racing
+    the stream is expected operation — the batch is epoch-new by the
+    guard, so relanding it under the next version is safe (a WON commit
+    records the epoch, making every later replay skip). The guard's
+    listing and newest-manifest read are reused by the append's first
+    attempt, so a committed micro-batch costs one of each."""
+    store = _store(root)
+    versions, latest, last = _epoch_head(store)
+    if last is not None and epoch_id <= last:
+        return None  # replay of an already-committed batch: exactly-once
+    return _append(store, batch_df, epoch_id, retries, head=(versions, latest))
+
+
+def snapshot_stream_sink(stream_df: DataFrame, root, checkpoint_dir: str):
     """Structured-Streaming sink: every micro-batch commits as a snapshot
     version — the transaction-log streaming sink pattern (each version is
     an atomic, replayable batch boundary; downstream training jobs pin a
@@ -827,16 +902,14 @@ def snapshot_stream_sink(stream_df: DataFrame, root: str, checkpoint_dir: str):
     Exactly-once WITHOUT a transactional store: foreachBatch is
     at-least-once (a crash after the data write but before the engine
     records the batch replays the SAME epoch_id), so the commit is made
-    IDEMPOTENT on epoch_id — each manifest records the epoch that
-    produced it, and a replayed epoch that already has a manifest is
-    skipped. Epoch ids are monotonic per checkpoint, so a restart resumes
-    appending where it stopped. One checkpoint per snapshot root: epoch
-    ids are scoped to a checkpoint, so pointing a FRESH checkpoint at an
-    old root would collide with its recorded epochs — pair them for the
-    root's lifetime. Returns the DataStreamWriter; callers .start() it
-    (trigger(availableNow=True) for drain-and-stop ingest).
+    IDEMPOTENT on epoch_id (see commit_epoch). Epoch ids are monotonic
+    per checkpoint, so a restart resumes appending where it stopped. One
+    checkpoint per snapshot root: epoch ids are scoped to a checkpoint,
+    so pointing a FRESH checkpoint at an old root would collide with its
+    recorded epochs — pair them for the root's lifetime. Returns the
+    DataStreamWriter; callers .start() it (trigger(availableNow=True) for
+    drain-and-stop ingest).
     """
-
     return (
         stream_df.writeStream.foreachBatch(
             lambda batch_df, epoch_id: commit_epoch(batch_df, root, epoch_id)
@@ -844,17 +917,3 @@ def snapshot_stream_sink(stream_df: DataFrame, root: str, checkpoint_dir: str):
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )
-
-
-def commit_epoch(batch_df: DataFrame, root: str, epoch_id: int) -> int | None:
-    """Idempotent micro-batch commit (the snapshot_stream_sink body,
-    module-level so the replay guard is directly testable): append the
-    batch as a new version unless this epoch already committed one —
-    returns the new version, or None for a skipped replay. Monotonic
-    epoch ids make ≤ last_committed_epoch the replay test (constant-ish
-    manifest reads per batch, where a full committed-set scan would make
-    a long stream quadratic in its own history)."""
-    last = last_committed_epoch(root)
-    if last is not None and epoch_id <= last:
-        return None  # replay of an already-committed batch: exactly-once
-    return snapshot_append(batch_df, root, epoch=epoch_id)

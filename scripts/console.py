@@ -24,8 +24,8 @@ both interactively and piped). Backslash commands:
     \\versions R    list snapshot versions under root R (local dir or
                    s3:// — the jar-less manifest store, AWS_* env vars)
     \\pin V R [N]   register snapshot version N (or tag name) of root R
-                   as view V (local via attach_snapshot; s3:// via
-                   attach_arrow_s3_snapshot — pinned-version time travel)
+                   as view V (Engine.attach_snapshot, local or s3:// —
+                   pinned-version time travel)
     \\tag R N [V]   pin version V (default latest) of root R under tag
                    name N — retention-pinned until untagged
     \\tags R        list tags under root R
@@ -54,19 +54,23 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def _s3conf_from_env():
-    """Jar-less object-store connection from the standard AWS_* env vars —
-    how \\pin/\\versions/\\stats reach an s3:// root without a config file
-    (endpoint override covers MinIO/moto-style S3-compatible stores)."""
-    from pysparkdb.sources.arrow_s3 import S3Conf
+def _snapshot_root(root: str):
+    """A snapshot root argument as the snapshot_* calls take it: a local
+    directory as is, an s3:// root as an S3Root whose jar-less connection
+    comes from the standard AWS_* env vars — how the snapshot commands
+    reach an object store without a config file (endpoint override covers
+    MinIO/moto-style S3-compatible stores)."""
+    if not root.startswith(("s3://", "s3a://")):
+        return root
+    from pysparkdb.sources.arrow_s3 import S3Conf, S3Root
 
-    return S3Conf(
+    return S3Root(root, S3Conf(
         endpoint=os.environ.get("AWS_ENDPOINT_URL"),
         access_key=os.environ.get("AWS_ACCESS_KEY_ID"),
         secret_key=os.environ.get("AWS_SECRET_ACCESS_KEY"),
         region=os.environ.get("AWS_REGION")
         or os.environ.get("AWS_DEFAULT_REGION"),
-    )
+    ))
 
 
 def run_statement(eng, stmt: str, *, timing: bool, transfer: bool, out=sys.stdout) -> None:
@@ -184,30 +188,19 @@ def main(argv: list[str] | None = None) -> int:
             assert eng.catalog is not None
             print(" ".join(sorted(eng.catalog.tables)))
         elif s.startswith("\\versions"):
+            from pysparkdb.sources import snapshot_versions
+
             root = s[len("\\versions"):].strip()
-            if root.startswith(("s3://", "s3a://")):
-                from pysparkdb.sources.arrow_s3 import arrow_s3_snapshot_versions
-
-                print(arrow_s3_snapshot_versions(_s3conf_from_env(), root)
-                      or "(none)")
-            else:
-                from pysparkdb.sources.versioned import snapshot_versions
-
-                print(snapshot_versions(root) or "(none)")
+            print(snapshot_versions(_snapshot_root(root)) or "(none)")
         elif s.startswith("\\tags"):
             # \tags <root> — list named tags (name -> version)
             root = s[len("\\tags"):].strip()
             if not root:
                 print("usage: \\tags <root>", file=sys.stderr)
-            elif root.startswith(("s3://", "s3a://")):
-                from pysparkdb.sources.arrow_s3 import arrow_s3_snapshot_tags
-
-                print(arrow_s3_snapshot_tags(_s3conf_from_env(), root)
-                      or "(none)")
             else:
-                from pysparkdb.sources.versioned import snapshot_tags
+                from pysparkdb.sources import snapshot_tags
 
-                print(snapshot_tags(root) or "(none)")
+                print(snapshot_tags(_snapshot_root(root)) or "(none)")
         elif s.startswith("\\tag"):
             # \tag <root> <name> [version] — pin a version under a named
             # tag (retention-pinned until untagged; readers resolve the
@@ -217,16 +210,10 @@ def main(argv: list[str] | None = None) -> int:
                 print("usage: \\tag <root> <name> [version]",
                       file=sys.stderr)
             else:
+                from pysparkdb.sources import snapshot_tag
+
                 ver = int(parts[2]) if len(parts) == 3 else None
-                if parts[0].startswith(("s3://", "s3a://")):
-                    from pysparkdb.sources.arrow_s3 import arrow_s3_snapshot_tag
-
-                    v = arrow_s3_snapshot_tag(
-                        _s3conf_from_env(), parts[0], parts[1], ver)
-                else:
-                    from pysparkdb.sources.versioned import snapshot_tag
-
-                    v = snapshot_tag(parts[0], parts[1], ver)
+                v = snapshot_tag(_snapshot_root(parts[0]), parts[1], ver)
                 print(f"{parts[1]} -> v{v}")
         elif s.startswith("\\gc"):
             # \gc <root> [retain_versions] [grace_s] [--age <s>] [-n] —
@@ -262,19 +249,11 @@ def main(argv: list[str] | None = None) -> int:
             else:
                 retain = int(parts[1]) if len(parts) >= 2 else None
                 grace = float(parts[2]) if len(parts) == 3 else 600.0
-                if parts[0].startswith(("s3://", "s3a://")):
-                    from pysparkdb.sources.arrow_s3 import arrow_s3_snapshot_gc
+                from pysparkdb.sources import snapshot_gc
 
-                    out = arrow_s3_snapshot_gc(
-                        _s3conf_from_env(), parts[0],
-                        orphan_grace_s=grace, retain_versions=retain,
-                        older_than_s=age, dry_run=dry)
-                else:
-                    from pysparkdb.sources.versioned import snapshot_gc
-
-                    out = snapshot_gc(parts[0], retain_versions=retain,
-                                      orphan_grace_s=grace,
-                                      older_than_s=age, dry_run=dry)
+                out = snapshot_gc(_snapshot_root(parts[0]),
+                                  retain_versions=retain, orphan_grace_s=grace,
+                                  older_than_s=age, dry_run=dry)
                 verb = "would expire" if dry else "expired"
                 print(f"{verb} {len(out['expired'])} object(s), "
                       f"{'would sweep' if dry else 'swept'} "
@@ -299,14 +278,8 @@ def main(argv: list[str] | None = None) -> int:
                 ver = None
                 if len(parts) == 3:
                     ver = int(parts[2]) if parts[2].isdigit() else parts[2]
-                rep = parts[0] in pinned
-                if parts[1].startswith(("s3://", "s3a://")):
-                    df = eng.attach_arrow_s3_snapshot(
-                        parts[0], parts[1], _s3conf_from_env(), ver,
-                        replace=rep)
-                else:
-                    df = eng.attach_snapshot(parts[0], parts[1], ver,
-                                             replace=rep)
+                df = eng.attach_snapshot(parts[0], _snapshot_root(parts[1]),
+                                         ver, replace=parts[0] in pinned)
                 pinned.add(parts[0])
                 print(f"{parts[0]}: {df.count()} rows")
         elif s.startswith("\\diff"):
@@ -330,20 +303,11 @@ def main(argv: list[str] | None = None) -> int:
                 print("usage: \\diff <root> <from_v> <to_v> "
                       "<key[,key...]> [-u]", file=sys.stderr)
             else:
-                if parts[0].startswith(("s3://", "s3a://")):
-                    from pysparkdb.sources.arrow_s3 import arrow_s3_snapshot_diff
+                from pysparkdb.sources import snapshot_diff
 
-                    df = arrow_s3_snapshot_diff(
-                        eng.spark, parts[0], _s3conf_from_env(),
-                        int(parts[1]), int(parts[2]), keys,
-                        detect_updates=updates)
-                else:
-                    from pysparkdb.sources.versioned import snapshot_diff
-
-                    df = snapshot_diff(eng.spark, parts[0], int(parts[1]),
-                                       int(parts[2]), keys,
-                                       detect_updates=updates)
-                df.show(50, truncate=False)
+                snapshot_diff(eng.spark, _snapshot_root(parts[0]),
+                              int(parts[1]), int(parts[2]), keys,
+                              detect_updates=updates).show(50, truncate=False)
         elif s.startswith("\\stats"):
             # \stats <view> [col ...] — footer-stats profile of a remote
             # view attached via Engine.attach_arrow_s3 (zero data GETs)

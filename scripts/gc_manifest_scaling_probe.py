@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """GC metadata-path scaling probe: pooled vs serial manifest GETs.
 
-`arrow_s3_snapshot_gc` must GET every manifest under the root to build
+`snapshot_gc` on an S3Root must GET every manifest under the root to build
 its reference sets, and a second-scale streaming trigger commits ~86k
 manifests/day — so round 13 moved those GETs onto a 32-way driver
 thread pool (the footer-planner pattern). This probe measures exactly
@@ -45,12 +45,8 @@ def main(argv: list[str]) -> int:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from pysparkdb.sources.arrow_s3 import (
-        S3Conf,
-        _boto3_client,
-        _get_manifest,
-        arrow_s3_snapshot_gc,
-    )
+    from pysparkdb.sources import S3Conf, S3Root, snapshot_gc
+    from pysparkdb.sources.arrow_s3 import _boto3_client, _S3Store
 
     sizes = [int(a) for a in argv] or [64, 256, 1024]
     # moto runs OUT-OF-PROCESS on purpose: the pytest-style in-process
@@ -87,11 +83,11 @@ def main(argv: list[str]) -> int:
             kp = f"root{n}"
             client.put_object(Bucket="probe", Key=f"{kp}/data/batch-0/p.parquet",
                               Body=obj)
-            for v in range(n):
+            for v in range(1, n + 1):
                 client.put_object(
                     Bucket="probe", Key=f"{kp}/_manifests/v{v}.json",
                     Body=json.dumps({
-                        "version": v, "parent": v - 1 if v else None,
+                        "version": v, "parent": v - 1 if v > 1 else None,
                         "files": ["data/batch-0/p.parquet"], "n_rows": 1,
                         "bytes": len(obj), "schema": schema,
                         "commit_token": f"t{v}"}).encode())
@@ -100,17 +96,18 @@ def main(argv: list[str]) -> int:
             # which inverted the first version of this measurement
             from concurrent.futures import ThreadPoolExecutor
 
+            root = S3Root(f"s3://probe/{kp}", conf)
+            store = _S3Store(root, client=client)
             with ThreadPoolExecutor(max_workers=32) as pool:
                 list(pool.map(
-                    lambda v: _get_manifest(client, "probe", kp, v),
-                    range(min(n, 64))))
+                    lambda v: store.get(f"_manifests/v{v}.json"),
+                    range(1, min(n, 64) + 1)))
             t0 = time.perf_counter()
-            for v in range(n):
-                _get_manifest(client, "probe", kp, v)
+            for v in range(1, n + 1):
+                store.get(f"_manifests/v{v}.json")
             serial = time.perf_counter() - t0
             t0 = time.perf_counter()
-            out = arrow_s3_snapshot_gc(
-                conf, f"s3://probe/{kp}", orphan_grace_s=3600, dry_run=True)
+            out = snapshot_gc(root, orphan_grace_s=3600, dry_run=True)
             pooled = time.perf_counter() - t0
             assert out == {"orphans": [], "expired": []}
             print(f"{n:>10} {pooled:>12.3f} {serial:>13.3f} "

@@ -45,10 +45,11 @@ def run(spark: SparkSession, sf_dir: str, workdir: str) -> dict:
 
     from pysparkdb.pipeline import cluster, dedup, text
     from pysparkdb.queries.base import tables
-    from pysparkdb.sources.versioned import (
+    from pysparkdb.sources import (
         snapshot_compact,
         snapshot_read,
         snapshot_stream_sink,
+        snapshot_tag,
         snapshot_versions,
     )
     from pysparkdb.streaming.windows import stream_clean_documents
@@ -107,8 +108,6 @@ def run(spark: SparkSession, sf_dir: str, workdir: str) -> dict:
     # instead of copying a version number between systems, and the tag
     # retention-pins the gated corpus against every later GC horizon
     # until deliberately untagged (sources.versioned.snapshot_tag)
-    from pysparkdb.sources.versioned import snapshot_tag
-
     snapshot_tag(root, "train-ready", pinned)
 
     # --- 3. MAINTAIN: zordered compaction (new version; pin unaffected) ---

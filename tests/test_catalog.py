@@ -198,13 +198,12 @@ def test_engine_attach_snapshot_refuses_to_shadow_view(spark, sf_dir, tmp_path):
 def test_engine_attach_snapshot_origin_consistent_under_concurrent_append(
     spark, sf_dir, tmp_path, monkeypatch
 ):
-    """ADVICE r14: attach_snapshot must resolve the pinned version BEFORE
-    reading and read at the resolved int — resolving after snapshot_read
-    let a concurrent append between the two calls record origin root@vN+1
-    while the registered df actually read vN, so a later pin at the real
-    vN+1 could share cached segments with the stale view. Injected race:
-    an append fires inside the read; the recorded origin and the df's
-    contents must still name the SAME version."""
+    """ADVICE r14: the registered view, its version and its cache origin
+    must name the SAME version even when an append lands while the
+    attach reads — otherwise a later pin at the new version could share
+    cached segments with the stale view. Injected race: an append fires
+    inside the data read; the read must be of the version the origin
+    records (the manifest is read once, never re-resolved)."""
     from pyspark.sql import functions as F
 
     from pysparkdb import Engine
@@ -215,23 +214,24 @@ def test_engine_attach_snapshot_origin_consistent_under_concurrent_append(
     root = str(tmp_path / "snap")
     nation = tables(spark, sf_dir)["nation"]
     snapshot_append(nation.filter(F.col("n_nationkey") < 10), root)  # v1
+    v1_files = versioned._store(root).get("_manifests/v1.json")["files"]
 
-    real_read = versioned.snapshot_read
-    seen_versions = []
+    real_read = versioned._LocalStore.read_parquet
+    seen_files = []
 
-    def racing_read(sp, r, version=None):
-        seen_versions.append(version)
-        df = real_read(sp, r, version)
+    def racing_read(store, sp, files, schema):
+        seen_files.append(sorted(files))
+        df = real_read(store, sp, files, schema)
         # concurrent ingest lands v2 between this attach's read and any
         # later metadata step
         snapshot_append(nation.filter(F.col("n_nationkey") >= 10), root)
         return df
 
-    monkeypatch.setattr(versioned, "snapshot_read", racing_read)
+    monkeypatch.setattr(versioned._LocalStore, "read_parquet", racing_read)
     eng = Engine(spark)
     df = eng.attach_snapshot("docs", root)  # version=None -> latest (v1)
-    # the read was issued at the RESOLVED int, never None-latest
-    assert seen_versions == [1]
+    # the read planned exactly v1's files, once
+    assert seen_files == [sorted(v1_files)]
     # origin and contents agree: both name v1
     assert eng._views["docs"].origin.endswith("@v1")
     assert df.count() == 10

@@ -335,8 +335,8 @@ def test_weighted_sample_invariant_under_repartition(spark, sf_dir):
 )
 @settings(**_SETTINGS)
 def test_diff_tagged_matches_set_semantics(spark, rows_a, rows_b):
-    """The shared snapshot-diff core (sources/versioned.py:_diff_tagged,
-    used by both snapshot_diff and arrow_s3_snapshot_diff): against
+    """The storage-free snapshot-diff core (sources/versioned.py:_diff_tagged,
+    behind snapshot_diff on every store): against
     brute-force set semantics over unique-keyed sides — inserts = keys
     only in `to`, deletes = keys only in `from`, updates = keys in both
     whose payload differs (null-safe) — for every combination of empty /

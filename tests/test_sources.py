@@ -470,105 +470,249 @@ def test_dynamic_partition_pruning_from_dim_filter(spark, sf_dir, tmp_path):
     assert got == expect
 
 
-class TestSnapshotVersioning:
-    """Manifest-based time travel (sources/versioned.py): immutable data
-    files + per-version file lists — the minimal core of a transaction
-    log, for reproducible training snapshots."""
+# ---------------------------------------------------------------------------
+# The snapshot contract, written once: each _check_* body runs on a local
+# root (TestSnapshotVersioning, a tmp_path directory) and on an S3Root
+# (TestArrowObjectStore, the moto endpoint) — the same protocol over the
+# two stores of sources/versioned.py.
+# ---------------------------------------------------------------------------
 
-    def test_append_creates_versions_and_time_travel(self, spark, sf_dir, tmp_path):
-        from pysparkdb.sources.versioned import (
-            snapshot_append, snapshot_read, snapshot_versions,
-        )
 
-        root = str(tmp_path / "snap")
-        nation = tables(spark, sf_dir)["nation"]
-        v1 = snapshot_append(nation.filter(F.col("n_nationkey") < 10), root)
-        v2 = snapshot_append(nation.filter(F.col("n_nationkey") >= 10), root)
-        assert (v1, v2) == (1, 2)
-        assert snapshot_versions(root) == [1, 2]
-        assert snapshot_read(spark, root, 1).count() == 10
-        assert snapshot_read(spark, root, 2).count() == nation.count()
-        # default = latest
-        assert snapshot_read(spark, root).count() == nation.count()
-        # version 1 is bit-stable after the second append (immutability)
-        keys = {r.n_nationkey for r in snapshot_read(spark, root, 1).collect()}
-        assert keys == set(range(10))
+def _snap_store(root):
+    from pysparkdb.sources.versioned import _store
 
-    def test_racing_commits_of_one_version_keep_the_first(self, tmp_path):
-        """Manifests publish create-only: a second commit of the same
-        version raises ConcurrentAppendError (the object-store tier's
-        class) and leaves the first manifest intact."""
-        from pysparkdb.sources import ConcurrentAppendError
-        from pysparkdb.sources.versioned import _commit, _read_manifest
+    return _store(root)
 
-        root = str(tmp_path / "snap")
-        _commit(root, 1, ["data/a.parquet"], 3, None)
-        with pytest.raises(ConcurrentAppendError, match="concurrently"):
-            _commit(root, 1, ["data/b.parquet"], 5, None)
-        m = _read_manifest(root, 1)
-        assert (m["files"], m["n_rows"]) == (["data/a.parquet"], 3)
-        mdir = os.path.join(root, "_manifests")
-        assert os.listdir(mdir) == ["v1.json"], "tmp manifest left behind"
 
-    def test_append_racing_another_append_raises(
-            self, spark, sf_dir, tmp_path, monkeypatch):
-        """An append commits at the version after the manifest it read:
-        another append landing while it stages makes it raise, instead of
-        publishing a file list that drops the other append's files."""
-        from pysparkdb.sources import ConcurrentAppendError
-        from pysparkdb.sources import versioned
-        from pysparkdb.sources.versioned import (
-            snapshot_append, snapshot_read, snapshot_versions,
-        )
+def _snap_manifest(root, version):
+    from pysparkdb.sources.versioned import _manifest_key
 
-        root = str(tmp_path / "snap")
-        nation = tables(spark, sf_dir)["nation"]
-        snapshot_append(nation.filter(F.col("n_nationkey") < 5), root)  # v1
-        stage = versioned._stage_batch
-        raced = []
+    return _snap_store(root).get(_manifest_key(version))
 
-        def stage_after_a_rival_append(*a, **kw):
-            if not raced:
-                raced.append(None)  # the rival stages through here too
-                raced[0] = snapshot_append(
-                    nation.filter(F.col("n_nationkey") >= 20), root)
-            return stage(*a, **kw)
 
-        monkeypatch.setattr(versioned, "_stage_batch",
-                            stage_after_a_rival_append)
-        with pytest.raises(ConcurrentAppendError):
-            snapshot_append(
-                nation.filter(F.col("n_nationkey").between(5, 9)), root)
-        assert raced == [2] and snapshot_versions(root) == [1, 2]
-        keys = {r.n_nationkey for r in snapshot_read(spark, root).collect()}
-        assert keys == set(range(5)) | set(range(20, 25))
+def _snap_data_keys(root) -> set:
+    return set(_snap_store(root).list("data", recursive=True))
 
-    def test_snapshot_gc_age_horizon(self, spark, sf_dir, tmp_path):
-        """older_than_s is the Delta VACUUM-RETAIN-shaped age horizon:
-        versions whose manifest mtime is beyond the age drop (their
-        exclusively-referenced files with them), young versions and the
-        newest version survive — the newest never age-drops, so an idle
-        root stays readable however old it gets."""
-        import time as _t
 
-        from pysparkdb.sources.versioned import (
-            _manifest_path, snapshot_append, snapshot_gc, snapshot_read,
-            snapshot_rewrite, snapshot_versions,
-        )
+def _fields(schema):
+    return [(f.name, f.dataType) for f in schema.fields]
 
-        root = str(tmp_path / "snap")
-        region = tables(spark, sf_dir)["region"]
-        snapshot_append(region, root)                                  # v1
-        snapshot_rewrite(
-            spark, root, region.filter(F.col("r_regionkey") < 3))      # v2
-        snapshot_append(
-            region.filter(F.col("r_regionkey") >= 3), root)            # v3
-        v1_files = set(snapshot_read(spark, root, 1).inputFiles())
-        old = _t.time() - 7200
-        os.utime(_manifest_path(root, 1), (old, old))
-        # dry run first: same report, nothing deleted
-        preview = snapshot_gc(
-            root, older_than_s=3600, orphan_grace_s=0, dry_run=True)
+
+def _plant(root, key, table):
+    """A parquet object at root-relative ``key`` that no manifest lists —
+    what a crashed or race-losing writer leaves behind."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pysparkdb.sources import S3Root
+
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf)
+    if isinstance(root, S3Root):
+        store = _snap_store(root)
+        store.client.put_object(Bucket=store.bucket,
+                                Key=f"{store.keyprefix}/{key}",
+                                Body=buf.getvalue().to_pybytes())
+    else:
+        path = os.path.join(root, key)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        with open(path, "wb") as f:
+            f.write(buf.getvalue().to_pybytes())
+
+
+def _check_time_travel(spark, sf_dir, root):
+    """Two appends → two versions (numbered from 1); an older version
+    reads exactly its rows after later commits (immutability); latest is
+    the union; an ORPHAN data object is invisible to every read —
+    manifest-pinned planning, not prefix listing."""
+    import pyarrow as pa
+
+    from pysparkdb.sources import snapshot_append, snapshot_read, snapshot_versions
+
+    nation = tables(spark, sf_dir)["nation"]
+    batch1 = nation.filter(F.col("n_nationkey") < 10)
+    v1 = snapshot_append(batch1, root)
+    v2 = snapshot_append(nation.filter(F.col("n_nationkey") >= 10), root)
+    assert (v1, v2) == (1, 2)
+    assert snapshot_versions(root) == [1, 2]
+    _plant(root, "data/batch-orphan/x.parquet", pa.table({"n_nationkey": [999]}))
+    assert snapshot_read(spark, root, 1).count() == 10
+    assert sorted(map(tuple, snapshot_read(spark, root, 1).collect())) == \
+        sorted(map(tuple, batch1.collect()))
+    assert snapshot_read(spark, root, 2).count() == nation.count()
+    # default = latest
+    keys = sorted(r.n_nationkey for r in
+                  snapshot_read(spark, root).select("n_nationkey").collect())
+    assert keys == sorted(r.n_nationkey for r in nation.collect())
+    assert 999 not in keys  # the orphan never surfaces
+
+
+def _check_diff(spark, sf_dir, root):
+    """Reader-side CDC: appended keys are inserts, the reverse direction
+    deletes, the self-diff is empty but keeps the ``_change`` column; after
+    a COMPACTION (the file lists no longer share files) equal row sets
+    still diff empty and the append still diffs cleanly across it."""
+    from pysparkdb.sources import snapshot_append, snapshot_compact, snapshot_diff
+
+    nation = tables(spark, sf_dir)["nation"]
+    snapshot_append(nation.filter(F.col("n_nationkey") < 10), root)     # v1
+    snapshot_append(
+        nation.filter(F.col("n_nationkey").between(10, 14)), root)      # v2
+    d12 = snapshot_diff(spark, root, 1, 2, ["n_nationkey"])
+    assert {(r.n_nationkey, r._change) for r in d12.collect()} == \
+        {(k, "insert") for k in range(10, 15)}
+    d21 = snapshot_diff(spark, root, 2, 1, ["n_nationkey"])
+    assert {(r.n_nationkey, r._change) for r in d21.collect()} == \
+        {(k, "delete") for k in range(10, 15)}
+    self_diff = snapshot_diff(spark, root, 2, 2, ["n_nationkey"])
+    assert self_diff.count() == 0 and "_change" in self_diff.columns
+    v3 = snapshot_compact(spark, root)
+    assert snapshot_diff(spark, root, 2, v3, ["n_nationkey"]).count() == 0
+    d13 = snapshot_diff(spark, root, 1, v3, ["n_nationkey"])
+    assert {(r.n_nationkey, r._change) for r in d13.collect()} == \
+        {(k, "insert") for k in range(10, 15)}
+
+
+def _check_rewrite(spark, sf_dir, root):
+    """snapshot_rewrite is the erasure path: rows absent from the frame
+    are gone from the new version while the parent still time-travels to
+    them; each manifest owns its schema (a rewrite may scrub, drop or
+    empty); diff against the parent feeds deletes and full-row updates;
+    and the GC horizon reclaims the superseded bytes — rewrite + GC is
+    the complete right-to-erasure story."""
+    from pysparkdb.sources import (
+        snapshot_append, snapshot_diff, snapshot_gc, snapshot_read,
+        snapshot_rewrite, snapshot_schema,
+    )
+
+    nation = tables(spark, sf_dir)["nation"]
+    snapshot_append(nation, root)                                        # v1
+    survivors = nation.filter(F.col("n_nationkey") < 20) \
+        .withColumn("n_comment", F.lit("[scrubbed]"))
+    assert snapshot_rewrite(spark, root, survivors) == 2
+    live = snapshot_read(spark, root)
+    assert live.count() == 20
+    assert {r.n_comment for r in live.select("n_comment").collect()} == \
+        {"[scrubbed]"}
+    assert snapshot_read(spark, root, 1).count() == nation.count()
+    # each version's manifest owns its schema (nullable-normalized),
+    # inspectable without a data or footer read
+    assert _fields(snapshot_schema(root, 1)) == _fields(nation.schema)
+    assert _fields(snapshot_schema(root)) == _fields(survivors.schema)
+    # the membership feed: erased keys are pure deletes...
+    d = snapshot_diff(spark, root, 1, 2, ["n_nationkey"])
+    assert {(r.n_nationkey, r._change) for r in d.collect()} == \
+        {(k, "delete") for k in range(20, 25)}
+    # ...and detect_updates adds the scrubbed payloads under stable keys
+    by_change: dict = {}
+    for r in snapshot_diff(spark, root, 1, 2, ["n_nationkey"],
+                           detect_updates=True).collect():
+        by_change.setdefault(r._change, set()).add(r.n_nationkey)
+    assert by_change == {"delete": set(range(20, 25)), "update": set(range(20))}
+    # a rewrite may DROP a column: each side reads under its own schema,
+    # and the dropped non-null payload surfaces as updates
+    dropped = survivors.drop("n_comment")
+    v3 = snapshot_rewrite(spark, root, dropped)
+    assert _fields(snapshot_schema(root)) == _fields(dropped.schema)
+    d23 = snapshot_diff(spark, root, 2, v3, ["n_nationkey"],
+                        detect_updates=True).collect()
+    assert {r._change for r in d23} == {"update"} and len(d23) == 20
+    # the erasure terminal state reads back as the EMPTY frame
+    v4 = snapshot_rewrite(spark, root, dropped.filter(F.lit(False)))
+    empty = snapshot_read(spark, root)
+    assert empty.count() == 0 and _fields(empty.schema) == _fields(dropped.schema)
+    d34 = snapshot_diff(spark, root, v3, v4, ["n_nationkey"])
+    assert {r._change for r in d34.collect()} == {"delete"}
+    assert d34.count() == 20
+    deleted = snapshot_gc(root, orphan_grace_s=0.0, retain_versions=1)
+    assert deleted["expired"], "superseded v1-v3 bytes reclaimed"
+    assert snapshot_read(spark, root).count() == 0
+
+
+def _check_rewrite_to_empty(spark, sf_dir, root, eng, view):
+    """The erasure terminal state on both stores: an all-rows-erased
+    rewrite, and a literal ``files: []`` manifest, read back as the EMPTY
+    frame under the recorded schema, and the engine pins that version as
+    ``view`` — an unreadable latest version would strand the store."""
+    from pysparkdb.sources import snapshot_append, snapshot_read, snapshot_rewrite
+    from pysparkdb.sources.versioned import _commit, _head, _schema_dict
+
+    nation = tables(spark, sf_dir)["nation"]
+    snapshot_append(nation, root)                                        # v1
+    v2 = snapshot_rewrite(spark, root, nation.filter(F.lit(False)))
+    empty = snapshot_read(spark, root, v2)
+    assert empty.count() == 0
+    assert [f.name for f in empty.schema.fields] == nation.columns
+    assert snapshot_read(spark, root, 1).count() == nation.count()
+    # the literal empty-manifest shape (what the object-store writer
+    # commits: empty partitions produce zero objects)
+    versions, prev = _head(_snap_store(root))
+    _commit(_snap_store(root), versions, prev, [], 0, 0,
+            _schema_dict(nation.schema), "literal-empty")
+    latest = snapshot_read(spark, root)
+    assert latest.count() == 0 and latest.columns == nation.columns
+    df = eng.attach_snapshot(view, root)
+    assert df.schema == spark.table(view).schema
+    assert [f.name for f in df.schema.fields] == nation.columns
+    assert eng.sql(f"SELECT COUNT(*) AS n FROM {view}").collect()[0].n == 0
+
+
+def _check_gc_orphans_and_retention(spark, sf_dir, root):
+    """GC deletes only unreferenced-AND-old objects: a planted orphan is
+    younger than the default grace (kept), older than a zero grace
+    (deleted, reported by key); with a retention horizon, files only
+    expired versions reference go while the retained version reads the
+    same rows; a second sweep is a no-op; a zero horizon is refused."""
+    import pyarrow as pa
+
+    from pysparkdb.sources import (
+        snapshot_append, snapshot_compact, snapshot_gc, snapshot_read,
+        snapshot_versions,
+    )
+
+    nation = tables(spark, sf_dir)["nation"]
+    snapshot_append(nation.filter(F.col("n_nationkey") < 10), root)      # v1
+    snapshot_append(nation.filter(F.col("n_nationkey") >= 10), root)     # v2
+    _plant(root, "data/batch-orphan/x.parquet", pa.table({"n_nationkey": [999]}))
+    before = _snap_data_keys(root)
+    assert "data/batch-orphan/x.parquet" in before
+    want = sorted(map(tuple, snapshot_read(spark, root).collect()))
+    # a FRESH unreferenced file may be an append mid-commit
+    assert snapshot_gc(root) == {"orphans": [], "expired": []}
+    assert snapshot_gc(root, orphan_grace_s=0) == \
+        {"orphans": ["data/batch-orphan/x.parquet"], "expired": []}
+    assert _snap_data_keys(root) == before - {"data/batch-orphan/x.parquet"}
+    assert sorted(map(tuple, snapshot_read(spark, root).collect())) == want
+    v3 = snapshot_compact(spark, root)
+    out = snapshot_gc(root, retain_versions=1, orphan_grace_s=0)
+    assert out["expired"] and out["orphans"] == []
+    assert snapshot_versions(root) == [v3]
+    assert sorted(map(tuple, snapshot_read(spark, root, v3).collect())) == want
+    assert snapshot_gc(root, orphan_grace_s=0) == {"orphans": [], "expired": []}
+    with pytest.raises(ValueError, match="retain_versions"):
+        snapshot_gc(root, retain_versions=0)
+
+
+def _check_gc_age_horizon(spark, sf_dir, root, age_v1=None):
+    """older_than_s is the VACUUM-RETAIN-shaped age horizon, keyed on the
+    manifest's store mtime: with ``age_v1`` (a way to make v1's manifest
+    two hours old) a 3600 s horizon drops exactly v1 — previewed first by
+    a dry run; at 0 s every version is too old, yet the newest survives
+    and keeps reading."""
+    from pysparkdb.sources import (
+        snapshot_append, snapshot_gc, snapshot_read, snapshot_rewrite,
+        snapshot_versions,
+    )
+
+    region = tables(spark, sf_dir)["region"]
+    snapshot_append(region, root)                                        # v1
+    snapshot_rewrite(spark, root, region.filter(F.col("r_regionkey") < 3))  # v2
+    snapshot_append(region.filter(F.col("r_regionkey") >= 3), root)     # v3
+    v1_files = set(_snap_manifest(root, 1)["files"])
+    if age_v1 is not None:
+        age_v1()
+        preview = snapshot_gc(root, older_than_s=3600, orphan_grace_s=0,
+                              dry_run=True)
         assert snapshot_versions(root) == [1, 2, 3]
         assert snapshot_read(spark, root, 1).count() == region.count()
         out = snapshot_gc(root, older_than_s=3600, orphan_grace_s=0)
@@ -576,77 +720,347 @@ class TestSnapshotVersioning:
         assert snapshot_versions(root) == [2, 3]
         assert out["expired"], "v1's exclusively-referenced files expire"
         assert snapshot_read(spark, root, 2).count() == 3
-        assert snapshot_read(spark, root, 3).count() == region.count()
-        # everything is now "older than 0 s", but the newest survives
-        snapshot_gc(root, older_than_s=0, orphan_grace_s=0)
-        assert snapshot_versions(root) == [3]
-        assert snapshot_read(spark, root).count() == region.count()
-        assert not v1_files & set(snapshot_read(spark, root).inputFiles())
+    out = snapshot_gc(root, older_than_s=0, orphan_grace_s=3600)
+    assert snapshot_versions(root) == [3]
+    assert snapshot_read(spark, root).count() == region.count()
+    if age_v1 is None:
+        assert set(out["expired"]) == v1_files, "v1's bytes reclaimed"
+    assert not v1_files & set(_snap_manifest(root, 3)["files"])
 
-    def test_snapshot_tags_pin_and_survive_gc(self, spark, sf_dir, tmp_path):
-        """Named tags (the Iceberg-tag analog): a training run tags the
-        corpus version it read; readers resolve the NAME through
-        snapshot_read / attach_snapshot / snapshot_diff; a tagged version
-        is retention-PINNED (no GC horizon expires it) until the tag is
-        deliberately deleted — the property that makes a tag a contract
-        rather than a comment."""
-        from pysparkdb.engine import Engine
-        from pysparkdb.sources.versioned import (
-            snapshot_append, snapshot_diff, snapshot_gc, snapshot_read,
-            snapshot_rewrite, snapshot_tag, snapshot_tags, snapshot_untag,
-            snapshot_versions,
-        )
 
-        root = str(tmp_path / "snap")
-        region = tables(spark, sf_dir)["region"]
-        snapshot_append(region, root)                                  # v1
-        snapshot_rewrite(
-            spark, root, region.filter(F.col("r_regionkey") < 3))      # v2
-        snapshot_append(
-            region.filter(F.col("r_regionkey") >= 3), root)            # v3
-        assert snapshot_tag(root, "train-v1", 1) == 1
-        assert snapshot_tag(root, "latest-good") == 3  # default: latest
-        assert snapshot_tags(root) == {"train-v1": 1, "latest-good": 3}
-        # readers resolve the name
-        assert snapshot_read(spark, root, "train-v1").count() == \
-            region.count()
-        d = snapshot_diff(spark, root, "train-v1", "latest-good",
-                          ["r_regionkey"])
-        assert d.count() == 0  # same key membership across the pair
-        eng = Engine(spark)
-        try:
-            eng.attach_snapshot("region_train", root, version="train-v1")
-            assert spark.table("region_train").count() == region.count()
-        finally:
-            spark.catalog.dropTempView("region_train")
-        # a tag is not silently movable
-        with pytest.raises(ValueError, match="already exists"):
-            snapshot_tag(root, "train-v1", 2)
+def _check_tags(spark, sf_dir, root, view):
+    """Named tags (the Iceberg-tag analog): readers resolve the NAME
+    through read / attach_snapshot / diff; a tag is not silently movable
+    and its name is key-safe; a tagged version is retention-PINNED (no GC
+    horizon expires it) until the tag is deliberately deleted."""
+    from pysparkdb.engine import Engine
+    from pysparkdb.sources import (
+        S3Root, snapshot_append, snapshot_diff, snapshot_gc, snapshot_read,
+        snapshot_rewrite, snapshot_tag, snapshot_tags, snapshot_untag,
+        snapshot_versions,
+    )
+
+    region = tables(spark, sf_dir)["region"]
+    snapshot_append(region, root)                                        # v1
+    snapshot_rewrite(spark, root, region.filter(F.col("r_regionkey") < 3))  # v2
+    snapshot_append(region.filter(F.col("r_regionkey") >= 3), root)     # v3
+    assert snapshot_tag(root, "train-v1", 1) == 1
+    assert snapshot_tag(root, "latest-good") == 3  # default: latest
+    assert snapshot_tags(root) == {"train-v1": 1, "latest-good": 3}
+    assert snapshot_read(spark, root, "train-v1").count() == region.count()
+    assert snapshot_diff(spark, root, "train-v1", "latest-good",
+                         ["r_regionkey"]).count() == 0
+    d = snapshot_diff(spark, root, "train-v1", 2, ["r_regionkey"])
+    assert {(r.r_regionkey, r._change) for r in d.collect()} == \
+        {(3, "delete"), (4, "delete")}
+    eng = Engine(spark)
+    try:
+        eng.attach_snapshot(view, root, version="train-v1")
+        assert spark.table(view).count() == region.count()
+    finally:
+        spark.catalog.dropTempView(view)
+    with pytest.raises(ValueError, match="already exists"):
+        snapshot_tag(root, "train-v1", 2)
+    for bad in ("../escape", "a/b"):
         with pytest.raises(ValueError, match="invalid tag name"):
-            snapshot_tag(root, "../escape", 1)
-        # ...even when the winner lands BETWEEN the exists-check and the
-        # publish: the create-only path links (O_EXCL semantics), so the
-        # racing loser gets the refusal, not a silent overwrite — the
-        # local twin of the remote conditional PUT (commit 39da-era race)
+            snapshot_tag(root, bad, 1)
+    if not isinstance(root, S3Root):
+        # the winner landing between any existence check and the publish
+        # still refuses the loser: the tag is published create-only
         import unittest.mock as _mock
 
         with _mock.patch("os.path.exists", return_value=False):
             with pytest.raises(ValueError, match="already exists"):
                 snapshot_tag(root, "train-v1", 2)
-        assert snapshot_tags(root)["train-v1"] == 1  # winner undisturbed
-        # retention pin: the horizon cannot expire the tagged v1
-        snapshot_gc(root, retain_versions=1, orphan_grace_s=0)
-        assert snapshot_versions(root) == [1, 3]
-        assert snapshot_read(spark, root, "train-v1").count() == \
-            region.count()
-        # untag releases the pin; the next sweep expires it
+    assert snapshot_tags(root)["train-v1"] == 1  # winner undisturbed
+    snapshot_gc(root, retain_versions=1, orphan_grace_s=0)
+    assert snapshot_versions(root) == [1, 3]
+    assert snapshot_read(spark, root, "train-v1").count() == region.count()
+    snapshot_untag(root, "train-v1")
+    with pytest.raises(ValueError, match="not found"):
         snapshot_untag(root, "train-v1")
-        with pytest.raises(ValueError, match="not found"):
-            snapshot_untag(root, "train-v1")
-        snapshot_gc(root, retain_versions=1, orphan_grace_s=0)
-        assert snapshot_versions(root) == [3]
-        with pytest.raises(ValueError, match="not found"):
-            snapshot_read(spark, root, "train-v1")
+    out = snapshot_gc(root, retain_versions=1, orphan_grace_s=0)
+    assert out["expired"]
+    assert snapshot_versions(root) == [3]
+    with pytest.raises(ValueError, match="not found"):
+        snapshot_read(spark, root, "train-v1")
+
+
+def _check_tag_during_gc(spark, sf_dir, root):
+    """The tag-vs-GC race: a tag landing AFTER the sweep's keep set but
+    BEFORE its deletes must still pin its version — the sweep re-reads
+    tags at the last instant (injected through ``_pre_delete_hook``)."""
+    from pysparkdb.sources import (
+        snapshot_append, snapshot_gc, snapshot_read, snapshot_rewrite,
+        snapshot_tag, snapshot_versions,
+    )
+
+    region = tables(spark, sf_dir)["region"]
+    snapshot_append(region.filter(F.col("r_regionkey") < 2), root)       # v1
+    snapshot_append(region.filter(F.col("r_regionkey") >= 2), root)      # v2
+    # terminal rewrite-to-empty: v3 references NOTHING, so without the
+    # racing tag the sweep would expire every byte v1/v2 hold
+    snapshot_rewrite(spark, root, region.limit(0))                       # v3
+    v1_files = set(_snap_manifest(root, 1)["files"])
+    out = snapshot_gc(root, retain_versions=1, orphan_grace_s=0,
+                      _pre_delete_hook=lambda: snapshot_tag(root, "late", 1))
+    assert out["expired"]  # v2's exclusive bytes still reclaimed
+    assert 1 in snapshot_versions(root) and 2 not in snapshot_versions(root)
+    assert snapshot_read(spark, root, "late").count() == \
+        region.filter(F.col("r_regionkey") < 2).count()
+    assert not v1_files & set(out["expired"])
+
+
+def _check_schema_evolution(spark, sf_dir, root):
+    """An append may OMIT existing columns (its rows read NULL there —
+    on the object store too, where the reader declares the manifest
+    schema to every file's Arrow scan) or ADD one; a TYPE change raises
+    before any data is staged."""
+    from pysparkdb.sources import snapshot_append, snapshot_read
+
+    nation = tables(spark, sf_dir)["nation"]
+    snapshot_append(nation.filter(F.col("n_nationkey") < 5).select(
+        "n_nationkey", "n_name", "n_regionkey"), root)
+    snapshot_append(nation.filter(F.col("n_nationkey").between(5, 9)).select(
+        "n_nationkey", "n_name"), root)                    # omits n_regionkey
+    snapshot_append(nation.filter(F.col("n_nationkey") >= 10).select(
+        "n_nationkey"), root)                                  # keeps only the key
+    cur = snapshot_read(spark, root)
+    assert cur.columns == ["n_nationkey", "n_name", "n_regionkey"]
+    got = {r.n_nationkey: (r.n_name, r.n_regionkey) for r in cur.collect()}
+    assert len(got) == nation.count()
+    assert all(got[k][1] is not None for k in range(5))
+    assert all(got[k][1] is None for k in range(5, 25))
+    assert all(got[k][0] is None for k in range(10, 25))
+    n_keys = len(_snap_data_keys(root))
+    with pytest.raises(ValueError, match="schema evolution"):
+        snapshot_append(nation.select(  # n_regionkey is integer in the history
+            "n_nationkey",
+            F.col("n_regionkey").cast("string").alias("n_regionkey")), root)
+    assert len(_snap_data_keys(root)) == n_keys, "the failed merge staged nothing"
+
+
+def _check_compaction_history(spark, sf_dir, root):
+    """Compaction commits a new version over the same rows whose manifest
+    lists ONLY the compacted files, while the pre-compaction versions
+    still read their original files."""
+    from pysparkdb.sources import snapshot_append, snapshot_compact, snapshot_read
+
+    nation = tables(spark, sf_dir)["nation"]
+    snapshot_append(nation.filter(F.col("n_nationkey") < 10).repartition(4), root)
+    snapshot_append(nation.filter(F.col("n_nationkey") >= 10).repartition(4), root)
+    v3 = snapshot_compact(spark, root, target_files=1)
+    assert v3 == 3
+    m3 = _snap_manifest(root, 3)
+    assert m3["compaction"] and len(m3["files"]) == 1
+    assert sorted(map(tuple, snapshot_read(spark, root, 3).collect())) == \
+        sorted(map(tuple, nation.collect()))
+    assert snapshot_read(spark, root, 1).count() == 10
+    assert snapshot_read(spark, root, 2).count() == nation.count()
+    assert len(_snap_manifest(root, 2)["files"]) >= 8
+
+
+def _check_racing_append(spark, sf_dir, root, monkeypatch):
+    """An append commits at the version after the manifest it read: a
+    writer whose read went stale while another append landed raises
+    ConcurrentAppendError instead of publishing a file list that drops
+    the other's files; the winner's rows stay exactly readable, and the
+    loser's retry lands on the new latest version."""
+    from pysparkdb.sources import (
+        ConcurrentAppendError, snapshot_append, snapshot_read, snapshot_versions,
+    )
+    from pysparkdb.sources import versioned
+
+    nation = tables(spark, sf_dir)["nation"]
+    snapshot_append(nation.filter(F.col("n_nationkey") < 5), root)       # v1
+    stale = versioned._head(_snap_store(root))
+    assert snapshot_append(nation.filter(F.col("n_nationkey") >= 20), root) == 2
+    loser = nation.filter(F.col("n_nationkey").between(5, 9))
+    monkeypatch.setattr(versioned, "_head", lambda store: stale)
+    with pytest.raises(ConcurrentAppendError, match="concurrently"):
+        snapshot_append(loser, root)
+    monkeypatch.undo()
+    assert snapshot_versions(root) == [1, 2]
+    keys = {r.n_nationkey for r in snapshot_read(spark, root).collect()}
+    assert keys == set(range(5)) | set(range(20, 25))
+    assert snapshot_append(loser, root) == 3
+    keys = {r.n_nationkey for r in snapshot_read(spark, root).collect()}
+    assert keys == set(range(10)) | set(range(20, 25))
+
+
+def _check_retries_reland(spark, sf_dir, root, monkeypatch):
+    """retries=N: the losing writer re-reads the new latest manifest and
+    re-commits its ALREADY-WRITTEN batch under the next version — both
+    writers' rows present, the retried manifest lists one batch exactly
+    once on top of the winner's files."""
+    from pysparkdb.sources import snapshot_append, snapshot_read, snapshot_versions
+    from pysparkdb.sources import versioned
+
+    nation = tables(spark, sf_dir)["nation"]
+    snapshot_append(nation, root)                                        # v1
+    stale = versioned._head(_snap_store(root))
+    snapshot_append(nation.limit(5), root)                               # A: v2
+    real_head = versioned._head
+    calls = []
+
+    def stale_once(store):
+        calls.append(None)
+        return stale if len(calls) == 1 else real_head(store)
+
+    monkeypatch.setattr(versioned, "_head", stale_once)
+    staged = _snap_data_keys(root)
+    assert snapshot_append(nation.limit(3), root, retries=2) == 3
+    monkeypatch.undo()
+    assert snapshot_versions(root) == [1, 2, 3]
+    assert snapshot_read(spark, root).count() == nation.count() + 5 + 3
+    m2, m3 = _snap_manifest(root, 2), _snap_manifest(root, 3)
+    assert set(m2["files"]) < set(m3["files"])
+    assert len(set(m3["files"])) == len(m3["files"])
+    # nothing was rewritten: one batch was staged for both attempts
+    assert _snap_data_keys(root) - staged == set(m3["files"]) - set(m2["files"])
+
+
+def _check_retries_exhausted(spark, sf_dir, root, monkeypatch):
+    """When every attempt races (the read pinned permanently stale),
+    retries=1 raises after its second loss instead of spinning."""
+    from pysparkdb.sources import ConcurrentAppendError, snapshot_append
+    from pysparkdb.sources import versioned
+
+    nation = tables(spark, sf_dir)["nation"]
+    snapshot_append(nation, root)                                        # v1
+    stale = versioned._head(_snap_store(root))
+    snapshot_append(nation.limit(2), root)                               # v2
+    monkeypatch.setattr(versioned, "_head", lambda store: stale)
+    with pytest.raises(ConcurrentAppendError):
+        snapshot_append(nation.limit(1), root, retries=1)
+    monkeypatch.undo()
+
+
+def _check_stream_sink(spark, sf_dir, root, tmp_path):
+    """Each micro-batch commits as one snapshot version; a REPLAYED epoch
+    (foreachBatch's at-least-once failure mode) is skipped, not
+    double-appended; a checkpoint-resumed run commits only the new data
+    while earlier versions keep time-traveling."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pysparkdb.sources import (
+        commit_epoch, last_committed_epoch, snapshot_read,
+        snapshot_stream_sink, snapshot_versions,
+    )
+
+    land = tmp_path / "landing"
+    land.mkdir()
+    ckpt = str(tmp_path / "ckpt")
+    docs = tables(spark, sf_dir)["documents"]
+
+    def write_file(name, df):
+        # single parquet FILE (the file-stream source does not recurse
+        # into the directories df.write.parquet would create)
+        pq.write_table(pa.Table.from_pandas(df.toPandas()), str(land / name))
+
+    def drain():
+        stream = spark.readStream.schema(docs.schema).parquet(str(land))
+        q = snapshot_stream_sink(stream, root, ckpt).trigger(
+            availableNow=True).start()
+        q.awaitTermination(120)
+
+    write_file("a.parquet", docs.filter(F.col("doc_id") < 100))
+    drain()
+    v_first = snapshot_versions(root)
+    assert len(v_first) >= 1
+    assert snapshot_read(spark, root).count() == 100
+    epoch = last_committed_epoch(root)
+    assert epoch is not None
+    assert commit_epoch(docs.filter(F.col("doc_id") < 100), root, epoch) is None
+    assert snapshot_versions(root) == v_first
+    write_file("b.parquet", docs.filter(F.col("doc_id").between(100, 149)))
+    drain()
+    assert len(snapshot_versions(root)) == len(v_first) + 1
+    assert snapshot_read(spark, root).count() == 150
+    assert snapshot_read(spark, root, v_first[-1]).count() == 100
+
+
+def _check_epoch_propagation(spark, sf_dir, root):
+    """Appends, compactions and rewrites propagate ``last_epoch``, so the
+    NEWEST manifest answers the streaming replay check behind a
+    maintenance-only tail, and horizon expiry never reopens the door to a
+    replayed micro-batch."""
+    from pysparkdb.sources import (
+        commit_epoch, last_committed_epoch, snapshot_append, snapshot_compact,
+        snapshot_gc, snapshot_read, snapshot_rewrite,
+    )
+
+    region = tables(spark, sf_dir)["region"]
+    b0 = region.filter(F.col("r_regionkey") < 2)
+    b1 = region.filter(F.col("r_regionkey") >= 2)
+    assert commit_epoch(b0, root, epoch_id=0) == 1
+    assert commit_epoch(b1, root, epoch_id=1) == 2
+    snapshot_compact(spark, root)                                        # v3
+    snapshot_append(b0, root)                                            # v4
+    snapshot_rewrite(spark, root, region)                                # v5
+    for v in (3, 4, 5):
+        m = _snap_manifest(root, v)
+        assert m.get("epoch") is None and m["last_epoch"] == 1, v
+    assert last_committed_epoch(root) == 1
+    assert commit_epoch(b1, root, epoch_id=1) is None
+    snapshot_gc(root, orphan_grace_s=0, retain_versions=1)
+    assert last_committed_epoch(root) == 1
+    assert commit_epoch(b1, root, epoch_id=1) is None
+    assert commit_epoch(b0, root, epoch_id=2) == 6
+    assert snapshot_read(spark, root).count() == region.count() + b0.count()
+
+
+class TestSnapshotVersioning:
+    """Manifest-based time travel (sources/versioned.py): immutable data
+    files + per-version file lists — the minimal core of a transaction
+    log, for reproducible training snapshots."""
+
+    def test_append_creates_versions_and_time_travel(self, spark, sf_dir, tmp_path):
+        _check_time_travel(spark, sf_dir, str(tmp_path / "snap"))
+
+    def test_racing_commits_of_one_version_keep_the_first(self, tmp_path):
+        """Manifests publish create-only: a second commit of the same
+        version raises ConcurrentAppendError and leaves the first manifest
+        intact, with no temp manifest behind."""
+        from pysparkdb.sources import ConcurrentAppendError
+        from pysparkdb.sources.versioned import _EMPTY, _commit, _store
+
+        root = str(tmp_path / "snap")
+        store = _store(root)
+        _commit(store, [], _EMPTY, ["data/a.parquet"], 3, None, None, "a")
+        with pytest.raises(ConcurrentAppendError, match="concurrently"):
+            _commit(store, [], _EMPTY, ["data/b.parquet"], 5, None, None, "b")
+        m = _snap_manifest(root, 1)
+        assert (m["files"], m["n_rows"]) == (["data/a.parquet"], 3)
+        mdir = os.path.join(root, "_manifests")
+        assert os.listdir(mdir) == ["v1.json"], "tmp manifest left behind"
+
+    def test_append_racing_another_append_raises(
+            self, spark, sf_dir, tmp_path, monkeypatch):
+        _check_racing_append(spark, sf_dir, str(tmp_path / "snap"), monkeypatch)
+
+    def test_append_retries_reland_and_exhaust(
+            self, spark, sf_dir, tmp_path, monkeypatch):
+        _check_retries_reland(spark, sf_dir, str(tmp_path / "a"), monkeypatch)
+        _check_retries_exhausted(spark, sf_dir, str(tmp_path / "b"), monkeypatch)
+
+    def test_epoch_propagation_across_maintenance(self, spark, sf_dir, tmp_path):
+        _check_epoch_propagation(spark, sf_dir, str(tmp_path / "snap"))
+
+    def test_snapshot_gc_age_horizon(self, spark, sf_dir, tmp_path):
+        import time as _t
+
+        root = str(tmp_path / "snap")
+
+        def age_v1():
+            old = _t.time() - 7200
+            os.utime(os.path.join(root, "_manifests", "v1.json"), (old, old))
+
+        _check_gc_age_horizon(spark, sf_dir, root, age_v1)
+
+    def test_snapshot_tags_pin_and_survive_gc(self, spark, sf_dir, tmp_path):
+        _check_tags(spark, sf_dir, str(tmp_path / "snap"), "region_train")
 
     def test_snapshot_tag_publish_without_hardlink_support(
         self, spark, sf_dir, tmp_path, monkeypatch
@@ -687,43 +1101,7 @@ class TestSnapshotVersioning:
 
     def test_tag_created_during_gc_survives_local(
             self, spark, sf_dir, tmp_path):
-        """The tag-vs-GC race (VERDICT r13 #3): a snapshot_tag landing
-        AFTER the sweep's reference-set build but BEFORE its deletes must
-        still pin its version — the sweep re-reads tags at the last
-        instant before deleting. Injects the tag through the GC's
-        ``_pre_delete_hook`` seam, exactly the window the old code lost."""
-        from pysparkdb.sources.versioned import (
-            snapshot_append, snapshot_gc, snapshot_read, snapshot_rewrite,
-            snapshot_tag, snapshot_versions,
-        )
-
-        root = str(tmp_path / "snapgcrace")
-        region = tables(spark, sf_dir)["region"]
-        snapshot_append(region.filter(F.col("r_regionkey") < 2), root)  # v1
-        snapshot_append(region.filter(F.col("r_regionkey") >= 2), root)  # v2
-        # terminal rewrite-to-empty: v3 references NOTHING, so without
-        # the racing tag the sweep would expire every byte v1/v2 hold
-        snapshot_rewrite(spark, root, region.limit(0))                   # v3
-
-        def racing_tagger():
-            snapshot_tag(root, "train-late", 1)
-
-        out = snapshot_gc(root, retain_versions=1, orphan_grace_s=0,
-                          _pre_delete_hook=racing_tagger)
-        assert out["expired"]  # v2's exclusive bytes still reclaimed
-        # v1 was in the drop set when the reference sets were built; the
-        # last-instant re-read must rescue it (manifest AND bytes intact)
-        assert 1 in snapshot_versions(root)
-        assert 2 not in snapshot_versions(root)
-        assert snapshot_read(spark, root, "train-late").count() == \
-            region.filter(F.col("r_regionkey") < 2).count()
-        # nothing v1 references was expired
-        import json as _json
-        import os as _os
-
-        with open(_os.path.join(root, "_manifests", "v1.json")) as f:
-            v1_files = set(_json.load(f)["files"])
-        assert not (v1_files & set(out["expired"]))
+        _check_tag_during_gc(spark, sf_dir, str(tmp_path / "snapgcrace"))
 
     def test_local_snapshot_views_route_through_segment_cache(
             self, spark, sf_dir, tmp_path):
@@ -768,63 +1146,53 @@ class TestSnapshotVersioning:
             spark.catalog.dropTempView("nation_pin")
 
     def test_rewrite_to_empty_reads_back_local(self, spark, sf_dir, tmp_path):
-        """Local/remote contract parity on the erasure terminal state: a
-        version whose manifest lists NO files reads back as the EMPTY
-        frame under the recorded schema (exactly as
-        arrow_s3_snapshot_read does) — an all-rows-erased local
-        snapshot_rewrite must not strand the store. Covers both the e2e
-        rewrite-to-empty (whatever file shape Spark's writer emits for an
-        empty frame) and the literal ``files: []`` manifest."""
         from pysparkdb.engine import Engine
-        from pysparkdb.sources.versioned import (
-            _commit, _schema_dict, snapshot_append, snapshot_read,
-            snapshot_rewrite, snapshot_versions,
-        )
 
-        root = str(tmp_path / "snap")
-        region = tables(spark, sf_dir)["region"]
-        snapshot_append(region, root)                             # v1
-        v2 = snapshot_rewrite(spark, root, region.filter(F.lit(False)))
-        empty = snapshot_read(spark, root, v2)
-        assert empty.count() == 0
-        assert [f.name for f in empty.schema.fields] == region.columns
-        # history untouched
-        assert snapshot_read(spark, root, 1).count() == region.count()
-        # the literal empty-manifest shape (what the remote writer
-        # commits: empty partitions produce zero objects)
-        _commit(root, v2 + 1, [], 0, v2, schema=_schema_dict(region.schema))
-        assert snapshot_versions(root)[-1] == v2 + 1
-        latest = snapshot_read(spark, root)
-        assert latest.count() == 0
-        assert [f.name for f in latest.schema.fields] == region.columns
-        # the engine front door pins it too
-        eng = Engine(spark)
         try:
-            eng.attach_snapshot("region_erased_local", root)
-            assert spark.table("region_erased_local").count() == 0
+            _check_rewrite_to_empty(spark, sf_dir, str(tmp_path / "snap"),
+                                    Engine(spark), "region_erased_local")
         finally:
             spark.catalog.dropTempView("region_erased_local")
 
-    def test_compaction_preserves_history(self, spark, sf_dir, tmp_path):
-        import glob
-
-        from pysparkdb.sources.versioned import (
-            snapshot_append, snapshot_compact, snapshot_read,
-        )
+    def test_repin_releases_the_old_versions_segments(
+            self, spark, sf_dir, tmp_path):
+        """Re-pinning a name at a new version releases the segments cached
+        under the old origin: none of them remains, the cache's byte count
+        is the sum of its live entries, and hybrid rows equal pushdown."""
+        from pysparkdb.engine import Engine
+        from pysparkdb.sources.versioned import snapshot_append
 
         root = str(tmp_path / "snap")
         nation = tables(spark, sf_dir)["nation"]
-        snapshot_append(nation.filter(F.col("n_nationkey") < 10).repartition(4), root)
-        snapshot_append(nation.filter(F.col("n_nationkey") >= 10).repartition(4), root)
-        v3 = snapshot_compact(spark, root, target_files=1)
-        assert v3 == 3
-        # same rows, fewer files
-        assert snapshot_read(spark, root, 3).count() == nation.count()
-        files_v3 = len(snapshot_read(spark, root, 3).inputFiles())
-        assert files_v3 == 1
-        # pre-compaction versions still read their original files unchanged
-        assert snapshot_read(spark, root, 1).count() == 10
-        assert snapshot_read(spark, root, 2).count() == nation.count()
+        snapshot_append(nation.filter(F.col("n_nationkey") < 10), root)  # v1
+        snapshot_append(nation.filter(F.col("n_nationkey") >= 10), root)  # v2
+        eng = Engine(spark).set_mode("hybrid")
+        q = ("SELECT n_regionkey, COUNT(*) AS n FROM nation_repin "
+             "GROUP BY n_regionkey ORDER BY n_regionkey")
+        try:
+            eng.attach_snapshot("nation_repin", root, version=1)
+            eng.sql(q).collect()
+            cm = eng._segment_cache
+            old = f"nation_repin@{root}@v1"
+            assert any(t == old for t, _ in cm.entries), "v1 segment cached"
+            eng.attach_snapshot("nation_repin", root, version=2, replace=True)
+            assert not any(t == old for t, _ in cm.entries)
+            assert cm.used == sum(e.size_bytes for e in cm.entries.values())
+            got = eng.sql(q).collect()
+            assert got == eng.sql(q, mode="pushdown").collect()
+            assert sum(r.n for r in got) == nation.count()
+        finally:
+            eng.clear_segment_cache()
+            eng.set_mode("pushdown")
+            spark.catalog.dropTempView("nation_repin")
+
+    def test_compaction_preserves_history(self, spark, sf_dir, tmp_path):
+        from pysparkdb.sources.versioned import snapshot_read
+
+        root = str(tmp_path / "snap")
+        _check_compaction_history(spark, sf_dir, root)
+        # locally the plan reads exactly the manifest's files
+        assert len(snapshot_read(spark, root, 3).inputFiles()) == 1
         assert len(snapshot_read(spark, root, 2).inputFiles()) >= 8
 
     def test_read_rejects_unknown_version(self, spark, sf_dir, tmp_path):
@@ -866,97 +1234,13 @@ class TestSnapshotVersioning:
         assert spark.read.parquet(out).count() == orders.count()
 
     def test_snapshot_rewrite_is_the_delete_path(self, spark, sf_dir, tmp_path):
-        """snapshot_rewrite commits a full-replacement version: dropped
-        rows vanish from the new version, history still reads intact, and
-        the diff against the parent is pure deletes."""
-        from pyspark.sql import functions as F
-
-        from pysparkdb.sources.versioned import (
-            snapshot_append, snapshot_diff, snapshot_read, snapshot_rewrite,
-        )
-
-        nation = tables(spark, sf_dir)["nation"]
-        root = str(tmp_path / "snap")
-        snapshot_append(nation, root)  # v1: all 25
-        v2 = snapshot_rewrite(
-            spark, root,
-            snapshot_read(spark, root, 1).filter(F.col("n_nationkey") % 5 != 0),
-        )
-        assert v2 == 2
-        assert snapshot_read(spark, root, 2).count() == 20
-        assert snapshot_read(spark, root, 1).count() == 25  # history intact
-        d = snapshot_diff(spark, root, 1, 2, ["n_nationkey"])
-        rows = {(r.n_nationkey, r._change) for r in d.collect()}
-        assert rows == {(k, "delete") for k in (0, 5, 10, 15, 20)}
+        _check_rewrite(spark, sf_dir, str(tmp_path / "snap"))
 
     def test_snapshot_gc_orphans_and_retention(self, spark, sf_dir, tmp_path):
-        """VACUUM contract: orphan batch dirs (crashed uncommitted writes)
-        are deleted; with a retention horizon, files referenced ONLY by
-        expired versions go while every retained version keeps reading
-        byte-identical results."""
-        import os
-
-        from pyspark.sql import functions as F
-
-        from pysparkdb.sources.versioned import (
-            snapshot_append, snapshot_compact, snapshot_gc,
-            snapshot_read, snapshot_versions,
-        )
-
-        nation = tables(spark, sf_dir)["nation"]
-        root = str(tmp_path / "snap")
-        snapshot_append(nation.filter(F.col("n_nationkey") < 10), root)   # v1
-        snapshot_append(nation.filter(F.col("n_nationkey") >= 10), root)  # v2
-        snapshot_compact(spark, root, target_files=1)                      # v3
-
-        # plant an orphan (crashed write that never committed)
-        orphan_dir = os.path.join(root, "data", "batch-9-deadbeef")
-        os.makedirs(orphan_dir)
-        with open(os.path.join(orphan_dir, "part-0.parquet"), "wb") as f:
-            f.write(b"junk")
-
-        before = snapshot_read(spark, root, 3).count()
-        # a FRESH unreferenced file may be an append mid-commit: the
-        # default grace window must leave it alone
-        assert snapshot_gc(root)["orphans"] == []
-        out = snapshot_gc(root, retain_versions=1, orphan_grace_s=0)  # keep v3
-        assert any("batch-9-deadbeef" in p for p in out["orphans"])
-        # v1/v2's pre-compaction files are referenced by no retained
-        # manifest -> expired; v3 (compacted) still reads identically
-        assert out["expired"]
-        assert snapshot_versions(root) == [3]
-        assert snapshot_read(spark, root, 3).count() == before
-        # a second GC is a no-op (idempotent)
-        assert snapshot_gc(root, orphan_grace_s=0) == {"orphans": [], "expired": []}
-        # degenerate horizon is rejected, not silently ignored
-        import pytest as _pytest
-        with _pytest.raises(ValueError, match="retain_versions"):
-            snapshot_gc(root, retain_versions=0)
+        _check_gc_orphans_and_retention(spark, sf_dir, str(tmp_path / "snap"))
 
     def test_snapshot_diff_cdc_between_versions(self, spark, sf_dir, tmp_path):
-        """Reader-side CDC: the diff of two versions is exactly the key
-        delta, tagged insert/delete; append-only diffs never scan shared
-        files (they are common to both manifests), and the self-diff is
-        empty."""
-        from pyspark.sql import functions as F
-
-        from pysparkdb.sources.versioned import snapshot_append, snapshot_diff
-
-        nation = tables(spark, sf_dir)["nation"]
-        root = str(tmp_path / "snap")
-        snapshot_append(nation.filter(F.col("n_nationkey") < 10), root)   # v1
-        snapshot_append(nation.filter(F.col("n_nationkey").between(10, 14)), root)  # v2
-
-        d12 = snapshot_diff(spark, root, 1, 2, ["n_nationkey"])
-        rows = {(r.n_nationkey, r._change) for r in d12.collect()}
-        assert rows == {(k, "insert") for k in range(10, 15)}
-        # reverse direction: the same keys read as deletes
-        d21 = snapshot_diff(spark, root, 2, 1, ["n_nationkey"])
-        assert {(r.n_nationkey, r._change) for r in d21.collect()} == {
-            (k, "delete") for k in range(10, 15)
-        }
-        # self-diff: identical manifests short-circuit to an empty frame
-        assert snapshot_diff(spark, root, 2, 2, ["n_nationkey"]).count() == 0
+        _check_diff(spark, sf_dir, str(tmp_path / "snap"))
 
     def test_snapshot_diff_detect_updates(self, spark, sf_dir, tmp_path):
         """A rewrite that CHANGES a payload under a stable key is invisible
@@ -1055,47 +1339,7 @@ class TestSnapshotVersioning:
     def test_schema_evolution_omitted_and_conflicting_columns(
         self, spark, sf_dir, tmp_path
     ):
-        """An append may OMIT existing columns (its rows read as NULL
-        there); a TYPE change is rejected before any data stages (no
-        orphan batch directory), directing callers to snapshot_rewrite."""
-        import os
-
-        import pytest
-        from pyspark.sql import functions as F
-
-        from pysparkdb.sources.versioned import snapshot_append, snapshot_read
-
-        nation = tables(spark, sf_dir)["nation"]
-        root = str(tmp_path / "snap")
-        snapshot_append(
-            nation.filter(F.col("n_nationkey") < 5).select(
-                "n_nationkey", "n_name", "n_regionkey"
-            ),
-            root,
-        )
-        snapshot_append(  # omits n_regionkey
-            nation.filter(F.col("n_nationkey").between(5, 9)).select(
-                "n_nationkey", "n_name"
-            ),
-            root,
-        )
-        cur = snapshot_read(spark, root)
-        assert cur.columns == ["n_nationkey", "n_name", "n_regionkey"]
-        got = {r.n_nationkey: r.n_regionkey for r in cur.collect()}
-        assert all(got[k] is not None for k in range(5))
-        assert all(got[k] is None for k in range(5, 10))
-
-        n_dirs = len(os.listdir(os.path.join(root, "data")))
-        with pytest.raises(ValueError, match="schema evolution"):
-            snapshot_append(  # n_regionkey is integer in the history
-                nation.select(
-                    "n_nationkey",
-                    F.col("n_regionkey").cast("string").alias("n_regionkey"),
-                ),
-                root,
-            )
-        # the failed merge staged nothing (no orphan batch directory)
-        assert len(os.listdir(os.path.join(root, "data"))) == n_dirs
+        _check_schema_evolution(spark, sf_dir, str(tmp_path / "snap"))
 
     def test_schema_evolution_diff_and_rewrite(self, spark, sf_dir, tmp_path):
         """snapshot_diff across an evolution: inserts carry the new column,
@@ -1302,16 +1546,16 @@ def test_console_remote_snapshot_pin_and_stats(spark, sf_dir):
     server.start()
     try:
         _, port = server.get_host_and_port()
+        from pysparkdb.sources import S3Root, snapshot_append
         from pysparkdb.sources.arrow_s3 import S3Conf, _boto3_client
-        from pysparkdb.sources import arrow_s3_snapshot_append
 
         conf = S3Conf(endpoint=f"http://127.0.0.1:{port}",
                       access_key="ak", secret_key="sk", region="us-east-1")
         _boto3_client(conf).create_bucket(Bucket="consolebkt")
         root = "s3://consolebkt/snap/region"
         region = tables(spark, sf_dir)["region"]
-        arrow_s3_snapshot_append(region, root, conf)            # v0
-        arrow_s3_snapshot_append(region.limit(2), root, conf)   # v1
+        snapshot_append(region, S3Root(root, conf))             # v1
+        snapshot_append(region.limit(2), S3Root(root, conf))    # v2
 
         env = dict(os.environ,
                    AWS_ENDPOINT_URL=f"http://127.0.0.1:{port}",
@@ -1320,20 +1564,25 @@ def test_console_remote_snapshot_pin_and_stats(spark, sf_dir):
         out = subprocess.run(
             [_sys.executable, "scripts/console.py", "--data-dir", sf_dir,
              "-c", f"\\versions {root}",
-             "-c", f"\\pin region_v0 {root} 0",
-             "-c", "SELECT COUNT(*) AS n FROM region_v0",
-             "-c", "\\stats region_v0 r_regionkey",
-             # \diff routes s3:// through the jar-less manifest path; the
+             "-c", f"\\pin region_v1 {root} 1",
+             "-c", "SELECT COUNT(*) AS n FROM region_v1",
+             "-c", "\\stats region_v1 r_regionkey",
+             # \diff routes s3:// through the same manifest protocol; the
              # re-appended rows surface as inserts (new ROWS under the
              # documented keys-unique-per-snapshot assumption)
-             "-c", f"\\diff {root} 0 1 r_regionkey"],
+             "-c", f"\\diff {root} 1 2 r_regionkey",
+             "-c", f"\\tag {root} trainv1 1",
+             "-c", f"\\tags {root}",
+             "-c", f"\\gc {root} 1 0"],
             capture_output=True, text=True, env=env,
             cwd=os.path.join(os.path.dirname(__file__), ".."), timeout=240,
         )
         assert out.returncode == 0, out.stderr[-800:]
-        assert "[0, 1]" in out.stdout
-        assert "region_v0: 5 rows" in out.stdout  # v0 pinned, not v1's 7
+        assert "[1, 2]" in out.stdout
+        assert "region_v1: 5 rows" in out.stdout  # v1 pinned, not v2's 7
         assert "r_regionkey_min" in out.stdout
+        assert "trainv1 -> v1" in out.stdout and "{'trainv1': 1}" in out.stdout
+        assert "expired 0 object(s)" in out.stdout  # v2 lists v1's objects
         assert "_change" in out.stdout and "insert" in out.stdout
     finally:
         server.stop()
@@ -1788,556 +2037,178 @@ class TestArrowObjectStore:
         check()
 
     def test_snapshot_time_travel_on_object_store(self, spark, sf_dir, moto_s3):
-        """Manifest snapshots ON the object store: two appends → two
-        versions; reading v0 after v1 commits returns exactly v0's rows
-        (time travel pins bytes); latest = union; an extra ORPHAN data
-        object (a crashed append's leftovers) is invisible to every
-        snapshot read — manifest-pinned planning, not prefix listing."""
-        from pysparkdb.sources import (
-            arrow_s3_snapshot_append,
-            arrow_s3_snapshot_read,
-            arrow_s3_snapshot_versions,
-        )
-        from pysparkdb.sources.arrow_s3 import _boto3_client
+        from pysparkdb.sources import S3Root
 
-        root = "s3://testbkt/snap/nation"
-        nation = tables(spark, sf_dir)["nation"]
-        batch0 = nation.filter(F.col("n_nationkey") < 10)
-        batch1 = nation.filter(F.col("n_nationkey") >= 10)
-        v0 = arrow_s3_snapshot_append(batch0, root, moto_s3)
-        v1 = arrow_s3_snapshot_append(batch1, root, moto_s3)
-        assert (v0, v1) == (0, 1)
-        assert arrow_s3_snapshot_versions(moto_s3, root) == [0, 1]
-
-        # plant an orphan object where a crashed append would leave one
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        buf = pa.BufferOutputStream()
-        pq.write_table(pa.table({"n_nationkey": [999]}), buf)
-        _boto3_client(moto_s3).put_object(
-            Bucket="testbkt", Key="snap/nation/data/batch-orphan/x.parquet",
-            Body=buf.getvalue().to_pybytes())
-
-        got0 = arrow_s3_snapshot_read(spark, root, moto_s3, version=0)
-        assert sorted(map(tuple, got0.collect())) == \
-            sorted(map(tuple, batch0.collect()))
-        latest = arrow_s3_snapshot_read(
-            spark, root, moto_s3, columns=["n_nationkey"])
-        keys = sorted(r.n_nationkey for r in latest.collect())
-        assert keys == sorted(r.n_nationkey for r in nation.collect())
-        assert 999 not in keys  # the orphan never surfaces
+        _check_time_travel(spark, sf_dir, S3Root("s3://testbkt/snap/nation", moto_s3))
 
     def test_snapshot_diff_on_object_store(self, spark, sf_dir, moto_s3):
-        """arrow_s3_snapshot_diff carries the local snapshot_diff CDC
-        contract to the object store (shared _diff_tagged core): appended
-        keys surface as inserts (reverse direction = deletes), identical
-        versions diff empty, and after a COMPACTION — which rewrites the
-        file list so the private sets degrade to the full snapshots —
-        the diff of equal row sets is still empty (the join does the
-        work the short-circuit no longer can)."""
-        from pysparkdb.sources import (
-            arrow_s3_snapshot_append,
-            arrow_s3_snapshot_compact,
-        )
-        from pysparkdb.sources.arrow_s3 import arrow_s3_snapshot_diff
+        from pysparkdb.sources import S3Root
 
-        root = "s3://testbkt/snapdiff/nation"
-        nation = tables(spark, sf_dir)["nation"]
-        batch0 = nation.filter(F.col("n_nationkey") < 10)
-        batch1 = nation.filter(F.col("n_nationkey") >= 10)
-        arrow_s3_snapshot_append(batch0, root, moto_s3)            # v0
-        arrow_s3_snapshot_append(batch1, root, moto_s3)            # v1
-
-        d01 = arrow_s3_snapshot_diff(
-            spark, root, moto_s3, 0, 1, ["n_nationkey"])
-        rows = d01.collect()
-        assert {r._change for r in rows} == {"insert"}
-        assert sorted(r.n_nationkey for r in rows) == \
-            sorted(r.n_nationkey for r in batch1.collect())
-
-        d10 = arrow_s3_snapshot_diff(
-            spark, root, moto_s3, 1, 0, ["n_nationkey"])
-        assert {r._change for r in d10.collect()} == {"delete"}
-        assert arrow_s3_snapshot_diff(
-            spark, root, moto_s3, 1, 1, ["n_nationkey"]).count() == 0
-        assert "_change" in arrow_s3_snapshot_diff(
-            spark, root, moto_s3, 1, 1, ["n_nationkey"]).columns
-
-        v2 = arrow_s3_snapshot_compact(spark, root, moto_s3)       # v2
-        assert arrow_s3_snapshot_diff(
-            spark, root, moto_s3, 1, v2, ["n_nationkey"]).count() == 0
-        # across the compaction boundary the append still diffs cleanly
-        d02 = arrow_s3_snapshot_diff(
-            spark, root, moto_s3, 0, v2, ["n_nationkey"])
-        assert sorted(r.n_nationkey for r in d02.collect()) == \
-            sorted(r.n_nationkey for r in batch1.collect())
+        _check_diff(spark, sf_dir, S3Root("s3://testbkt/snapdiff/nation", moto_s3))
 
     def test_snapshot_rewrite_on_object_store(self, spark, sf_dir, moto_s3):
-        """arrow_s3_snapshot_rewrite is the remote erasure path: rows
-        absent from the rewritten frame are gone from the new version
-        while the parent still time-travels to them; diff against the
-        parent feeds downstream increments (deletes + full-row updates);
-        and the GC pass reclaims the superseded objects once no retained
-        manifest references them — rewrite + GC is the complete
-        right-to-erasure story on this tier too."""
-        from pysparkdb.sources import (
-            arrow_s3_snapshot_append,
-            arrow_s3_snapshot_gc,
-            arrow_s3_snapshot_read,
-            arrow_s3_snapshot_rewrite,
-        )
-        from pysparkdb.sources.arrow_s3 import arrow_s3_snapshot_diff
+        from pysparkdb.sources import S3Root
 
-        root = "s3://testbkt/snaprw/nation"
-        nation = tables(spark, sf_dir)["nation"]
-        arrow_s3_snapshot_append(nation, root, moto_s3)              # v0
-        survivors = nation.filter(F.col("n_nationkey") < 20) \
-            .withColumn("n_comment", F.lit("[scrubbed]"))
-        v1 = arrow_s3_snapshot_rewrite(survivors, root, moto_s3)
-        assert v1 == 1
-
-        live = arrow_s3_snapshot_read(spark, root, moto_s3)
-        assert live.count() == 20
-        assert {r.n_comment for r in live.select("n_comment").collect()} \
-            == {"[scrubbed]"}
-        # history untouched: v0 still reads every original row
-        assert arrow_s3_snapshot_read(
-            spark, root, moto_s3, version=0).count() == nation.count()
-        # each version's manifest owns its schema, inspectable without a
-        # single data (or footer) GET
-        from pysparkdb.sources import arrow_s3_snapshot_schema
-        assert arrow_s3_snapshot_schema(moto_s3, root, version=0) \
-            == nation.schema
-        assert arrow_s3_snapshot_schema(moto_s3, root) == survivors.schema
-
-        # the change feed downstream increments consume: erased keys are
-        # deletes; surviving keys with a scrubbed payload are updates
-        d = arrow_s3_snapshot_diff(
-            spark, root, moto_s3, 0, 1, ["n_nationkey"],
-            detect_updates=True)
-        by_change = {r._change: set() for r in d.collect()}
-        for r in d.collect():
-            by_change[r._change].add(r.n_nationkey)
-        assert by_change["delete"] == \
-            {r.n_nationkey for r in nation.collect() if r.n_nationkey >= 20}
-        assert by_change["update"] == set(range(20))
-
-        # a rewrite may DROP columns (it owns its schema): across that
-        # boundary the diff reads each side under ITS committed schema —
-        # footer inference would read divergent ad-hoc schemas — and the
-        # dropped non-null payload surfaces as updates
-        dropped = survivors.drop("n_comment")
-        v2 = arrow_s3_snapshot_rewrite(dropped, root, moto_s3)
-        assert arrow_s3_snapshot_schema(moto_s3, root) == dropped.schema
-        d12 = arrow_s3_snapshot_diff(
-            spark, root, moto_s3, v1, v2, ["n_nationkey"],
-            detect_updates=True)
-        rows12 = d12.collect()
-        assert {r._change for r in rows12} == {"update"}
-        assert len(rows12) == 20
-
-        # the erasure terminal state: rewriting to EMPTY commits
-        # files: [] and must read back as the EMPTY frame under the
-        # committed schema (an unreadable latest would strand the store)
-        v3 = arrow_s3_snapshot_rewrite(
-            dropped.filter(F.lit(False)), root, moto_s3)
-        empty = arrow_s3_snapshot_read(spark, root, moto_s3)
-        assert empty.count() == 0 and empty.schema == dropped.schema
-        d23 = arrow_s3_snapshot_diff(
-            spark, root, moto_s3, v2, v3, ["n_nationkey"])
-        assert {r._change for r in d23.collect()} == {"delete"}
-        assert d23.count() == 20
-
-        # erasure completes at the byte level through the real retention
-        # horizon: expire everything but the (empty) latest version
-        deleted = arrow_s3_snapshot_gc(
-            moto_s3, root, orphan_grace_s=0.0, retain_versions=1)
-        assert deleted["expired"], "superseded v0-v2 objects reclaimed"
-        assert arrow_s3_snapshot_read(spark, root, moto_s3).count() == 0
+        _check_rewrite(spark, sf_dir, S3Root("s3://testbkt/snaprw/nation", moto_s3))
 
     def test_snapshot_stream_sink_on_object_store(
             self, spark, sf_dir, moto_s3, tmp_path):
-        """Streaming ingest STRAIGHT to the object store
-        (arrow_s3_snapshot_stream_sink): each micro-batch commits as one
-        remote snapshot version; a replayed epoch (foreachBatch's
-        at-least-once failure mode) is skipped, not double-appended; a
-        checkpoint-resumed run commits only the new data while earlier
-        versions keep time-traveling — the local sink's exactly-once
-        contract, remote."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+        from pysparkdb.sources import S3Root
 
-        from pysparkdb.sources import (
-            arrow_s3_commit_epoch,
-            arrow_s3_last_committed_epoch,
-            arrow_s3_snapshot_read,
-            arrow_s3_snapshot_stream_sink,
-            arrow_s3_snapshot_versions,
-        )
-
-        land = tmp_path / "landing"
-        land.mkdir()
-        root = "s3://testbkt/snapstream/docs"
-        ckpt = str(tmp_path / "ckpt")
-        docs = tables(spark, sf_dir)["documents"]
-        schema = docs.schema
-
-        def write_file(name, df):
-            pq.write_table(pa.Table.from_pandas(df.toPandas()),
-                           str(land / name))
-
-        def drain():
-            stream = spark.readStream.schema(schema).parquet(str(land))
-            q = arrow_s3_snapshot_stream_sink(
-                stream, root, moto_s3, ckpt
-            ).trigger(availableNow=True).start()
-            q.awaitTermination(120)
-
-        write_file("a.parquet", docs.filter(F.col("doc_id") < 100))
-        drain()
-        v_first = arrow_s3_snapshot_versions(moto_s3, root)
-        assert len(v_first) >= 1
-        assert arrow_s3_snapshot_read(spark, root, moto_s3).count() == 100
-
-        # replayed epoch: a no-op, no new version
-        epoch = arrow_s3_last_committed_epoch(moto_s3, root)
-        assert epoch is not None
-        assert arrow_s3_commit_epoch(
-            docs.filter(F.col("doc_id") < 100), root, moto_s3, epoch) is None
-        assert arrow_s3_snapshot_versions(moto_s3, root) == v_first
-
-        # checkpoint resume: only the new landing file commits; the
-        # pre-resume version still reads exactly its rows
-        write_file("b.parquet",
-                   docs.filter(F.col("doc_id").between(100, 149)))
-        drain()
-        assert arrow_s3_snapshot_read(spark, root, moto_s3).count() == 150
-        assert arrow_s3_snapshot_read(
-            spark, root, moto_s3, version=v_first[-1]).count() == 100
+        _check_stream_sink(spark, sf_dir,
+                           S3Root("s3://testbkt/snapstream/docs", moto_s3), tmp_path)
 
     def test_engine_attach_arrow_s3_snapshot_pins_version(
             self, spark, sf_dir, moto_s3):
         """The engine front door for object-store snapshots: attach at
         version N registers a pinned temp view that engine.sql queries,
-        equal to arrow_s3_snapshot_read(version=N) even AFTER later
-        appends; the pinned view is profileable via arrow_s3_table_stats
-        (the manifest named every object — no LIST); shadowing an
-        existing view refuses without replace=True."""
+        equal to snapshot_read(version=N) even AFTER later appends; the
+        pinned view is profileable via arrow_s3_table_stats (the manifest
+        named every object — no LIST); shadowing an existing view refuses
+        without replace=True."""
         from pysparkdb import Engine
-        from pysparkdb.sources import (
-            arrow_s3_snapshot_append,
-            arrow_s3_snapshot_read,
-        )
+        from pysparkdb.sources import S3Root, snapshot_append, snapshot_read
 
-        root = "s3://testbkt/engsnap/nation"
+        root = S3Root("s3://testbkt/engsnap/nation", moto_s3)
         nation = tables(spark, sf_dir)["nation"]
-        arrow_s3_snapshot_append(
-            nation.filter(F.col("n_nationkey") < 10), root, moto_s3)  # v0
-        arrow_s3_snapshot_append(
-            nation.filter(F.col("n_nationkey") >= 10), root, moto_s3)  # v1
+        snapshot_append(nation.filter(F.col("n_nationkey") < 10), root)   # v1
+        snapshot_append(nation.filter(F.col("n_nationkey") >= 10), root)  # v2
 
         eng = Engine(spark)
         try:
-            eng.attach_arrow_s3_snapshot("nation_v0", root, moto_s3,
-                                         version=0)
+            eng.attach_snapshot("nation_v1", root, version=1)
             # a later append must NOT leak into the pinned view
-            arrow_s3_snapshot_append(nation.limit(2), root, moto_s3)  # v2
+            snapshot_append(nation.limit(2), root)                        # v3
             got = eng.sql(
                 "SELECT COUNT(*) AS n, MAX(n_nationkey) AS mx "
-                "FROM nation_v0").collect()[0]
-            want_df = arrow_s3_snapshot_read(spark, root, moto_s3, version=0)
+                "FROM nation_v1").collect()[0]
+            want_df = snapshot_read(spark, root, 1)
             assert got.n == want_df.count() == 10
             assert got.mx == 9
-            assert sorted(map(tuple, spark.table("nation_v0").collect())) \
+            assert sorted(map(tuple, spark.table("nation_v1").collect())) \
                 == sorted(map(tuple, want_df.collect()))
 
             st = eng.arrow_s3_table_stats(
-                "nation_v0", columns=["n_nationkey"]).collect()[0]
+                "nation_v1", columns=["n_nationkey"]).collect()[0]
             assert st.rows == 10
             assert st.n_nationkey_min == 0 and st.n_nationkey_max == 9
 
             with pytest.raises(ValueError, match="replace=True"):
-                eng.attach_arrow_s3_snapshot("nation_v0", root, moto_s3)
-            eng.attach_arrow_s3_snapshot(
-                "nation_v0", root, moto_s3, replace=True)  # latest = v2
-            assert spark.table("nation_v0").count() == nation.count() + 2
+                eng.attach_snapshot("nation_v1", root)
+            eng.attach_snapshot("nation_v1", root, replace=True)  # latest = v3
+            assert spark.table("nation_v1").count() == nation.count() + 2
         finally:
-            spark.catalog.dropTempView("nation_v0")
+            spark.catalog.dropTempView("nation_v1")
 
     def test_snapshot_gc_orphans_respect_grace(self, spark, sf_dir, moto_s3):
-        """GC deletes only unreferenced-AND-old objects: a planted orphan
-        (a crashed append's leftovers) is younger than a huge grace
-        (kept), older than a zero grace (deleted); referenced objects
-        survive both, and the snapshot still reads intact after GC."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+        from pysparkdb.sources import S3Root
 
-        from pysparkdb.sources import (
-            arrow_s3_list,
-            arrow_s3_snapshot_append,
-            arrow_s3_snapshot_gc,
-            arrow_s3_snapshot_read,
-        )
-        from pysparkdb.sources.arrow_s3 import _boto3_client
-
-        root = "s3://testbkt/gc/region"
-        region = tables(spark, sf_dir)["region"]
-        arrow_s3_snapshot_append(region, root, moto_s3)
-        buf = pa.BufferOutputStream()
-        pq.write_table(pa.table({"r_regionkey": [999]}), buf)
-        _boto3_client(moto_s3).put_object(
-            Bucket="testbkt", Key="gc/region/data/batch-orphan/x.parquet",
-            Body=buf.getvalue().to_pybytes())
-
-        before = {p for p, _ in arrow_s3_list(moto_s3, root)}
-        assert any("batch-orphan" in p for p in before)
-        assert arrow_s3_snapshot_gc(moto_s3, root, orphan_grace_s=3600) \
-            == {"orphans": [], "expired": []}
-        gone = arrow_s3_snapshot_gc(moto_s3, root, orphan_grace_s=0)
-        assert gone == {"orphans": ["data/batch-orphan/x.parquet"],
-                        "expired": []}
-        after = {p for p, _ in arrow_s3_list(moto_s3, root)}
-        assert after == {p for p in before if "batch-orphan" not in p}
-        got = arrow_s3_snapshot_read(spark, root, moto_s3)
-        assert sorted(map(tuple, got.collect())) == \
-            sorted(map(tuple, region.collect()))
+        _check_gc_orphans_and_retention(
+            spark, sf_dir, S3Root("s3://testbkt/gc/nation", moto_s3))
 
     def test_snapshot_gc_version_horizon_expiry(self, spark, sf_dir, moto_s3):
         """retain_versions completes the remote right-to-erasure story:
-        an arrow_s3_snapshot_rewrite erases rows from the new version
-        onward, but the pre-rewrite manifests keep the erased bytes
-        readable and GC-immune — horizon expiry drops those manifests
-        and deletes the objects only they referenced, so the erased rows
-        are unreadable at EVERY remaining version and their bytes are
-        gone from the store. Retained readers are untouched; expiry
-        needs no grace window (expired objects were referenced, not
-        orphaned)."""
+        a rewrite erases rows from the new version onward, but the
+        pre-rewrite manifests keep the erased bytes readable and GC-immune
+        — horizon expiry drops those manifests and deletes the objects only
+        they referenced, so the erased rows are unreadable at EVERY
+        remaining version and their bytes are gone from the store.
+        Retained readers are untouched; expiry needs no grace window
+        (expired objects were referenced, not orphaned)."""
         from pysparkdb.sources import (
-            arrow_s3_list,
-            arrow_s3_snapshot_append,
-            arrow_s3_snapshot_gc,
-            arrow_s3_snapshot_read,
-            arrow_s3_snapshot_rewrite,
-            arrow_s3_snapshot_versions,
+            S3Root, arrow_s3_list, snapshot_append, snapshot_gc, snapshot_read,
+            snapshot_rewrite, snapshot_versions,
         )
-        from pysparkdb.sources.arrow_s3 import _snapshot_manifest
 
-        root = "s3://testbkt/gchorizon/nation"
+        root = S3Root("s3://testbkt/gchorizon/nation", moto_s3)
         nation = tables(spark, sf_dir)["nation"]
-        arrow_s3_snapshot_append(nation, root, moto_s3)              # v0
-        survivors = nation.filter(F.col("n_nationkey") < 10)
-        arrow_s3_snapshot_rewrite(survivors, root, moto_s3)          # v1
-        arrow_s3_snapshot_append(
-            nation.filter(F.col("n_nationkey") < 3), root, moto_s3)  # v2
-        _v, m0 = _snapshot_manifest(moto_s3, root, 0)
-        v0_objects = set(m0["files"])
+        snapshot_append(nation, root)                                     # v1
+        snapshot_rewrite(spark, root, nation.filter(F.col("n_nationkey") < 10))  # v2
+        snapshot_append(nation.filter(F.col("n_nationkey") < 3), root)    # v3
+        v1_objects = set(_snap_manifest(root, 1)["files"])
         # pre-GC: the erased rows still time-travel (the gap expiry closes)
-        assert arrow_s3_snapshot_read(
-            spark, root, moto_s3, version=0).count() == nation.count()
+        assert snapshot_read(spark, root, 1).count() == nation.count()
 
         # dry run: the same report, nothing deleted — the review step
         # before committing to byte-level erasure
-        preview = arrow_s3_snapshot_gc(
-            moto_s3, root, orphan_grace_s=3600, retain_versions=2,
-            dry_run=True)
-        assert set(preview["expired"]) == v0_objects
-        assert arrow_s3_snapshot_versions(moto_s3, root) == [0, 1, 2]
-        assert arrow_s3_snapshot_read(
-            spark, root, moto_s3, version=0).count() == nation.count()
+        preview = snapshot_gc(root, orphan_grace_s=3600, retain_versions=2,
+                              dry_run=True)
+        assert set(preview["expired"]) == v1_objects
+        assert snapshot_versions(root) == [1, 2, 3]
+        assert snapshot_read(spark, root, 1).count() == nation.count()
 
-        out = arrow_s3_snapshot_gc(
-            moto_s3, root, orphan_grace_s=3600, retain_versions=2)
+        out = snapshot_gc(root, orphan_grace_s=3600, retain_versions=2)
         assert out == preview, "the dry run previewed exactly this sweep"
-        assert set(out["expired"]) == v0_objects and out["orphans"] == []
-        assert arrow_s3_snapshot_versions(moto_s3, root) == [1, 2]
+        assert set(out["expired"]) == v1_objects and out["orphans"] == []
+        assert snapshot_versions(root) == [2, 3]
         # time travel beyond the horizon is gone, by contract
-        with pytest.raises(ValueError, match="version 0"):
-            arrow_s3_snapshot_read(spark, root, moto_s3, version=0)
+        with pytest.raises(ValueError, match="version 1"):
+            snapshot_read(spark, root, 1)
         # erased keys are unreadable at every remaining version...
-        for v in (1, 2):
-            keys = {r.n_nationkey for r in arrow_s3_snapshot_read(
-                spark, root, moto_s3, version=v).collect()}
+        for v in (2, 3):
+            keys = {r.n_nationkey for r in snapshot_read(spark, root, v).collect()}
             assert keys and max(keys) < 10
         # ...and their bytes are off the store (listed paths are
         # bucket-prefixed)
-        remaining = {p for p, _ in arrow_s3_list(moto_s3, root)}
+        remaining = {p for p, _ in arrow_s3_list(moto_s3, root.uri)}
         assert remaining  # non-vacuous: retained objects still listed
         assert not remaining & {
-            f"testbkt/gchorizon/nation/{rel}" for rel in v0_objects}
+            f"testbkt/gchorizon/nation/{rel}" for rel in v1_objects}
 
     def test_snapshot_gc_expiry_preserves_retained_reads(
             self, spark, sf_dir, moto_s3):
         """GC's core invariant under a mixed append/compact/rewrite
         history: every RETAINED version reads bit-identical rows before
         and after horizon expiry + orphan sweep (retained manifests still
-        list every object they need), while every dropped version's
-        read raises. The local twin's contract, proven on the remote
-        tier."""
+        list every object they need), while every dropped version's read
+        raises."""
         from pysparkdb.sources import (
-            arrow_s3_snapshot_append,
-            arrow_s3_snapshot_compact,
-            arrow_s3_snapshot_gc,
-            arrow_s3_snapshot_read,
-            arrow_s3_snapshot_rewrite,
-            arrow_s3_snapshot_versions,
+            S3Root, snapshot_append, snapshot_compact, snapshot_gc,
+            snapshot_read, snapshot_rewrite, snapshot_versions,
         )
 
-        root = "s3://testbkt/gcmix/nation"
+        root = S3Root("s3://testbkt/gcmix/nation", moto_s3)
         nation = tables(spark, sf_dir)["nation"]
-        arrow_s3_snapshot_append(
-            nation.filter(F.col("n_nationkey") < 8), root, moto_s3)   # v0
-        arrow_s3_snapshot_append(
-            nation.filter(F.col("n_nationkey").between(8, 15)),
-            root, moto_s3)                                            # v1
-        arrow_s3_snapshot_compact(spark, root, moto_s3)               # v2
-        arrow_s3_snapshot_rewrite(
-            nation.filter(F.col("n_nationkey") < 5), root, moto_s3)   # v3
-        arrow_s3_snapshot_append(
-            nation.filter(F.col("n_nationkey") == 20), root, moto_s3)  # v4
+        snapshot_append(nation.filter(F.col("n_nationkey") < 8), root)    # v1
+        snapshot_append(
+            nation.filter(F.col("n_nationkey").between(8, 15)), root)    # v2
+        snapshot_compact(spark, root)                                     # v3
+        snapshot_rewrite(spark, root, nation.filter(F.col("n_nationkey") < 5))  # v4
+        snapshot_append(nation.filter(F.col("n_nationkey") == 20), root)  # v5
         before = {
-            v: sorted(map(tuple, arrow_s3_snapshot_read(
-                spark, root, moto_s3, version=v).collect()))
-            for v in arrow_s3_snapshot_versions(moto_s3, root)
+            v: sorted(map(tuple, snapshot_read(spark, root, v).collect()))
+            for v in snapshot_versions(root)
         }
-        arrow_s3_snapshot_gc(
-            moto_s3, root, orphan_grace_s=0, retain_versions=2)
-        assert arrow_s3_snapshot_versions(moto_s3, root) == [3, 4]
-        for v in (3, 4):
-            after = sorted(map(tuple, arrow_s3_snapshot_read(
-                spark, root, moto_s3, version=v).collect()))
+        snapshot_gc(root, orphan_grace_s=0, retain_versions=2)
+        assert snapshot_versions(root) == [4, 5]
+        for v in (4, 5):
+            after = sorted(map(tuple, snapshot_read(spark, root, v).collect()))
             assert after == before[v], f"retained v{v} changed under GC"
-        for v in (0, 1, 2):
+        for v in (1, 2, 3):
             with pytest.raises(ValueError):
-                arrow_s3_snapshot_read(spark, root, moto_s3, version=v)
+                snapshot_read(spark, root, v)
         # idempotent: a second sweep finds nothing left to collect
-        assert arrow_s3_snapshot_gc(
-            moto_s3, root, orphan_grace_s=0, retain_versions=2) == \
+        assert snapshot_gc(root, orphan_grace_s=0, retain_versions=2) == \
             {"orphans": [], "expired": []}
 
     def test_snapshot_tags_remote(self, spark, sf_dir, moto_s3):
-        """Tags on the object store: same contract as the local twin —
-        name resolution through read/attach/diff, the overwrite guard,
-        retention pinning across GC horizons, and untag releasing the
-        pin (plus key-safety on the tag name)."""
-        from pysparkdb.engine import Engine
-        from pysparkdb.sources import (
-            arrow_s3_snapshot_append,
-            arrow_s3_snapshot_gc,
-            arrow_s3_snapshot_read,
-            arrow_s3_snapshot_rewrite,
-            arrow_s3_snapshot_tag,
-            arrow_s3_snapshot_tags,
-            arrow_s3_snapshot_untag,
-            arrow_s3_snapshot_versions,
-        )
-        from pysparkdb.sources.arrow_s3 import arrow_s3_snapshot_diff
+        from pysparkdb.sources import S3Root
 
-        root = "s3://testbkt/tags/nation"
-        nation = tables(spark, sf_dir)["nation"]
-        arrow_s3_snapshot_append(nation, root, moto_s3)               # v0
-        arrow_s3_snapshot_rewrite(
-            nation.filter(F.col("n_nationkey") < 10), root, moto_s3)  # v1
-        assert arrow_s3_snapshot_tag(moto_s3, root, "train-v1", 0) == 0
-        assert arrow_s3_snapshot_tags(moto_s3, root) == {"train-v1": 0}
-        assert arrow_s3_snapshot_read(
-            spark, root, moto_s3, version="train-v1").count() == \
-            nation.count()
-        d = arrow_s3_snapshot_diff(
-            spark, root, moto_s3, "train-v1", 1, ["n_nationkey"])
-        assert {r._change for r in d.collect()} == {"delete"}
-        eng = Engine(spark)
-        try:
-            eng.attach_arrow_s3_snapshot(
-                "nation_train", root, moto_s3, version="train-v1")
-            assert spark.table("nation_train").count() == nation.count()
-        finally:
-            spark.catalog.dropTempView("nation_train")
-        with pytest.raises(ValueError, match="already exists"):
-            arrow_s3_snapshot_tag(moto_s3, root, "train-v1", 1)
-        with pytest.raises(ValueError, match="invalid tag name"):
-            arrow_s3_snapshot_tag(moto_s3, root, "a/b", 0)
-        # retention pin across the horizon
-        arrow_s3_snapshot_gc(
-            moto_s3, root, orphan_grace_s=0, retain_versions=1)
-        assert arrow_s3_snapshot_versions(moto_s3, root) == [0, 1]
-        assert arrow_s3_snapshot_read(
-            spark, root, moto_s3, version="train-v1").count() == \
-            nation.count()
-        # untag releases; the next sweep completes the erasure
-        arrow_s3_snapshot_untag(moto_s3, root, "train-v1")
-        out = arrow_s3_snapshot_gc(
-            moto_s3, root, orphan_grace_s=0, retain_versions=1)
-        assert out["expired"]
-        assert arrow_s3_snapshot_versions(moto_s3, root) == [1]
-        with pytest.raises(ValueError, match="not found"):
-            arrow_s3_snapshot_read(spark, root, moto_s3,
-                                   version="train-v1")
+        _check_tags(spark, sf_dir, S3Root("s3://testbkt/tags/region", moto_s3),
+                    "region_train_remote")
 
     def test_tag_created_during_gc_survives_remote(
             self, spark, sf_dir, moto_s3):
-        """The tag-vs-GC race on the REMOTE tier (VERDICT r13 #3): a
-        conditional-PUT tag landing between the sweep's reference-set
-        build and its manifest deletes must still pin its version — the
-        sweep re-reads tags at the last instant before deleting."""
-        from pysparkdb.sources import (
-            arrow_s3_snapshot_append,
-            arrow_s3_snapshot_gc,
-            arrow_s3_snapshot_read,
-            arrow_s3_snapshot_rewrite,
-            arrow_s3_snapshot_tag,
-            arrow_s3_snapshot_versions,
-        )
+        from pysparkdb.sources import S3Root
 
-        root = "s3://testbkt/gcrace/nation"
-        nation = tables(spark, sf_dir)["nation"]
-        arrow_s3_snapshot_append(
-            nation.filter(F.col("n_nationkey") < 5), root, moto_s3)   # v0
-        arrow_s3_snapshot_append(
-            nation.filter(F.col("n_nationkey") >= 5), root, moto_s3)  # v1
-        # terminal rewrite-to-empty: v2 references NOTHING, so without
-        # the racing tag the sweep would expire every byte v0/v1 hold
-        arrow_s3_snapshot_rewrite(nation.limit(0), root, moto_s3)     # v2
-
-        def racing_tagger():
-            arrow_s3_snapshot_tag(moto_s3, root, "train-late", 0)
-
-        out = arrow_s3_snapshot_gc(
-            moto_s3, root, orphan_grace_s=0, retain_versions=1,
-            _pre_delete_hook=racing_tagger)
-        assert 0 in arrow_s3_snapshot_versions(moto_s3, root)
-        assert 1 not in arrow_s3_snapshot_versions(moto_s3, root)
-        assert arrow_s3_snapshot_read(
-            spark, root, moto_s3, version="train-late").count() == \
-            nation.filter(F.col("n_nationkey") < 5).count()
-        assert out["expired"]  # v1's exclusive objects still reclaimed
+        _check_tag_during_gc(spark, sf_dir,
+                             S3Root("s3://testbkt/gcrace/region", moto_s3))
 
     def test_snapshot_gc_age_horizon_remote(self, spark, sf_dir, moto_s3):
-        """The age horizon on the remote tier, keyed on manifest-object
-        store mtime: with older_than_s=0 every version is 'too old', yet
-        the newest survives (it never age-drops) and keeps reading; the
-        pre-rewrite version's exclusive objects are reclaimed."""
-        from pysparkdb.sources import (
-            arrow_s3_snapshot_append,
-            arrow_s3_snapshot_gc,
-            arrow_s3_snapshot_read,
-            arrow_s3_snapshot_rewrite,
-            arrow_s3_snapshot_versions,
-        )
+        from pysparkdb.sources import S3Root
 
-        root = "s3://testbkt/gcage/region"
-        region = tables(spark, sf_dir)["region"]
-        arrow_s3_snapshot_append(region, root, moto_s3)               # v0
-        arrow_s3_snapshot_rewrite(
-            region.filter(F.col("r_regionkey") < 3), root, moto_s3)   # v1
-        arrow_s3_snapshot_append(
-            region.filter(F.col("r_regionkey") >= 3), root, moto_s3)  # v2
-        out = arrow_s3_snapshot_gc(
-            moto_s3, root, orphan_grace_s=3600, older_than_s=0)
-        assert out["expired"], "v0's exclusive objects reclaimed"
-        assert arrow_s3_snapshot_versions(moto_s3, root) == [2]
-        assert arrow_s3_snapshot_read(
-            spark, root, moto_s3).count() == region.count()
+        _check_gc_age_horizon(spark, sf_dir,
+                              S3Root("s3://testbkt/gcage/region", moto_s3))
 
     def test_snapshot_gc_expiry_spares_inflight_append(
             self, spark, sf_dir, moto_s3):
@@ -2347,104 +2218,42 @@ class TestArrowObjectStore:
         and grace-protected — while the parent it will reference is the
         newest version, which expiry always retains. The staged append
         then commits cleanly and reads back whole."""
-        import json
-
         from pysparkdb.sources import (
-            arrow_s3_list,
-            arrow_s3_snapshot_append,
-            arrow_s3_snapshot_compact,
-            arrow_s3_snapshot_gc,
-            arrow_s3_snapshot_read,
-            arrow_s3_write_parquet,
+            S3Root, arrow_s3_list, arrow_s3_write_parquet, snapshot_append,
+            snapshot_compact, snapshot_gc, snapshot_read,
         )
-        from pysparkdb.sources.arrow_s3 import (
-            _boto3_client,
-            _commit_manifest,
-            _get_manifest,
-        )
+        from pysparkdb.sources.versioned import _commit, _head
 
-        root = "s3://testbkt/gcrace/region"
+        root = S3Root("s3://testbkt/gcinflight/region", moto_s3)
         region = tables(spark, sf_dir)["region"]
-        arrow_s3_snapshot_append(region, root, moto_s3)           # v0
-        arrow_s3_snapshot_compact(spark, root, moto_s3)           # v1 (own files)
+        snapshot_append(region, root)                             # v1
+        snapshot_compact(spark, root)                             # v2 (own files)
         # stage an in-flight append exactly as the writer does: data
         # objects on the store, manifest not yet committed
         arrow_s3_write_parquet(
-            region.limit(2), "s3://testbkt/gcrace/region/data/batch-inflight",
-            moto_s3)
-        staged = sorted(
-            p[len("testbkt/gcrace/region") + 1:]
-            for p, _ in arrow_s3_list(
-                moto_s3, "s3://testbkt/gcrace/region/data/batch-inflight"))
+            region.limit(2), f"{root.uri}/data/batch-inflight", moto_s3)
+        staged = sorted(_snap_store(root).list("data/batch-inflight", True))
         assert staged and all(rel.startswith("data/") for rel in staged)
 
-        out = arrow_s3_snapshot_gc(
-            moto_s3, root, orphan_grace_s=3600, retain_versions=1)
-        assert out["expired"], "v0's superseded objects expire"
+        out = snapshot_gc(root, orphan_grace_s=3600, retain_versions=1)
+        assert out["expired"], "v1's superseded objects expire"
         # the young staged batch survives the sweep untouched
         assert not set(out["orphans"]) & set(staged)
-        still = {p for p, _ in arrow_s3_list(moto_s3, root)}
-        assert {f"testbkt/gcrace/region/{rel}" for rel in staged} <= still
+        still = {p for p, _ in arrow_s3_list(moto_s3, root.uri)}
+        assert {f"testbkt/gcinflight/region/{rel}" for rel in staged} <= still
 
         # the append's commit half lands against the retained parent
-        client = _boto3_client(moto_s3)
-        prev = _get_manifest(client, "testbkt", "gcrace/region", 1)
-        _commit_manifest(
-            client, "testbkt", "gcrace/region/_manifests/v2.json",
-            {"version": 2, "parent": 1,
-             "files": prev["files"] + staged,
-             "n_rows": prev["n_rows"] + 2,
-             "schema": prev.get("schema"),
-             "commit_token": "batch-inflight"})
-        assert arrow_s3_snapshot_read(
-            spark, root, moto_s3).count() == region.count() + 2
+        versions, prev = _head(_snap_store(root))
+        _commit(_snap_store(root), versions, prev, prev["files"] + staged,
+                prev["n_rows"] + 2, None, prev["schema"], "batch-inflight")
+        assert snapshot_read(spark, root).count() == region.count() + 2
 
     def test_epoch_propagation_across_maintenance(
             self, spark, sf_dir, moto_s3):
-        """Appends, compactions and rewrites propagate ``last_epoch``
-        forward, so the NEWEST manifest answers the streaming replay
-        check in the one GET the commit already pays — a maintenance-only
-        manifest tail no longer forces a GET-walk — and horizon expiry
-        can never reopen the door to a replayed micro-batch (the newest
-        epoch-signal manifest is always retained, and the retained tail
-        keeps the signal)."""
-        from pysparkdb.sources import (
-            arrow_s3_commit_epoch,
-            arrow_s3_last_committed_epoch,
-            arrow_s3_snapshot_append,
-            arrow_s3_snapshot_compact,
-            arrow_s3_snapshot_gc,
-            arrow_s3_snapshot_read,
-            arrow_s3_snapshot_rewrite,
-        )
-        from pysparkdb.sources.arrow_s3 import _boto3_client, _get_manifest
+        from pysparkdb.sources import S3Root
 
-        root = "s3://testbkt/epochprop/region"
-        region = tables(spark, sf_dir)["region"]
-        b0 = region.filter(F.col("r_regionkey") < 2)
-        b1 = region.filter(F.col("r_regionkey") >= 2)
-        assert arrow_s3_commit_epoch(b0, root, moto_s3, epoch_id=0) == 0
-        assert arrow_s3_commit_epoch(b1, root, moto_s3, epoch_id=1) == 1
-        arrow_s3_snapshot_compact(spark, root, moto_s3)           # v2
-        arrow_s3_snapshot_append(b0, root, moto_s3)               # v3 manual
-        arrow_s3_snapshot_rewrite(region, root, moto_s3)          # v4
-        client = _boto3_client(moto_s3)
-        for v in (2, 3, 4):
-            m = _get_manifest(client, "testbkt", "epochprop/region", v)
-            assert m.get("epoch") is None and m["last_epoch"] == 1, v
-        assert arrow_s3_last_committed_epoch(moto_s3, root) == 1
-        # a replayed micro-batch is still skipped behind the maintenance tail
-        assert arrow_s3_commit_epoch(b1, root, moto_s3, epoch_id=1) is None
-        # horizon expiry keeps the guard: only v4 survives, carrying it
-        arrow_s3_snapshot_gc(
-            moto_s3, root, orphan_grace_s=0, retain_versions=1)
-        assert arrow_s3_last_committed_epoch(moto_s3, root) == 1
-        assert arrow_s3_commit_epoch(b1, root, moto_s3, epoch_id=1) is None
-        # a genuinely new epoch commits
-        v = arrow_s3_commit_epoch(b0, root, moto_s3, epoch_id=2)
-        assert v == 5
-        assert arrow_s3_snapshot_read(
-            spark, root, moto_s3).count() == region.count() + b0.count()
+        _check_epoch_propagation(
+            spark, sf_dir, S3Root("s3://testbkt/epochprop/region", moto_s3))
 
     def test_manifest_bytes_recorded_and_attach_sized(
             self, spark, sf_dir, moto_s3):
@@ -2454,68 +2263,45 @@ class TestArrowObjectStore:
         mapInArrow plan's task-list stats for a remote corpus."""
         from pysparkdb.engine import Engine
         from pysparkdb.sources import (
-            arrow_s3_list,
-            arrow_s3_snapshot_append,
-            arrow_s3_snapshot_compact,
+            S3Root, arrow_s3_list, snapshot_append, snapshot_compact,
         )
-        from pysparkdb.sources.arrow_s3 import _boto3_client, _get_manifest
 
-        root = "s3://testbkt/mbytes/nation"
+        root = S3Root("s3://testbkt/mbytes/nation", moto_s3)
         nation = tables(spark, sf_dir)["nation"]
-        arrow_s3_snapshot_append(nation, root, moto_s3)           # v0
-        arrow_s3_snapshot_append(nation.limit(5), root, moto_s3)  # v1
-        arrow_s3_snapshot_compact(spark, root, moto_s3)           # v2
-        client = _boto3_client(moto_s3)
-        for v in (0, 1, 2):
-            m = _get_manifest(client, "testbkt", "mbytes/nation", v)
-            sized = {rel: sz for p, sz in arrow_s3_list(moto_s3, root)
-                     for rel in [p[len("testbkt/mbytes/nation") + 1:]]}
+        snapshot_append(nation, root)                             # v1
+        snapshot_append(nation.limit(5), root)                    # v2
+        snapshot_compact(spark, root)                             # v3
+        sized = {p[len("testbkt/mbytes/nation") + 1:]: sz
+                 for p, sz in arrow_s3_list(moto_s3, root.uri)}
+        for v in (1, 2, 3):
+            m = _snap_manifest(root, v)
             assert m["bytes"] == sum(sized[f] for f in m["files"]) > 0, v
         eng = Engine(spark)
         try:
-            eng.attach_arrow_s3_snapshot("mbytes_nation", root, moto_s3)
+            eng.attach_snapshot("mbytes_nation", root)
             att = eng._arrow_s3_tables["mbytes_nation"]
-            assert att.nbytes == _get_manifest(
-                client, "testbkt", "mbytes/nation", 2)["bytes"]
+            assert att.nbytes == _snap_manifest(root, 3)["bytes"]
         finally:
             spark.catalog.dropTempView("mbytes_nation")
 
     def test_attach_erased_empty_snapshot(self, spark, sf_dir, moto_s3):
-        """The engine front door pins the erasure terminal state: an
-        all-rows-erased version (``files: []``) attaches as the EMPTY
-        view under its committed schema — queryable, profilable (exact
-        zero-row stats, zero GETs) — instead of stranding ``\\pin`` on
-        the one state the read path was taught to read."""
+        """The engine front door pins the erasure terminal state on the
+        object store — queryable (the shared contract) and profilable:
+        exact zero-row stats with zero GETs, in the SAME column shape as
+        the footer profile of the table before the erasure."""
         from pysparkdb.engine import Engine
-        from pysparkdb.sources import (
-            arrow_s3_snapshot_append,
-            arrow_s3_snapshot_rewrite,
-        )
+        from pysparkdb.sources import S3Root
 
-        root = "s3://testbkt/erasedpin/nation"
-        nation = tables(spark, sf_dir)["nation"]
-        arrow_s3_snapshot_append(nation, root, moto_s3)           # v0
-        arrow_s3_snapshot_rewrite(
-            nation.filter(F.lit(False)), root, moto_s3)           # v1: erased
+        root = S3Root("s3://testbkt/erasedpin/nation", moto_s3)
         eng = Engine(spark)
         try:
-            # footer-path profile of the SAME table at v0 — the schema
-            # the erased profile below must reproduce column-for-column
-            eng.attach_arrow_s3_snapshot("nation_v0", root, moto_s3,
-                                         version=0)
+            _check_rewrite_to_empty(spark, sf_dir, root, eng, "nation_erased")
+            eng.attach_snapshot("nation_v1", root, version=1)
             pre = eng.arrow_s3_table_stats(
-                "nation_v0", columns=["n_nationkey", "n_name"])
-            df = eng.attach_arrow_s3_snapshot("nation_erased", root, moto_s3)
-            assert df.schema == spark.table("nation_erased").schema
-            assert [f.name for f in df.schema.fields] == nation.columns
-            got = eng.sql(
-                "SELECT COUNT(*) AS n FROM nation_erased").collect()[0]
-            assert got.n == 0
+                "nation_v1", columns=["n_nationkey", "n_name"])
             st_df = eng.arrow_s3_table_stats(
                 "nation_erased", columns=["n_nationkey", "n_name"])
-            # profiling across the erasure terminal state returns the
-            # SAME column shape: min/max present (NULL) for eligible
-            # types, absent for string — not a rows+nulls-only subset
+            # min/max present (NULL) for eligible types, absent for string
             assert st_df.columns == pre.columns == [
                 "rows", "n_nationkey_min", "n_nationkey_max",
                 "n_nationkey_nulls", "n_name_nulls"]
@@ -2528,7 +2314,7 @@ class TestArrowObjectStore:
                 eng.arrow_s3_table_stats("nation_erased", columns=["nope"])
         finally:
             spark.catalog.dropTempView("nation_erased")
-            spark.catalog.dropTempView("nation_v0")
+            spark.catalog.dropTempView("nation_v1")
 
     def test_remote_views_route_through_segment_cache(
             self, spark, sf_dir, moto_s3):
@@ -2689,41 +2475,44 @@ class TestArrowObjectStore:
             Engine(spark).attach_arrow_s3("s3://testbkt/mix2", moto_s3)
 
     def test_snapshot_schema_guard_and_compaction(self, spark, sf_dir, moto_s3):
-        """(a) an append whose schema differs from the committed one
-        raises (mixed-schema reads would silently NULL/drop columns);
-        (b) compaction commits a new version over the same rows whose
-        manifest references ONLY the compacted objects, while the pinned
-        pre-compaction version still reads its original small objects."""
-        import json
+        """The local store's schema evolution and compaction history, on
+        the object store."""
+        from pysparkdb.sources import S3Root
 
-        from pysparkdb.sources import (
-            arrow_s3_snapshot_append,
-            arrow_s3_snapshot_compact,
-            arrow_s3_snapshot_read,
-        )
-        from pysparkdb.sources.arrow_s3 import _boto3_client
+        _check_schema_evolution(
+            spark, sf_dir, S3Root("s3://testbkt/evolve/nation", moto_s3))
+        _check_compaction_history(
+            spark, sf_dir, S3Root("s3://testbkt/cmp/nation", moto_s3))
 
-        root = "s3://testbkt/cmp/nation"
-        nation = tables(spark, sf_dir)["nation"]
-        arrow_s3_snapshot_append(nation.repartition(3), root, moto_s3)
-        arrow_s3_snapshot_append(
-            nation.limit(0).repartition(1), root, moto_s3)  # same schema OK
-        with pytest.raises(ValueError, match="pin bytes"):
-            arrow_s3_snapshot_append(
-                nation.select("n_nationkey"), root, moto_s3)
+    def test_reattach_over_rewritten_objects_serves_fresh_rows(
+            self, spark, moto_s3):
+        """Re-attaching a prefix whose objects were rewritten keeps the
+        view's origin (``prefix/name``) but releases the segments cached
+        under it: hybrid mode then answers what pushdown answers instead
+        of the rows cached before the rewrite."""
+        from pysparkdb.engine import Engine
+        from pysparkdb.sources import arrow_s3_write_parquet
 
-        v = arrow_s3_snapshot_compact(spark, root, moto_s3, target_objects=1)
-        m = json.loads(_boto3_client(moto_s3).get_object(
-            Bucket="testbkt", Key=f"cmp/nation/_manifests/v{v}.json"
-        )["Body"].read())
-        assert m["compaction"] and len(m["files"]) == 1
-        got = arrow_s3_snapshot_read(spark, root, moto_s3)
-        assert sorted(map(tuple, got.collect())) == \
-            sorted(map(tuple, nation.collect()))
-        # pinned pre-compaction version unchanged (time travel intact)
-        v0 = arrow_s3_snapshot_read(spark, root, moto_s3, version=0)
-        assert v0.count() == nation.count()
-
+        uri = "s3://testbkt/stale/stale_t"
+        q = "SELECT SUM(v) AS s, COUNT(*) AS n FROM stale_t"
+        eng = Engine(spark).set_mode("hybrid")
+        try:
+            arrow_s3_write_parquet(spark.range(10).select(F.col("id").alias("v")),
+                                   uri, moto_s3)
+            eng.attach_arrow_s3("s3://testbkt/stale", moto_s3)
+            assert tuple(eng.sql(q).collect()[0]) == (45, 10)
+            assert eng._segment_cache.entries, "the segment was cached"
+            arrow_s3_write_parquet(
+                spark.range(100).select((F.col("id") * 2).alias("v")),
+                uri, moto_s3, mode="overwrite")
+            eng.attach_arrow_s3("s3://testbkt/stale", moto_s3, replace=True)
+            want = [tuple(r) for r in eng.sql(q, mode="pushdown").collect()]
+            got = [tuple(r) for r in eng.sql(q, mode="hybrid").collect()]
+            assert got == want == [(9900, 100)]
+        finally:
+            eng.clear_segment_cache()
+            eng.set_mode("pushdown")
+            spark.catalog.dropTempView("stale_t")
 
 class TestArrowS3FooterStats:
     """arrow_s3_scan_stats: COUNT/MIN/MAX/null-count answered from
@@ -3152,51 +2941,18 @@ class TestSnapshotConcurrentAppend:
 
     def test_losing_append_raises_and_winner_survives(
             self, spark, sf_dir, moto_race, monkeypatch):
-        """Writer B lists versions BEFORE writer A commits (simulated by
-        pinning B's version listing stale), so both compute v1. A lands
-        first; B's manifest PUT must raise, A's committed rows must
-        remain exactly readable, and B's orphaned batch stays invisible."""
-        from pysparkdb.sources import (
-            ConcurrentAppendError,
-            arrow_s3_snapshot_append,
-            arrow_s3_snapshot_read,
-            arrow_s3_snapshot_versions,
-        )
-        from pysparkdb.sources import arrow_s3 as mod
+        from pysparkdb.sources import S3Root
 
-        root = "s3://racebkt/race/nation"
-        nation = tables(spark, sf_dir)["nation"]
-        arrow_s3_snapshot_append(nation, root, moto_race)  # v0
-
-        stale = arrow_s3_snapshot_versions(moto_race, root)  # [0]
-        a_rows = nation.limit(5)
-        b_rows = nation.limit(3)
-        arrow_s3_snapshot_append(a_rows, root, moto_race)  # A commits v1
-
-        # B raced: it saw only [0], computes v1 too
-        monkeypatch.setattr(
-            mod, "arrow_s3_snapshot_versions", lambda c, u: stale)
-        with pytest.raises(ConcurrentAppendError, match="concurrent"):
-            arrow_s3_snapshot_append(b_rows, root, moto_race)
-        monkeypatch.undo()
-
-        got = arrow_s3_snapshot_read(spark, root, moto_race)
-        assert got.count() == nation.count() + 5  # A's batch, not B's
-        assert arrow_s3_snapshot_versions(moto_race, root) == [0, 1]
-
-        # B retries against the fresh listing and lands v2
-        arrow_s3_snapshot_append(b_rows, root, moto_race)
-        got2 = arrow_s3_snapshot_read(spark, root, moto_race)
-        assert got2.count() == nation.count() + 5 + 3
+        _check_racing_append(spark, sf_dir,
+                             S3Root("s3://racebkt/race/nation", moto_race),
+                             monkeypatch)
 
     def test_read_back_fallback_detects_lost_race(self):
-        """On a store that ignores If-None-Match the commit falls back to
-        plain PUT + read-back: a manifest that reads back another
-        writer's commit_token raises."""
-        from pysparkdb.sources.arrow_s3 import (
-            ConcurrentAppendError,
-            _commit_manifest,
-        )
+        """On a store that ignores If-None-Match the PUT is read back: a
+        manifest that reads back another writer's commit_token raises."""
+        from pysparkdb.sources import ConcurrentAppendError, S3Conf, S3Root
+        from pysparkdb.sources.arrow_s3 import _S3Store
+        from pysparkdb.sources.versioned import _EMPTY, _commit
 
         class IgnoringStore:
             """put_object accepts-and-ignores the precondition (the
@@ -3213,22 +2969,22 @@ class TestSnapshotConcurrentAppend:
                 return {"Body": io.BytesIO(json.dumps(
                     {"commit_token": "the-other-writer"}).encode())}
 
+        store = _S3Store(S3Root("s3://b/k", S3Conf()), client=IgnoringStore())
         with pytest.raises(ConcurrentAppendError, match="read back"):
-            _commit_manifest(
-                IgnoringStore(), "b", "k/_manifests/v1.json",
-                {"commit_token": "me"})
+            _commit(store, [], _EMPTY, [], 0, None, None, "me")
 
     def test_old_botocore_param_rejection_falls_back_to_plain_put(self):
         """botocore versions predating conditional-write support raise
         ParamValidationError (client-side, NOT a ClientError) on
-        IfNoneMatch — the commit must route that to the plain-PUT +
-        read-back fallback, not crash every append."""
+        IfNoneMatch — the commit must route that to the existence check +
+        plain PUT + read-back fallback, not crash every append."""
         import io
         import json
 
-        from botocore.exceptions import ParamValidationError
+        from botocore.exceptions import ClientError, ParamValidationError
 
-        from pysparkdb.sources.arrow_s3 import _commit_manifest
+        from pysparkdb.sources import S3Conf, S3Root
+        from pysparkdb.sources.arrow_s3 import _S3Store
 
         class OldBotocoreStore:
             def __init__(self):
@@ -3241,86 +2997,36 @@ class TestSnapshotConcurrentAppend:
                 self.plain_puts.append(kw)
 
             def get_object(self, **kw):
+                if not self.plain_puts:
+                    raise ClientError({"Error": {"Code": "NoSuchKey"}},
+                                      "GetObject")
                 # read-back returns what this writer just PUT
                 return {"Body": io.BytesIO(self.plain_puts[-1]["Body"])}
 
-        store = OldBotocoreStore()
-        _commit_manifest(
-            store, "b", "k/_manifests/v1.json",
-            {"commit_token": "me", "version": 1})
-        assert len(store.plain_puts) == 1
-        assert json.loads(store.plain_puts[-1]["Body"])["commit_token"] == "me"
+        client = OldBotocoreStore()
+        store = _S3Store(S3Root("s3://b/k", S3Conf()), client=client)
+        store.put_if_absent("_manifests/v1.json",
+                            {"commit_token": "me", "version": 1})
+        assert len(client.plain_puts) == 1
+        assert json.loads(client.plain_puts[-1]["Body"])["commit_token"] == "me"
+        with pytest.raises(FileExistsError):
+            store.put_if_absent("_manifests/v1.json",
+                                {"commit_token": "other", "version": 1})
+        assert len(client.plain_puts) == 1
 
     def test_losing_append_auto_retries_and_both_batches_land(
             self, spark, sf_dir, moto_race, monkeypatch):
-        """retries=N: the losing writer re-lists, re-reads the new latest
-        manifest, and re-commits its ALREADY-WRITTEN batch under the next
-        version — both writers' rows present, no caller loop, nothing
-        rewritten (the retry commits the same data objects)."""
-        import json
+        from pysparkdb.sources import S3Root
 
-        from pysparkdb.sources import (
-            arrow_s3_snapshot_append,
-            arrow_s3_snapshot_read,
-            arrow_s3_snapshot_versions,
-        )
-        from pysparkdb.sources import arrow_s3 as mod
-        from pysparkdb.sources.arrow_s3 import _boto3_client
-
-        root = "s3://racebkt/autoretry/nation"
-        nation = tables(spark, sf_dir)["nation"]
-        arrow_s3_snapshot_append(nation, root, moto_race)  # v0
-
-        # B's FIRST listing is pinned stale (sees only [0]) so it races
-        # A's v1; the retry's listing runs unpinned and sees [0, 1]
-        real_versions = mod.arrow_s3_snapshot_versions
-        calls = {"n": 0}
-
-        def stale_once(c, u):
-            calls["n"] += 1
-            if calls["n"] == 1:
-                return [0]
-            return real_versions(c, u)
-
-        arrow_s3_snapshot_append(nation.limit(5), root, moto_race)  # A: v1
-        monkeypatch.setattr(mod, "arrow_s3_snapshot_versions", stale_once)
-        got_v = arrow_s3_snapshot_append(
-            nation.limit(3), root, moto_race, retries=2)  # B auto-lands
-        monkeypatch.undo()
-        assert got_v == 2
-        assert arrow_s3_snapshot_versions(moto_race, root) == [0, 1, 2]
-        got = arrow_s3_snapshot_read(spark, root, moto_race)
-        assert got.count() == nation.count() + 5 + 3  # both batches
-
-        # the retried commit references ONE data batch exactly once on
-        # top of v1's files — the same objects the losing attempt wrote
-        m2 = json.loads(_boto3_client(moto_race).get_object(
-            Bucket="racebkt",
-            Key="autoretry/nation/_manifests/v2.json")["Body"].read())
-        m1 = json.loads(_boto3_client(moto_race).get_object(
-            Bucket="racebkt",
-            Key="autoretry/nation/_manifests/v1.json")["Body"].read())
-        assert set(m1["files"]) < set(m2["files"])
-        assert len(set(m2["files"])) == len(m2["files"])
+        _check_retries_reland(spark, sf_dir,
+                              S3Root("s3://racebkt/autoretry/nation", moto_race),
+                              monkeypatch)
 
     def test_exhausted_retries_still_raise(
             self, spark, sf_dir, moto_race, monkeypatch):
-        """When every attempt races (listing pinned permanently stale),
-        retries=1 raises after its second loss instead of spinning."""
-        from pysparkdb.sources import (
-            ConcurrentAppendError,
-            arrow_s3_snapshot_append,
-        )
-        from pysparkdb.sources import arrow_s3 as mod
+        from pysparkdb.sources import S3Root
 
-        root = "s3://racebkt/exhaust/nation"
-        nation = tables(spark, sf_dir)["nation"]
-        arrow_s3_snapshot_append(nation, root, moto_race)  # v0
-        arrow_s3_snapshot_append(nation.limit(2), root, moto_race)  # v1
+        _check_retries_exhausted(spark, sf_dir,
+                                 S3Root("s3://racebkt/exhaust/nation", moto_race),
+                                 monkeypatch)
 
-        monkeypatch.setattr(
-            mod, "arrow_s3_snapshot_versions", lambda c, u: [0])
-        with pytest.raises(ConcurrentAppendError):
-            arrow_s3_snapshot_append(
-                nation.limit(1), root, moto_race, retries=1)
-        monkeypatch.undo()

@@ -436,63 +436,12 @@ def test_stream_clean_drops_history_duplicates(spark, sf_dir, tmp_path):
 
 
 def test_snapshot_stream_sink_versions_and_exactly_once(spark, sf_dir, tmp_path):
-    """Streaming → snapshot-versioning composition (snapshot_stream_sink):
-    each micro-batch commits as one version; a REPLAYED epoch (the
-    at-least-once failure mode of foreachBatch) must be skipped, not
-    double-appended; a checkpoint-resumed run continues from the next
-    epoch and only commits the new data."""
-    import glob
+    """Streaming → snapshot-versioning composition (snapshot_stream_sink)
+    on a local root; the same contract runs on the object store in
+    tests/test_sources.py."""
+    from tests.test_sources import _check_stream_sink
 
-    from pyspark.sql import functions as F
-
-    from pysparkdb.sources.versioned import (
-        committed_epochs, snapshot_read, snapshot_stream_sink,
-        snapshot_versions,
-    )
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    land = tmp_path / "landing"
-    land.mkdir()
-    root = str(tmp_path / "snap")
-    ckpt = str(tmp_path / "ckpt")
-    docs = tables(spark, sf_dir)["documents"]
-    schema = docs.schema
-
-    def write_file(name, df):
-        # single parquet FILE (the file-stream source does not recurse
-        # into the directories df.write.parquet would create)
-        pq.write_table(pa.Table.from_pandas(df.toPandas()), str(land / name))
-
-    write_file("a.parquet", docs.filter(F.col("doc_id") < 100))
-
-    def drain():
-        stream = spark.readStream.schema(schema).parquet(str(land))
-        q = snapshot_stream_sink(stream, root, ckpt).trigger(availableNow=True).start()
-        q.awaitTermination(120)
-
-    drain()
-    v_after_first = snapshot_versions(root)
-    assert len(v_after_first) >= 1
-    assert snapshot_read(spark, root).count() == 100
-
-    # replayed epoch: re-invoking the commit with an already-committed id
-    # must be a no-op (exactly-once under foreachBatch's at-least-once)
-    from pysparkdb.sources.versioned import commit_epoch
-
-    epoch = max(committed_epochs(root))
-    before = snapshot_versions(root)
-    assert commit_epoch(docs.filter(F.col("doc_id") < 100), root, epoch) is None
-    assert snapshot_versions(root) == before
-
-    # restart with the same checkpoint after new data lands: one new
-    # version, prior versions untouched
-    write_file("b.parquet", docs.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 150)))
-    drain()
-    assert len(snapshot_versions(root)) == len(v_after_first) + 1
-    assert snapshot_read(spark, root).count() == 150
-    assert snapshot_read(spark, root, v_after_first[-1]).count() == 100
+    _check_stream_sink(spark, sf_dir, str(tmp_path / "snap"), tmp_path)
 
 
 def test_stream_interval_join_two_sided_matches_batch(spark, sf_dir, events_stream):
