@@ -123,8 +123,8 @@ class Catalog:
     spark: SparkSession
     data_dir: str
     tables: dict[str, DataFrame] = field(default_factory=dict)
-    # registered file path per table — the identity key Engine's
-    # cache-mode routing uses to attribute plan leaves to tables
+    # registered file path per table (the file or directory its view
+    # reads); Engine's cache routing keys segments by view name instead
     paths: dict[str, str] = field(default_factory=dict)
 
     def register_all(self, validate: bool = True) -> "Catalog":

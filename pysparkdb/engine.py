@@ -12,10 +12,12 @@ from __future__ import annotations
 
 import threading
 from collections import OrderedDict
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
 from pysparkdb.catalog import Catalog
+from pysparkdb.plans.cache import SegmentCacheManager, _plan_size_bytes
 from pysparkdb.session import apply_engine_confs, get_spark
 
 # Serializes SQL-text RESOLUTION (not execution) across threads. Temp views
@@ -81,25 +83,35 @@ _PUSHDOWN_CONFS = (
 )
 
 
-from typing import NamedTuple  # noqa: E402
-
-
 class _View(NamedTuple):
     """One registered view the engine may swap: a catalog table, an
     attach_snapshot pin (local or remote) or an attach_arrow_s3 view."""
 
-    df: DataFrame      # the registered plan (liveness is checked against it)
+    # the registered plan; a query's View node of the name is live while
+    # its child sameResults this plan's analysis (see Engine._view_columns)
+    df: DataFrame
     # stable identity for cache keys (``name@origin``): the catalog's
     # data_dir, root@vN for a local pin, uri@vN or prefix/name remote
     origin: str
     # remote views only: the data objects and the S3Conf (what
     # arrow_s3_table_stats profiles) and the recorded data bytes, None =
-    # unknown (legacy manifest). A mapInArrow plan's own stats see only
-    # its task list, so remote views are sized by nbytes; local views by
-    # their plan stats (parquet footers).
+    # unknown (legacy manifest)
     files: list[str] | None = None
     conf: object = None
     nbytes: int | None = None
+
+    def size(self, columns: list[str]) -> float:
+        """Estimated bytes of the view's projection to ``columns`` — the
+        one size rule of cache admission and transfer ordering. Local
+        views read the projection's plan stats (parquet footers, no job).
+        A mapInArrow plan's own stats see only its task list, so remote
+        views prorate the recorded bytes by columns; unknown bytes are ∞
+        (never trusted as small: it may be a 100 TB corpus)."""
+        if self.files is None:
+            return _plan_size_bytes(self.df.select(*columns))
+        if self.nbytes is None:
+            return float("inf")
+        return self.nbytes * len(columns) // len(self.df.columns)
 
 
 class _RoutedQuery(NamedTuple):
@@ -126,7 +138,8 @@ class Engine:
         # registered, by name (the latest registration of a name wins):
         # the base tables of the predicate-transfer pass and the views
         # cache routing swaps. A view replaced or dropped by other means
-        # stays here but is skipped (see _live). Remote entries keep their
+        # stays here, and a query's plan shows it is no longer live (see
+        # _view_columns). Remote entries keep their
         # file list, so arrow_s3_table_stats profiles a view with ZERO
         # further LIST RPCs (the attach's one LIST already named every
         # object), and their byte totals, without which a 100 TB remote
@@ -182,12 +195,9 @@ class Engine:
         if mode in ("caching", "hybrid") and (
             self._segment_cache is None or explicit
         ):
-            from pysparkdb.plans.cache import SegmentCacheManager
-
             old = self._segment_cache
             if old is not None:
                 old.clear()
-            self._forget_routes()
             self._segment_cache = SegmentCacheManager(
                 self.spark,
                 capacity_bytes=(
@@ -213,14 +223,6 @@ class Engine:
         if self._segment_cache is not None:
             self._segment_cache.clear()
             self._segment_cache = None
-        self._forget_routes()
-
-    def _forget_routes(self) -> None:
-        """Drop the routing memo — on every attach and cache rebuild, so
-        no memoized routing outlives the catalog or manager it was
-        computed against (the validity checks would refuse it anyway)."""
-        with _RESOLVE_LOCK:
-            self._route_memo.clear()
 
     @property
     def _arrow_s3_tables(self) -> dict[str, _View]:
@@ -243,7 +245,6 @@ class Engine:
         directory's file list from first registration: pass it only for
         immutable directories (the benchmark datasets); an attach after
         rewriting ``data_dir`` must keep the default rebuild."""
-        self._forget_routes()
         if reuse:
             from pysparkdb.catalog import cached_catalog
 
@@ -286,9 +287,10 @@ class Engine:
         ``predicate_transfer=True`` applies the reference's CIDR-2024
         pre-pass (PrePToPTransformerForPredTrans.cpp, enabled by its
         exec.conf PRED_TRANS flag): the join graph is extracted from the
-        query's own analyzed plan (JoinOriginTracer analog), every
-        attached table is semi-join-reduced across it, and the SAME query
-        text is re-resolved against the reduced relations. Purity
+        query's own analyzed plan (JoinOriginTracer analog), every live
+        registered view the query reads is semi-join-reduced across it,
+        and the SAME query text is re-resolved against the reduced
+        relations. Purity
         invariant: semi joins only remove rows that cannot survive the
         query's own joins, so results are identical (engine-level test in
         tests/test_plans.py). Worth turning on for multi-hop-selective
@@ -324,7 +326,13 @@ class Engine:
         over this session) are safe — resolution is serialized under
         ``_RESOLVE_LOCK`` so the transfer pass's view swap can never leak
         into another call's analysis; execution parallelism is untouched
-        (the lock is released before any job runs)."""
+        (the lock is released before any job runs).
+
+        Both passes take their view facts from one walk of the query's
+        analyzed plan (``_view_columns``): which registered views it
+        reads, whether each is still the registered plan, and which of
+        its columns it references. A view replaced or dropped by other
+        means is neither reduced nor routed."""
         if mode is not None:
             # always re-apply, even when mode == self._mode: the confs are
             # SESSION-global and another Engine over this session (whose
@@ -343,38 +351,25 @@ class Engine:
             if self._mode in ("caching", "hybrid") and self._views:
                 return self._route_views_through_cache(df, query, args)
             return df
-        # The transferable table universe: every live registered view —
-        # the local catalog, local pinned-snapshot views and the remote
-        # attaches (the reference applies its pre-pass to S3-backed tables
-        # in the first place, so the remote tier must be eligible here
-        # too). Identical schemas across any two entries fall to
-        # extract_join_edges' ambiguity exclusion (no edge, never a wrong
-        # reduction).
-        assert self._views, "attach a data_dir or remote tables first"
-        live = {n: v for n, v in list(self._views.items()) if self._live(n, v)}
-        base_tables = {n: v.df for n, v in live.items()}
+        # The transferable tables: the live registered views this query
+        # reads, of every kind — the local catalog, local pinned-snapshot
+        # views and the remote attaches (the reference applies its
+        # pre-pass to S3-backed tables in the first place). Identical
+        # schemas between two of them fall to extract_join_edges'
+        # ambiguity exclusion (no edge, never a wrong reduction); a table
+        # the query does not read cannot make one ambiguous.
         from pysparkdb.plans.predicate_transfer import (
-            _plan_bytes,
             extract_join_edges,
             predicate_transfer as _transfer,
         )
 
+        reads = {n: v for n, (v, _) in self._view_columns(df).items()}
+        base_tables = {n: v.df for n, v in reads.items()}
         edges = extract_join_edges(df, base_tables)
         if not edges:
             return df
-        edge_tables = {e.left for e in edges} | {e.right for e in edges}
-        # Sizing: local views read optimizer plan stats (parquet footers,
-        # free); remote mapInArrow plans' stats see only the task list, so
-        # their size is the attach-recorded byte total — unknown (legacy
-        # manifest without "bytes") means ∞: the table still RECEIVES
-        # reductions but is never trusted as broadcast-small, the only
-        # safe default for what may be a 100 TB corpus.
-        sizes = {
-            n: (_plan_bytes(live[n].df) if live[n].files is None
-                else live[n].nbytes if live[n].nbytes is not None
-                else float("inf"))
-            for n in edge_tables
-        }
+        sizes = {n: reads[n].size(reads[n].df.columns)
+                 for e in edges for n in (e.left, e.right)}
         if predicate_transfer == "auto":
             cores = self.spark.sparkContext.defaultParallelism
             if max(sizes.values()) < self.auto_bytes_per_core * cores:
@@ -403,36 +398,29 @@ class Engine:
                 for name in views:
                     self._views[name].df.createOrReplaceTempView(name)
 
-    def _live(self, name: str, view: _View) -> bool:
-        """Whether the CURRENT session view ``name`` still IS the
-        registered plan. A view replaced or dropped by other means must
-        neither be swapped (wrong data under the name) nor restored (the
-        swap would silently resurrect it) — the same staleness rule
-        arrow_s3_table_stats enforces."""
-        try:
-            return self.spark.table(name).sameSemantics(view.df)
-        except Exception:
-            return False
-
-    def _view_columns(self, df: DataFrame) -> dict[str, set]:
-        """Per live registered view the query reads, the columns of it the
-        query text references — the segment working set cache routing
-        projects. One walk of the ANALYZED plan by view name, for every
-        kind: at a SubqueryAlias over a temp View whose name is a live
-        registered view, the view's output is recorded and its body is
-        not entered (a catalog view's own timestamp-cast Project would
-        otherwise reference every column). Subquery-expression plans are
-        walked too, so a view used both outside and inside a subquery
+    def _view_columns(self, df: DataFrame) -> dict[str, tuple[_View, set]]:
+        """Per live registered view the query reads: the view, and the
+        columns of it the query text references — the working set cache
+        routing projects and the base tables of predicate transfer. One
+        walk of the ANALYZED plan, for every kind: a temp view resolves to
+        SubqueryAlias(name, View(child)), and a registered name is live
+        when that child sameResults the registered plan (re-selecting the
+        registered DataFrame keeps it live; a replacement by other means
+        does not, and its name is left out even where its body reads the
+        registered plan). At a live view the output is recorded and the
+        body is not entered (a catalog view's own timestamp-cast Project
+        would otherwise reference every column). Subquery-expression plans
+        are walked too, so a view used both outside and inside a subquery
         keeps the columns only the subquery reads. The working set is the
         view-output attributes any operator references or the query
-        returns; a view whose working set is empty is left out."""
+        returns; it is empty for a view only counted."""
         analyzed = df._jdf.queryExecution().analyzed()
         used_ids: set[int] = set()
         out = analyzed.output()
         for i in range(out.size()):
             used_ids.add(out.apply(i).exprId().id())
-        per_view: dict[str, list[tuple[str, int]]] = {}
-        live: dict[str, bool] = {}
+        reads: dict[str, tuple[_View, list[tuple[str, int]]]] = {}
+        stale: set[str] = set()
 
         def walk(node):
             refs = node.references().iterator()
@@ -443,22 +431,22 @@ class Engine:
             if (node.getClass().getSimpleName() == "SubqueryAlias"
                     and node.child().getClass().getSimpleName() == "View"):
                 name = node.alias()
-                if name not in live and name in self._views:
-                    live[name] = self._live(name, self._views[name])
-                if live.get(name):
+                view = self._views.get(name)
+                if view is not None and node.child().child().sameResult(
+                        view.df._jdf.queryExecution().analyzed()):
                     o = node.output()
-                    per_view.setdefault(name, []).extend(
+                    reads.setdefault(name, (view, []))[1].extend(
                         (o.apply(i).name(), o.apply(i).exprId().id())
                         for i in range(o.size()))
                     return
+                stale.add(name)
             for plans in (node.children(), node.subqueries()):
                 for i in range(plans.size()):
                     walk(plans.apply(i))
 
         walk(analyzed)
-        cols = {name: {c for c, eid in pairs if eid in used_ids}
-                for name, pairs in per_view.items()}
-        return {name: c for name, c in cols.items() if c}
+        return {name: (view, {c for c, eid in pairs if eid in used_ids})
+                for name, (view, pairs) in reads.items() if name not in stale}
 
     def _route_views_through_cache(
         self, df: DataFrame, query: str, args: dict | list | None
@@ -466,12 +454,13 @@ class Engine:
         """CACHING_ONLY / HYBRID scan routing (CacheLoadPOp.cpp analog):
         swap each live registered view the query reads — catalog table,
         snapshot pin or remote attach — for its SegmentCacheManager
-        projection over the columns THIS query's text references (see
-        ``_view_columns``), re-resolve the same text, restore the views —
-        the predicate-transfer view-swap (``_resolve_with_views``). A
-        first-seen working set admits (miss: the load obeys the session's
-        pushdown confs — off in caching mode, on in hybrid); repeats and
-        subset requests serve from the InMemoryRelation.
+        projection over the columns THIS query's text references (both
+        facts from ``_view_columns``), re-resolve the same text, restore
+        the views (``_resolve_with_views``). A first-seen working set
+        admits (miss: the load obeys the session's pushdown confs — off in
+        caching mode, on in hybrid); repeats and subset requests serve
+        from the InMemoryRelation. A call after ``clear_segment_cache``
+        gets a new manager, as ``set_mode`` makes one.
 
         Remote views (attach_arrow_s3, attach_snapshot of an S3Root)
         route through the SAME cache — the reference's hybrid economics
@@ -479,12 +468,10 @@ class Engine:
         PrePToS3PTransformer.cpp:309-461) apply to actual remote data,
         which is where a segment cache pays for itself at 100 TB: a
         cached segment turns repeat object-store GET + decode into an
-        in-memory columnar read. Admission is sized by the attach's
-        recorded byte total prorated to the working set (a mapInArrow
-        plan's own stats see only the task list); a legacy attach with
-        UNKNOWN bytes is served uncached rather than admitted blind —
-        an unsized admission could pin a corpus-scale segment. Local
-        views are sized by their plan stats.
+        in-memory columnar read. Admission is sized by ``_View.size``; a
+        legacy remote attach of UNKNOWN bytes is served uncached rather
+        than admitted blind — an unsized admission could pin a
+        corpus-scale segment.
 
         Routing memo: a repeat of the same (text, args, mode) skips the
         walk, the projections and the view-swap re-resolution. The caller
@@ -500,16 +487,19 @@ class Engine:
         failed check touches no counter and routes in full, which
         re-records. Only a full routing whose every request landed in the
         cache is recorded (never a routing that routed nothing); the memo
-        is bounded (``_ROUTE_MEMO_SIZE``, least recently used out), held
-        under ``_RESOLVE_LOCK``, and dropped on every attach and cache
-        rebuild."""
-        cache = self._segment_cache
-        assert cache is not None
+        is bounded (``_ROUTE_MEMO_SIZE``, least recently used out) and
+        held under ``_RESOLVE_LOCK``. It is never flushed: an attach, a
+        re-pin or a cache rebuild fails check (2) for exactly the routings
+        that read a replaced name (``_register`` releases its segments)
+        or used the old manager, and leaves the others valid."""
         key = (query, repr(args), self._mode)
         # One lock region for check, replay and full routing: a concurrent
         # routing must not admit or evict between a memo's validation and
         # its replay, nor between a full routing's requests and its record.
         with _RESOLVE_LOCK:
+            if self._segment_cache is None:
+                self.set_mode(self._mode)
+            cache = self._segment_cache
             memo = self._route_memo.get(key)
             if (memo is not None
                     and all(cache.serving(t, cols) is e
@@ -541,21 +531,22 @@ class Engine:
         cache = self._segment_cache
         routed: dict[str, DataFrame] = {}
         requests: list[tuple] = []
-        for name, cols in self._view_columns(df).items():
-            view = self._views[name]
+        for name, (view, cols) in self._view_columns(df).items():
             # Project in the view's DECLARED column order (cache identity
             # is canonicalized inside project(), which sorts its key): a
             # sorted projection would make SELECT * return alphabetized
             # columns in caching/hybrid modes — the mode axis must never
             # change a result, including schema order.
             want = [c for c in view.df.columns if c in cols]
-            hint = None
-            if view.files is not None:
-                if not view.nbytes:  # unsized or empty remote attach
-                    continue
-                hint = max(1, view.nbytes * len(want) // len(view.df.columns))
+            if not want:
+                continue
             table = f"{name}@{view.origin}"
-            routed[name] = cache.project(view.df, table, want, size_hint=hint)
+            # a miss is admitted at the view's size; an unknown size (a
+            # legacy remote attach) is served uncached, not admitted blind
+            size = None if cache.serving(table, want) else view.size(want)
+            if size == float("inf"):
+                continue
+            routed[name] = cache.project(view.df, table, want, size_hint=size)
             requests.append((table, want, cache.serving(table, want)))
         if not routed:
             return df, None
@@ -610,7 +601,6 @@ class Engine:
         if isinstance(root, S3Root):
             view = view._replace(files=[store.path(f) for f in m["files"]],
                                  conf=root.conf, nbytes=m.get("bytes"))
-        self._forget_routes()
         df.createOrReplaceTempView(name)
         self._register(name, view)
         return df
@@ -686,7 +676,6 @@ class Engine:
                     f"resolving those names would silently repoint at the "
                     f"remote store; pass replace=True to do this "
                     f"deliberately (no view was touched)")
-        self._forget_routes()
         out: dict[str, DataFrame] = {}
         for name, files in sorted(groups.items()):
             df = _read_parquet_files(self.spark, sorted(files), conf)
@@ -816,22 +805,6 @@ class Engine:
             udf = _udf(fn, return_type)
         self.spark.udf.register(name, udf)
         return udf
-
-    def analyze_tables(self) -> None:
-        """Collect table/column stats so Catalyst CBO can reorder joins —
-        the role of the reference's stats.json + Calcite row-count metadata
-        (fpdb-calcite/.../metadata/FPDBRelMdRowCount.java).
-
-        Only applies when tables are persisted in a real metastore; temp
-        views cannot be ANALYZEd, so this is best-effort (AQE provides
-        runtime stats regardless).
-        """
-        assert self.catalog is not None
-        for name in self.catalog.tables:
-            try:
-                self.spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS")
-            except Exception:
-                pass
 
     def explain(self, query_or_df, mode: str = "formatted") -> str:
         """Physical-plan text for a SQL string or DataFrame — the

@@ -48,8 +48,8 @@ class _Entry:
 
 
 def _plan_size_bytes(df: DataFrame) -> int:
-    """Optimizer-estimated size of the projection (catalog/plan stats —
-    the stats.json role in the reference)."""
+    """Optimizer-estimated size of a plan — free (no job), from parquet
+    footers / plan stats; the stats.json role in the reference."""
     return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 

@@ -40,6 +40,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pysparkdb.plans.cache import _plan_size_bytes
+
 
 @dataclass(frozen=True)
 class JoinEdge:
@@ -63,12 +65,6 @@ def _semi_reduce(
     if broadcast_keys:
         keys = F.broadcast(keys)
     return target.join(keys, on=list(target_keys), how="left_semi")
-
-
-def _plan_bytes(df: DataFrame) -> int:
-    """Optimizer-estimated size — free (no job), from parquet footers /
-    plan stats; the stats.json role in the reference."""
-    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
 def predicate_transfer(
@@ -115,7 +111,7 @@ def predicate_transfer(
     """
     if sizes is None:
         edge_tables = {e.left for e in edges} | {e.right for e in edges}
-        sizes = {name: _plan_bytes(tables[name]) for name in edge_tables}
+        sizes = {name: _plan_size_bytes(tables[name]) for name in edge_tables}
 
     reduced = dict(tables)
 
@@ -247,11 +243,11 @@ def extract_join_edges(df: DataFrame, tables: dict[str, DataFrame]) -> list[Join
     plan = df._jdf.queryExecution().analyzed()
 
     # Leaf relations are identified by their column-name signature; two
-    # attached tables with IDENTICAL schemas would collide (the dict keeps
+    # of ``tables`` with IDENTICAL schemas would collide (the dict keeps
     # one, possibly attributing an edge to the wrong table and reducing by
-    # keys from a table not even in the query). Ambiguous signatures are
-    # therefore excluded outright — their joins simply don't transfer
-    # (under-reduction is always safe).
+    # keys from the other). Ambiguous signatures are therefore excluded
+    # outright — their joins simply don't transfer (under-reduction is
+    # always safe). Engine passes only the views the query reads.
     sigs: dict[frozenset, list[str]] = {}
     for name, t in tables.items():
         sigs.setdefault(frozenset(t.schema.fieldNames()), []).append(name)

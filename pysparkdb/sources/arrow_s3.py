@@ -42,6 +42,7 @@ the DNF min/max form stay in the Spark plan above the scan.
 from __future__ import annotations
 
 import json
+import os
 from collections.abc import Iterator
 from dataclasses import dataclass
 
@@ -54,13 +55,16 @@ Conjunct = tuple[str, str, object]
 
 _OPS = ("==", "!=", "<", "<=", ">", ">=")
 
+# (process id, S3Conf) -> S3FileSystem; see S3Conf.filesystem
+_FILESYSTEMS: dict = {}
+
 
 @dataclass(frozen=True)
 class S3Conf:
     """Connection settings for pyarrow's S3FileSystem — the aws-config.conf
     analog for the jar-less path (endpoint/credentials/region, matching
     objectstore.s3a_confs' surface). A plain frozen dataclass of strings so
-    it pickles into executor task closures; each task builds its own
+    it pickles into executor task closures; each process builds its own
     filesystem handle (S3FileSystem objects hold native connections and
     must not be shared across process boundaries)."""
 
@@ -71,19 +75,30 @@ class S3Conf:
     anonymous: bool = False
 
     def filesystem(self):
-        from pyarrow.fs import S3FileSystem
+        """This process's S3FileSystem for this conf, built on first use.
+        A construction costs seconds where the AWS SDK probes instance
+        metadata for a region; the handle is thread-safe, so the driver
+        and each Python worker build one per conf and reuse it (threads
+        racing the first call may each build one; all get the first
+        stored). Keyed by process id as well, so a forked worker never
+        inherits its parent's native connections."""
+        key = (os.getpid(), self)
+        fs = _FILESYSTEMS.get(key)
+        if fs is None:
+            from pyarrow.fs import S3FileSystem
 
-        kwargs: dict = {}
-        if self.endpoint is not None:
-            kwargs["endpoint_override"] = self.endpoint
-        if self.region is not None:
-            kwargs["region"] = self.region
-        if self.anonymous:
-            kwargs["anonymous"] = True
-        elif self.access_key is not None:
-            kwargs["access_key"] = self.access_key
-            kwargs["secret_key"] = self.secret_key
-        return S3FileSystem(**kwargs)
+            kwargs: dict = {}
+            if self.endpoint is not None:
+                kwargs["endpoint_override"] = self.endpoint
+            if self.region is not None:
+                kwargs["region"] = self.region
+            if self.anonymous:
+                kwargs["anonymous"] = True
+            elif self.access_key is not None:
+                kwargs["access_key"] = self.access_key
+                kwargs["secret_key"] = self.secret_key
+            fs = _FILESYSTEMS.setdefault(key, S3FileSystem(**kwargs))
+        return fs
 
 
 def _strip_scheme(uri: str) -> str:

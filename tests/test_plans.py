@@ -822,7 +822,8 @@ class TestModeAxis:
         pushdown rows, run as many Spark jobs as the routed run and count
         the same cache hits, each through a fresh QueryExecution (the memo
         is not a result cache). The memo survives a mode interlude without
-        cache parameters and is dropped by a cache rebuild."""
+        cache parameters; after a cache rebuild the next call routes in
+        full."""
         from pysparkdb.engine import Engine
 
         eng = Engine(spark).attach(sf_dir, validate=False)
@@ -832,7 +833,7 @@ class TestModeAxis:
             assert want and want[0].revenue is not None
             eng.set_mode("hybrid")
             eng.sql(self.SSB_Q, args=self.SSB_ARGS).collect()  # admits
-            eng._forget_routes()
+            eng._route_memo.clear()
             full = self._spy_full_routing(eng, monkeypatch)
             runs = [self._run_counted(spark, eng, self.SSB_Q, self.SSB_ARGS)
                     for _ in range(3)]
@@ -851,7 +852,9 @@ class TestModeAxis:
                 spark, eng, self.SSB_Q, self.SSB_ARGS)[1] == want
             assert len(full) == 1, "a mode interlude dropped the memo"
             eng.set_mode("hybrid", cache_policy="lru")
-            assert not eng._route_memo
+            assert self._run_counted(
+                spark, eng, self.SSB_Q, self.SSB_ARGS)[1] == want
+            assert len(full) == 2, "a cache rebuild kept the old routing"
         finally:
             eng.set_mode("pushdown")
             eng.clear_segment_cache()
@@ -943,6 +946,112 @@ class TestModeAxis:
         finally:
             for v in ("memo_pin", "memo_keys"):
                 spark.catalog.dropTempView(v)
+            eng.set_mode("pushdown")
+            eng.clear_segment_cache()
+
+    def test_routing_memo_survives_a_repin_of_another_name(
+            self, spark, sf_dir, tmp_path, monkeypatch):
+        """Re-pinning a view a memoized routing does not read leaves that
+        routing in use; re-pinning the view it reads makes the next call
+        route in full and return the new version's rows."""
+        from pyspark.sql import functions as F
+
+        from pysparkdb.engine import Engine
+        from pysparkdb.sources.versioned import snapshot_append
+
+        eng = Engine(spark).attach(sf_dir, validate=False)
+        root = str(tmp_path / "pin")
+        nation = eng.table("nation")
+        snapshot_append(nation.filter(F.col("n_nationkey") < 10), root)
+        snapshot_append(nation.filter(F.col("n_nationkey") >= 10), root)
+        q = "SELECT COUNT(*) AS n, SUM(n_nationkey) AS s FROM surv_pin"
+
+        def pushdown_rows():
+            try:
+                return eng.sql(q, mode="pushdown").collect()
+            finally:
+                eng.set_mode("hybrid")
+
+        try:
+            eng.attach_snapshot("surv_pin", root, version=1)
+            eng.attach_snapshot("surv_other", root, version=1)
+            eng.set_mode("hybrid")
+            full = self._spy_full_routing(eng, monkeypatch)
+            self._run_counted(spark, eng, q)
+            assert len(full) == 1
+            eng.attach_snapshot("surv_other", root, version=2, replace=True)
+            want = pushdown_rows()
+            assert self._run_counted(spark, eng, q)[1] == want
+            assert len(full) == 1, "a re-pin of another name dropped the memo"
+            eng.attach_snapshot("surv_pin", root, version=2, replace=True)
+            want = pushdown_rows()
+            assert want[0].n == 25
+            assert self._run_counted(spark, eng, q)[1] == want
+            assert len(full) == 2, "a re-pin of the read name kept its routing"
+        finally:
+            for v in ("surv_pin", "surv_other"):
+                spark.catalog.dropTempView(v)
+            eng.set_mode("pushdown")
+            eng.clear_segment_cache()
+
+    def test_routed_call_after_clear_segment_cache(self, spark, sf_dir):
+        """clear_segment_cache() in hybrid mode leaves the mode in force;
+        the next routed call gets a new cache and returns the pushdown
+        rows."""
+        from pysparkdb.engine import Engine
+
+        eng = Engine(spark).attach(sf_dir, validate=False)
+        try:
+            want = eng.sql(self.SSB_Q, args=self.SSB_ARGS,
+                           mode="pushdown").collect()
+            eng.sql(self.SSB_Q, args=self.SSB_ARGS, mode="hybrid").collect()
+            eng.clear_segment_cache()
+            got = eng.sql(self.SSB_Q, args=self.SSB_ARGS).collect()
+            assert want and got == want
+            assert eng._segment_cache.entries, "the new cache admitted"
+        finally:
+            eng.set_mode("pushdown")
+            eng.clear_segment_cache()
+
+    def test_catalog_view_replaced_by_other_means(self, spark, sf_dir):
+        """A catalog view re-registered over a filtered read is no longer
+        the registered plan: a hybrid query returns the replacement's
+        rows and admits no segment of the name, predicate transfer on a
+        join reading it returns the replacement's rows too, and neither
+        restores the registered plan over the replacement."""
+        from pysparkdb.engine import Engine
+        from pysparkdb.plans.pushdown import explain_str
+
+        eng = Engine(spark).attach(sf_dir, validate=False)
+        repl = spark.read.parquet(eng.catalog.paths["nation"]) \
+            .filter("n_nationkey < 5")
+        repl.createOrReplaceTempView("nation")
+        q = ("SELECT n_regionkey, COUNT(*) AS n FROM nation "
+             "GROUP BY n_regionkey ORDER BY n_regionkey")
+        join_q = """
+            SELECT n_name, CAST(COUNT(*) AS BIGINT) AS n
+            FROM lineitem, orders, customer, nation
+            WHERE l_orderkey = o_orderkey AND o_custkey = c_custkey
+              AND c_nationkey = n_nationkey AND o_orderstatus = 'F'
+            GROUP BY n_name ORDER BY n_name
+        """
+        try:
+            want = eng.sql(q).collect()
+            assert sum(r.n for r in want) == 5
+            assert eng.sql(q, mode="hybrid").collect() == want
+            assert not [t for t, _ in eng._segment_cache.entries
+                        if t.startswith("nation@")]
+            assert spark.table("nation").sameSemantics(repl)
+
+            eng.set_mode("pushdown")
+            want = eng.sql(join_q).collect()
+            assert len(want) == 5
+            got = eng.sql(join_q, predicate_transfer=True)
+            assert "LeftSemi" in explain_str(got, "simple")
+            assert got.collect() == want
+            assert spark.table("nation").sameSemantics(repl)
+        finally:
+            eng.catalog.tables["nation"].createOrReplaceTempView("nation")
             eng.set_mode("pushdown")
             eng.clear_segment_cache()
 

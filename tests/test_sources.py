@@ -1796,6 +1796,19 @@ class TestArrowObjectStore:
         yield conf
         server.stop()
 
+    def test_one_filesystem_per_conf_per_process(self, moto_s3):
+        """Equal confs share this process's S3FileSystem (a construction
+        costs seconds where the AWS SDK probes for a region); another
+        conf gets its own."""
+        import dataclasses
+
+        from pysparkdb.sources.arrow_s3 import S3Conf
+
+        fs = moto_s3.filesystem()
+        assert S3Conf(**dataclasses.asdict(moto_s3)).filesystem() is fs
+        other = dataclasses.replace(moto_s3, anonymous=True)
+        assert other.filesystem() is not fs
+
     def test_live_roundtrip_distributed(self, spark, sf_dir, moto_s3):
         """Write from 3 executor partitions (3 single-PUT objects), ONE
         list RPC discovers them, read back through mapInArrow GETs —
