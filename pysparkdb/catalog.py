@@ -124,7 +124,7 @@ class Catalog:
     data_dir: str
     tables: dict[str, DataFrame] = field(default_factory=dict)
     # registered file path per table (the file or directory its view
-    # reads); Engine's cache routing keys segments by view name instead
+    # reads)
     paths: dict[str, str] = field(default_factory=dict)
 
     def register_all(self, validate: bool = True) -> "Catalog":
